@@ -1168,9 +1168,9 @@ object Queries {
   }
 
   /** Exact GEODESIC kNN (k=5, Vincenty meters) via radius rounds with the
-    * completeness proof + brute-force fallback — the geodesic counterpart
-    * of q25's euclidean kNN. Oracle: full cross product through the
-    * unrolled Vincenty, ranked by (meters, id). */
+    * completeness proof + a world-radius final round — the geodesic
+    * counterpart of q25's euclidean kNN. Oracle: full cross product
+    * through the unrolled Vincenty, ranked by (meters, id). */
   def q46KnnGeodesic(spark: SparkSession, dir: String): DataFrame = {
     val p = pts(spark, dir)
     val qs = p.filter(col("id") % 211 === 0 &&
@@ -1181,8 +1181,8 @@ object Queries {
       .orderBy("qid", "rank")
   }
 
-  /** Exact kNN (k=5, squared-euclidean-degrees) via grid-cell ring
-    * candidates + guaranteed-complete check + brute-force fallback. */
+  /** Exact kNN (k=5, squared-euclidean-degrees) via the same radius
+    * rounds over the planar cell grid + a world-degree final round. */
   def q25Knn(spark: SparkSession, dir: String): DataFrame = {
     val p = pts(spark, dir)
     val qs = p.filter(col("id") % 101 === 0)

@@ -9,9 +9,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * leaf node calling `Geohash.fromIndices` (the kernel) instead of the
   * former ~40·len-node composed-builtin tree (5 shifts/masks/ors + substr
   * per char, concat over len chars). The behavior on the query domain is
-  * identical — the composed tree was the MIRROR of this very kernel,
-  * differentially pinned in SpatialJoinSpec (which now pins the codegen
-  * call path against the direct kernel call instead) — but the plan the
+  * identical — the composed tree was the MIRROR of this very kernel; the
+  * SpatialJoinSpec differential now checks both call paths against
+  * `Geohash.encode` at cell centres — but the plan the
   * analyzer/optimizer walk shrinks from hundreds of expression nodes to
   * one, which matters because Catalyst planning runs inside the timed
   * region of every bench rep (measured 0.15–0.21 s/rep on q02–q05 with

@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.geom.Geo
-import org.locationtech.jts.geom.{Geometry, Polygon}
+import org.locationtech.jts.geom.{Envelope, Geometry, Polygon}
 import scala.collection.mutable.ArrayBuffer
 
 /** Geohash kernel — pure functions, no Spark deps.
@@ -137,11 +137,15 @@ object Geohash {
     // JTS PreparedGeometry gives fast repeated intersects tests against the
     // many candidate cells the DFS probes.
     val prep = org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(geom)
+    // a cell whose bbox misses the geometry's envelope cannot intersect it:
+    // test that before building the cell polygon (a level-3 point: 4, not 97)
+    val env = geom.getEnvelopeInternal
     while (stack.nonEmpty) {
       val gh = stack.head
       stack = stack.tail
-      val poly = bboxPolygon(gh)
-      if (prep.intersects(poly)) {
+      val (x0, y0, x1, y1) = decodeBbox(gh)
+      if (env.intersects(new Envelope(x0, x1, y0, y1)) &&
+          prep.intersects(Geo.boxPolyBL(x0, y0, x1, y1))) {
         if (gh.length < level) {
           // reference pushes children 0..z onto a Vec and pops from the end
           // (LIFO), so 'z' is expanded first; prepending 0..z in order onto

@@ -2,9 +2,10 @@ package graft.join
 
 import graft.geom.Geo
 import graft.index.Geohash
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 
 /** Distributed spatial join + kNN — the engine's scale path.
   *
@@ -12,9 +13,9 @@ import org.apache.spark.sql.expressions.Window
   * (`src/geoq/commands/filter.rs:6-29`); at 100 TB the query side may be a
   * full table, so the engine re-expresses the same keep/drop semantics as a
   * cell-keyed equi-join: explode both sides to covering cells, hash-join on
-  * the cell key, dedupe candidates, then refine with the exact JTS
-  * predicate. Candidate generation is a pure superset step — cell-assignment
-  * float edges can NOT change results, only costs.
+  * the cell key, keep each candidate pair in one shared cell, then refine
+  * with the exact JTS predicate. Candidate generation is a pure superset
+  * step — cell-assignment float edges can NOT change results, only costs.
   *
   * kNN (planar and geodesic) follows the radius-round pattern: gather all
   * points strictly within the current radius through the cell-keyed join,
@@ -22,7 +23,8 @@ import org.apache.spark.sql.expressions.Window
   * point is provably farther than the kth candidate), escalate the radius
   * for the rest, and finish stragglers with a world-radius round through
   * the SAME cell path — exact at every schedule, and no full-scan
-  * crossJoin code path anywhere in the join family.
+  * crossJoin code path anywhere in the join family. Both metrics share
+  * one round loop that materializes each round once.
   */
 object SpatialJoin {
 
@@ -427,72 +429,78 @@ object SpatialJoin {
   /** Exact GEODESIC kNN: for each query (qid, qlon, qlat), the k nearest
     * points by Vincenty distance, ties by id — (qid, rank, neighbor_id).
     *
-    * Radius-round pattern (the geodesic analog of [[knn]]'s ring proof):
-    * round r gathers all points strictly within the current radius (the
-    * cap-box candidates are a PROVEN superset of the radius disk), and a
-    * query is complete once it has ≥ k of them — every excluded point is
-    * ≥ radius away, strictly beyond the kth candidate, so the local top-k
-    * is the global top-k. Incomplete queries (sparse neighborhoods)
-    * escalate the radius ×4 for `rounds` rounds; stragglers finish with a
-    * WORLD-radius round through the same cell-keyed path (candidates are
-    * every point — complete by construction; no crossJoin code path
-    * remains in the join family). Exact at every radius schedule; the
-    * schedule only moves cost. The candidate grid tracks the CURRENT
-    * round's radius by default ([[bitsForRadius]]) — early small-radius
-    * rounds use a fine grid, escalated rounds a coarser one — so the
-    * per-round candidate set stays proportional to the cap area. */
+    * Radius rounds ([[knnRounds]]): round r gathers all points strictly
+    * within the current radius (the cap-box candidates are a PROVEN
+    * superset of the radius disk), and a query is complete once it has ≥ k
+    * of them — every excluded point is ≥ radius away, strictly beyond the
+    * kth candidate, so the local top-k is the global top-k. Incomplete
+    * queries (sparse neighborhoods) escalate the radius ×4 for `rounds`
+    * rounds; stragglers finish with a WORLD-radius round through the same
+    * cell-keyed path (candidates are every point — complete by
+    * construction; no crossJoin code path remains in the join family).
+    * Exact at every radius schedule; the schedule only moves cost. The
+    * candidate grid tracks the CURRENT round's radius by default
+    * ([[bitsForRadius]]) — early small-radius rounds use a fine grid,
+    * escalated rounds a coarser one — so the per-round candidate set stays
+    * proportional to the cap area. */
   def knnGeodesic(points: DataFrame, queries: DataFrame, k: Int,
                   initMeters: Double = AUTO_RADIUS, rounds: Int = 3,
-                  bits: Int = AUTO_BITS): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("qid").orderBy(col("meters").asc, col("id").asc)
-    def topk(pairs: DataFrame): DataFrame =
-      pairs.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("qid"), col("rank"), col("id").as("neighbor_id"))
+                  bits: Int = AUTO_BITS): DataFrame =
+    knnRounds(queries.select("qid", "qlon", "qlat"), k, "meters",
+      if (initMeters == AUTO_RADIUS) autoInitMeters(points, k) else initMeters, rounds,
+      (qs, radius) => dwithinPairs(points, qs, radius, bits),
+      // world round without the box/radius refines: they exclude nothing
+      // in-domain, and skipping them keeps out-of-domain coordinates (e.g.
+      // [0,360) longitudes — cellCols clamps them, Vincenty is periodic)
+      qs => dwithinCellJoin(points, qs, WORLD_METERS, AUTO_BITS)
+        .withColumn("meters", vinUdf(col("lon"), col("lat"), col("qlon"), col("qlat")))
+        .select(col("id"), col("qid"), col("meters")))
+      .drop("meters")
+
+  /** The radius-round loop of [[knnGeodesic]] and [[knn]]: `queries` is
+    * (key, qlon, qlat), `round(qs, radius)` every (key, id, `dist`) pair
+    * with `dist` < radius, `world(qs)` every pair; returns (key, rank,
+    * neighbor_id, `dist`). A round ranks its candidates by (key; dist, id)
+    * together with one sentinel per open query (null id, +∞ distance),
+    * which survives `rank ≤ k` exactly when its query has fewer than k
+    * candidates — so ONE eager `localCheckpoint` yields both the solved
+    * top-k rows and the next round's queries (the surviving sentinels carry
+    * their coordinates), and one emptiness probe ends the loop. The world
+    * round (AUTO grid whatever the round pin: its clamp keeps a world box
+    * at 2×2 cells) pairs every point with every open query exactly once. */
+  private def knnRounds(queries: DataFrame, k: Int, dist: String,
+                        initRadius: Double, rounds: Int,
+                        round: (DataFrame, Double) => DataFrame,
+                        world: DataFrame => DataFrame): DataFrame = {
+    val Seq(key, qlon, qlat) = queries.columns.toSeq
+    val w = Window.partitionBy(key).orderBy(col(dist).asc, col("id").asc)
+    def ranked(pairs: DataFrame): DataFrame =
+      pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val out = Seq(col(key), col("rank"), col("id").as("neighbor_id"), col(dist))
 
     var remaining = queries
-    var radius =
-      if (initMeters == AUTO_RADIUS) autoInitMeters(points, k) else initMeters
-    var acc: Option[DataFrame] = None
+    var open = true
+    var radius = initRadius
+    var acc = Seq.empty[DataFrame]
     var r = 0
-    while (r < rounds && !remaining.isEmpty) {
-      // one candidate scan per round: persist the pair set (three consumers
-      // below), materialize the small per-round outputs eagerly
-      // (localCheckpoint) so the cache can be dropped before the next round
-      val cand = dwithinPairs(points, remaining, radius, bits).persist()
-      val complete = cand.groupBy("qid").agg(count(lit(1)).as("n"))
-        .filter(col("n") >= k).select("qid")
-      val solved = topk(cand.join(complete, Seq("qid"))).localCheckpoint(true)
-      acc = Some(acc.map(_.unionByName(solved)).getOrElse(solved))
-      remaining = remaining.join(complete, Seq("qid"), "left_anti").localCheckpoint(true)
-      cand.unpersist()
+    while (open && r < rounds) {
+      val cand = round(remaining, radius).select(col(key), col("id"), col(dist))
+      val sentinels = remaining.select(col(key),
+        lit(null).cast(cand.schema("id").dataType).as("id"),
+        lit(Double.PositiveInfinity).as(dist), col(qlon), col(qlat))
+      // n counts the non-sentinel rows among a query's top k (the window
+      // shares the rank window's partitioning, so it adds no exchange)
+      val ck = ranked(cand.unionByName(sentinels, allowMissingColumns = true))
+        .withColumn("n", count(col("id")).over(Window.partitionBy(key)))
+        .localCheckpoint(true)
+      acc :+= ck.filter(col("n") >= k).select(out: _*)
+      remaining = ck.filter(col("id").isNull).select(key, qlon, qlat)
+      open = !remaining.isEmpty
       radius *= 4.0
       r += 1
     }
-    if (!remaining.isEmpty) {
-      // sparse stragglers: one final WORLD-radius round through the SAME
-      // cell-keyed path — each query's cap box spans the globe, so the
-      // cell join pairs every point with every remaining query exactly
-      // once (provably complete; no per-query check needed) and the join
-      // family keeps zero full-scan crossJoin code paths. The box/radius
-      // refines are deliberately SKIPPED here: the world box excludes
-      // nothing in-domain, and skipping it keeps out-of-domain
-      // coordinates (e.g. a [0,360) longitude convention — cellCols
-      // clamps them onto boundary cells, Vincenty's trig is periodic) in
-      // the candidate set, exactly like the brute-force round this
-      // replaces. AUTO grid regardless of the caller's round-grid pin: a
-      // fine pinned grid at world radius would explode each query to
-      // 2^bits×2^bits cells (bitsForRadius clamps low → 2×2 world cells).
-      val world = dwithinCellJoin(points, remaining, WORLD_METERS, AUTO_BITS)
-        .withColumn("meters", vinUdf(col("lon"), col("lat"), col("qlon"), col("qlat")))
-        .select(col("id"), col("qid"), col("meters"))
-      acc = Some(acc.map(_.unionByName(topk(world))).getOrElse(topk(world)))
-    }
-    // typed empty result when the query side is empty (a zero-column
-    // emptyDataFrame would break schema-dependent consumers)
-    acc.getOrElse(queries.limit(0)
-      .select(col("qid"), lit(1).as("rank"), col("qid").as("neighbor_id")))
+    if (open) acc :+= ranked(world(remaining)).select(out: _*)
+    acc.reduce(_ unionByName _)
   }
 
   /** The planar analog of [[bitsForRadius]]: the finest world grid whose
@@ -543,71 +551,34 @@ object SpatialJoin {
     * (id == query_id) excluded. Returns (query_id, rank, neighbor_id,
     * dist2), rank 1..k.
     *
-    * Radius-round pattern (the planar mirror of [[knnGeodesic]] — this
-    * replaced a fixed-grid 3×3-ring design whose phase 2 escalated to a
-    * broadcast crossJoin over ALL points, i.e. a full 100 TB scan whenever
-    * any query's ring missed the completeness proof): round r gathers all
-    * points with distance strictly under the round's degree radius via the
-    * cell-keyed join, and a query holding ≥ k of them is complete — every
-    * excluded point is ≥ radius away, strictly beyond its kth candidate, so
-    * the local top-k is the global top-k. Incomplete queries escalate the
-    * radius ×4; stragglers finish with a WORLD-degree round through the
-    * same cell path (the box covers every cell — complete by construction).
-    * Exact at every radius schedule; the schedule only moves cost. The grid
-    * tracks the current round's radius by default (fine grid for small
-    * rounds, coarse for escalated ones), so candidates stay proportional to
-    * the box area — never the fixed 620 km cells of the old design. */
+    * Radius rounds ([[knnRounds]], the planar mirror of [[knnGeodesic]] —
+    * this replaced a fixed-grid 3×3-ring design whose phase 2 escalated to
+    * a broadcast crossJoin over ALL points, i.e. a full 100 TB scan
+    * whenever any query's ring missed the completeness proof): round r
+    * gathers all points with distance strictly under the round's degree
+    * radius via the cell-keyed join, and a query holding ≥ k of them is
+    * complete — every excluded point is ≥ radius away, strictly beyond its
+    * kth candidate, so the local top-k is the global top-k. Incomplete
+    * queries escalate the radius ×4; stragglers finish with a WORLD-degree
+    * round through the same cell path (the box covers every cell — complete
+    * by construction). Exact at every radius schedule; the schedule only
+    * moves cost. The grid tracks the current round's radius by default
+    * (fine grid for small rounds, coarse for escalated ones), so candidates
+    * stay proportional to the box area — never the fixed 620 km cells of
+    * the old design. */
   def knn(points: DataFrame, queries: DataFrame, k: Int, bits: Int = AUTO_BITS,
           initDeg: Double = AUTO_RADIUS, rounds: Int = 3): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(col("dist2").asc, col("id").asc)
-    def topk(pairs: DataFrame): DataFrame =
-      pairs.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("id").as("neighbor_id"), col("dist2"))
     val d2 =
       (col("qlat") - col("lat")) * (col("qlat") - col("lat")) +
         (col("qlon") - col("lon")) * (col("qlon") - col("lon"))
-
-    var remaining = queries
-    var radius = if (initDeg == AUTO_RADIUS) autoInitDeg(points, k) else initDeg
-    var acc: Option[DataFrame] = None
-    var r = 0
-    while (r < rounds && !remaining.isEmpty) {
-      // one candidate scan per round: persist the pair set (two consumers),
-      // materialize the small per-round outputs eagerly (localCheckpoint)
-      // so the cache can be dropped before the next round
-      val cand = planarCellJoin(points, remaining, radius, bits)
+    def pairs(qs: DataFrame, deg: Double, b: Int): DataFrame =
+      planarCellJoin(points, qs, deg, b)
         .filter(col("id") =!= col("query_id"))
         .withColumn("dist2", d2)
-        .filter(col("dist2") < lit(radius * radius))
-        .persist()
-      val complete = cand.groupBy("query_id").agg(count(lit(1)).as("n"))
-        .filter(col("n") >= k).select("query_id")
-      val solved = topk(cand.join(complete, Seq("query_id"))).localCheckpoint(true)
-      acc = Some(acc.map(_.unionByName(solved)).getOrElse(solved))
-      remaining = remaining.join(complete, Seq("query_id"), "left_anti").localCheckpoint(true)
-      cand.unpersist()
-      radius *= 4.0
-      r += 1
-    }
-    if (!remaining.isEmpty) {
-      // sparse stragglers: one final WORLD-degree round — each query's box
-      // covers every cell, so the cell join pairs every point with every
-      // remaining query exactly once (the point keys to ONE cell and the
-      // box's cell list holds each cell once); no radius filter needed,
-      // nothing is excluded. AUTO grid regardless of the caller's
-      // round-grid pin (a fine pinned grid would explode each query to
-      // 2^bits cells per axis — bitsForDegrees clamps low → 2×2 cells).
-      val world = planarCellJoin(points, remaining, WORLD_DEG, AUTO_BITS)
-        .filter(col("id") =!= col("query_id"))
-        .withColumn("dist2", d2)
-      acc = Some(acc.map(_.unionByName(topk(world))).getOrElse(topk(world)))
-    }
-    // typed empty result when the query side is empty (a zero-column
-    // emptyDataFrame would break schema-dependent consumers)
-    acc.getOrElse(queries.limit(0)
-      .select(col("query_id"), lit(1).as("rank"),
-        col("query_id").as("neighbor_id"), lit(0.0).as("dist2")))
+    knnRounds(queries.select("query_id", "qlon", "qlat"), k, "dist2",
+      if (initDeg == AUTO_RADIUS) autoInitDeg(points, k) else initDeg, rounds,
+      (qs, radius) => pairs(qs, radius, bits).filter(col("dist2") < lit(radius * radius)),
+      qs => pairs(qs, WORLD_DEG, AUTO_BITS))
   }
 
   /** Salted variant of the cell-keyed join for skewed data (north rule:
@@ -641,25 +612,35 @@ object SpatialJoin {
       .select(col("id"), col("rid"))
   }
 
-  /** Entity-level spatial semi-join at scale: keep left features whose
+  /** Entity-level spatial semi-join at scale: keep left rows whose
     * geometry intersects ANY right geometry. Covering-cell equi-join →
-    * dedupe → exact JTS refine → left-semi. Same keep/drop decisions as
+    * exact JTS refine against the prepared right geometry → left-semi on
+    * (id, wkb). A pair sharing several cells is refined once per shared
+    * cell; the semi-join collapses those repeated hits, so no dedup
+    * exchange is needed, and a row is kept on its own geometry even when
+    * another row shares its id. Same keep/drop decisions as
     * GeoOps.filterIntersects (reference `filter intersects` semantics). */
   def filterIntersectsAtScale(left: DataFrame, right: DataFrame,
                               level: Int = 3): DataFrame = {
     // left/right: (id, wkb). Explode both to geohash covering cells.
     val coverUdf = udf((wkb: Array[Byte]) =>
       Geohash.covering(Geo.fromWkb(wkb), level))
-    val lc = left.withColumn("cell", explode(coverUdf(col("wkb"))))
-    val rc = right.select(col("id").as("rid"), col("wkb").as("rwkb"))
-      .withColumn("cell", explode(coverUdf(col("rwkb"))))
-    val hit = udf((a: Array[Byte], b: Array[Byte]) =>
-      Geo.fromWkb(a).intersects(Geo.fromWkb(b)))
-    val pairs = lc.join(rc, Seq("cell"))
-      .select(col("id"), col("rid"), col("wkb"), col("rwkb"))
-      .dropDuplicates("id", "rid")
-      .filter(hit(col("wkb"), col("rwkb")))
-      .select("id").distinct()
-    left.join(pairs, Seq("id"), "left_semi")
+    val lc = left.select(col("id"), col("wkb"), explode(coverUdf(col("wkb"))).as("cell"))
+    val rc = right.select(col("wkb").as("rwkb"), explode(coverUdf(col("wkb"))).as("cell"))
+    val pairs = lc.join(rc, Seq("cell")).select(col("id"), col("wkb"), col("rwkb"))
+    val hits = pairs.mapPartitions { it =>
+      // right geometries parsed and prepared once, keyed by their WKB; the
+      // memo lives only for this partition's iterator and is dropped
+      // wholesale at 4096 entries, so its memory is bounded
+      val prepared = scala.collection.mutable.HashMap.empty[java.nio.ByteBuffer, PreparedGeometry]
+      it.filter { row =>
+        val rwkb = row.getAs[Array[Byte]](2)
+        if (prepared.size >= 4096) prepared.clear()
+        prepared.getOrElseUpdate(java.nio.ByteBuffer.wrap(rwkb),
+          PreparedGeometryFactory.prepare(Geo.fromWkb(rwkb)))
+          .intersects(Geo.fromWkb(row.getAs[Array[Byte]](1)))
+      }.map(row => Row(row.get(0), row.get(1)))
+    }(Encoders.row(left.select("id", "wkb").schema))
+    left.join(hits, Seq("id", "wkb"), "left_semi")
   }
 }

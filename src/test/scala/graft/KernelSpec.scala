@@ -143,6 +143,40 @@ class KernelSpec extends AnyFunSuite {
     assert(Geohash.covering(g, 3) == expected)
   }
 
+  test("gh covering == brute force over every cell at levels 1..3 (edges, corners, poles, holes, empty)") {
+    // level-3 cells are 1.40625° on both axes, level-1 cells 45°
+    val w3 = 360.0 / 256
+    val geoms = Seq(
+      "corner of level-1 cells" -> Geo.point(0.0, 0.0),
+      "level-1 lon edge" -> Geo.point(45.0, 12.3),
+      "corner of level-3 cells" -> Geo.point(5 * w3, 7 * w3),
+      "level-3 lon edge" -> Geo.point(-3 * w3, 33.3),
+      "level-3 lat edge" -> Geo.point(101.7, -11 * w3),
+      "world corner (180, 90)" -> Geo.point(180.0, 90.0),
+      "world corner (-180, -90)" -> Geo.point(-180.0, -90.0),
+      "line" -> Geo.parseWkt("LINESTRING (30 10, 10 30, 40 40)"),
+      "line along a cell edge" -> Geo.parseWkt("LINESTRING (0 -20, 0 20)"),
+      "polygon with a hole" -> Geo.parseWkt(
+        "POLYGON ((0 0, 20 0, 20 20, 0 20, 0 0), (5 5, 15 5, 15 15, 5 15, 5 5))"),
+      "empty" -> Geo.parseWkt("POLYGON EMPTY"))
+    val cells = (1 to 3).scanLeft(Seq("")) { (prev, _) =>
+      prev.flatMap(Geohash.children)
+    }
+    for ((name, g) <- geoms; level <- 1 to 3) {
+      val got = Geohash.covering(g, level)
+      val brute = cells(level).filter(c => Geohash.bboxPolygon(c).intersects(g))
+      assert(got.distinct.size == got.size, s"$name L$level: duplicate cells")
+      assert(got.toSet == brute.toSet, s"$name L$level")
+    }
+    // the fixtures really sit on edges and corners
+    assert(Geohash.covering(Geo.point(5 * w3, 7 * w3), 3).size == 4)
+    assert(Geohash.covering(Geo.point(-3 * w3, 33.3), 3).size == 2)
+    assert(Geohash.covering(Geo.point(180.0, 90.0), 3) == Seq("zzz"))
+    assert(Geohash.covering(Geo.parseWkt("POLYGON EMPTY"), 3).isEmpty)
+    val holed = geoms.toMap.apply("polygon with a hole")
+    assert(!Geohash.covering(holed, 3).contains(Geohash.encode(10.0, 10.0, 3)))
+  }
+
   test("gh roots") {
     assert(Geohash.BASE32.mkString == "0123456789bcdefghjkmnpqrstuvwxyz")
   }

@@ -579,20 +579,37 @@ class SpatialJoinSpec extends AnyFunSuite {
         assert(got(r.getLong(0)) == expect, s"H3CellExpr mismatch id=${r.getLong(0)} res=$res")
       }
     }
-    // GeoCols.ghCol (built-ins only) vs Geohash.fromIndices (kernel)
-    for (len <- Seq(1, 3, 5, 8)) {
-      val lonCells = 1L << graft.index.Geohash.lonBitsFor(len)
-      val latCells = 1L << graft.index.Geohash.latBitsFor(len)
-      val idx = spark.range(2000).select(col("id"),
-        (col("id") * 2654435761L % lonCells).as("li"),
-        (col("id") * 2246822519L % latCells).as("la"))
-      val got = idx.select(col("id"), graft.functions.GeoCols.ghCol(col("li"), col("la"), len).as("gh"))
-        .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-      idx.collect().foreach { r =>
-        val expect = graft.index.Geohash.fromIndices(r.getLong(1), r.getLong(2), len)
-        assert(got(r.getLong(0)) == expect, s"ghCol mismatch id=${r.getLong(0)} len=$len")
+    // GeoCols.ghCol vs Geohash.encode at each cell's centre — an
+    // independent kernel (float bisection, not the index bit-interleave
+    // GeohashExpr calls) — through the codegen'd and the interpreted path
+    def ghColAgrees(codegen: Boolean): Unit = {
+      val confs = Seq("spark.sql.codegen.wholeStage" -> codegen.toString,
+        "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"))
+      val saved = confs.map { case (key, _) => key -> spark.conf.getOption(key) }
+      confs.foreach { case (key, v) => spark.conf.set(key, v) }
+      try for (len <- Seq(1, 3, 5, 8)) {
+        val lonCells = 1L << graft.index.Geohash.lonBitsFor(len)
+        val latCells = 1L << graft.index.Geohash.latBitsFor(len)
+        val idx = spark.range(2000).select(col("id"),
+          (col("id") * 2654435761L % lonCells).as("li"),
+          (col("id") * 2246822519L % latCells).as("la"))
+        val q = idx.select(col("id"), col("li"), col("la"),
+          graft.functions.GeoCols.ghCol(col("li"), col("la"), len).as("gh"))
+        assert(q.queryExecution.executedPlan.toString.contains("*(") == codegen,
+          q.queryExecution.executedPlan.toString)
+        q.collect().foreach { r =>
+          val lon = -180.0 + (r.getLong(1) + 0.5) * 360.0 / lonCells
+          val lat = -90.0 + (r.getLong(2) + 0.5) * 180.0 / latCells
+          assert(r.getString(3) == graft.index.Geohash.encode(lat, lon, len),
+            s"ghCol mismatch id=${r.getLong(0)} len=$len codegen=$codegen")
+        }
+      } finally saved.foreach {
+        case (key, Some(v)) => spark.conf.set(key, v)
+        case (key, None) => spark.conf.unset(key)
       }
     }
+    ghColAgrees(codegen = true)
+    ghColAgrees(codegen = false)
     // the H3 expression really is codegen'd: no BatchEvalPython/UDF marker
     // and the projection stays inside a WholeStageCodegen span
     val plan = df.select(graft.functions.H3CellExpr.h3Cell(col("lat"), col("lon"), 5))
@@ -639,6 +656,50 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(atScale.nonEmpty)
   }
 
+  test("filterIntersectsAtScale == brute-force JTS intersects: multi-cell pairs, twin rights, shared ids, empty right") {
+    import spark.implicits._
+    val g = graft.geom.Geo
+    // left rows: lines and polygons spanning many level-3 cells (1.4°),
+    // points, and id 7 on two rows — one geometry hits, the other misses
+    val leftWkt = Seq(
+      1L -> "LINESTRING (0 0, 9 6, 14 1)",
+      2L -> "POLYGON ((2 2, 7 2, 7 7, 2 7, 2 2))",
+      3L -> "LINESTRING (-20 -20, -15 -18)",
+      4L -> "POINT (4.5 4.5)",
+      5L -> "POINT (30 30)",
+      6L -> "POLYGON ((11 -3, 16 -3, 16 3, 11 3, 11 -3), (12 -2, 15 -2, 15 2, 12 2, 12 -2))",
+      7L -> "POINT (3 3)",
+      7L -> "POINT (-50 -50)",
+      8L -> "LINESTRING (13 -1, 14 1)")
+    // right: overlapping polygons, two identical ones (rids 11 and 12)
+    val rightWkt = Seq(
+      10L -> "POLYGON ((1 1, 8 1, 8 5, 1 5, 1 1))",
+      11L -> "POLYGON ((3 0, 12 0, 12 8, 3 8, 3 0))",
+      12L -> "POLYGON ((3 0, 12 0, 12 8, 3 8, 3 0))",
+      13L -> "POLYGON ((-30 25, -25 25, -25 30, -30 25))",
+      14L -> "POLYGON ((12.5 -1.5, 14.5 -1.5, 14.5 1.5, 12.5 1.5, 12.5 -1.5))")
+    def df(rows: Seq[(Long, String)]) =
+      rows.map { case (id, wkt) => (id, g.toWkb(g.parseWkt(wkt))) }.toDF("id", "wkb")
+    def run(right: Seq[(Long, String)]): Seq[(Long, String)] =
+      SpatialJoin.filterIntersectsAtScale(df(leftWkt), df(right), level = 3)
+        .as[(Long, Array[Byte])].collect()
+        .map { case (id, wkb) => (id, g.toWkt(g.fromWkb(wkb))) }.sorted.toSeq
+    def brute(right: Seq[(Long, String)]): Seq[(Long, String)] = leftWkt.filter { case (_, l) =>
+      right.exists { case (_, r) => g.parseWkt(l).intersects(g.parseWkt(r)) }
+    }.map { case (id, wkt) => (id, g.toWkt(g.parseWkt(wkt))) }.sorted
+
+    val got = run(rightWkt)
+    assert(got == brute(rightWkt))
+    // each kept row appears once although it hits several rights in
+    // several shared cells; the row of id 7 that misses stays dropped
+    assert(got.map(_._1) == Seq(1L, 2L, 4L, 6L, 7L, 8L), got)
+    val cells = (w: String) => graft.index.Geohash.covering(g.parseWkt(w), 3).toSet
+    assert(rightWkt.count { case (_, r) =>
+      (cells(leftWkt.head._2) intersect cells(r)).size >= 2 } >= 3,
+      "fixture lost its multi-cell pairs")
+    assert(run(Nil).isEmpty)
+  }
+
   test("planar knn == brute force through every path (round-1, escalation, world round)") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -680,6 +741,68 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert((1L to 6L).exists(q => atFinal.getOrElse(q, 0L) < 4),
       "all queries resolved before the world round — weaken initDeg to test it")
     bruteDf.unpersist()
+  }
+
+  test("kNN runs one materialization per radius round plus one emptiness probe; empty query side is typed") {
+    import spark.implicits._
+    // a dense cluster at every query: all complete in the opening round
+    val centres = Seq((1L, 10.0, 45.0), (2L, -60.0, -20.0), (3L, 120.0, 30.0))
+    val pts = (for ((q, x, y) <- centres; j <- 0 until 12)
+      yield (q * 100 + j, x + (j % 4) * 0.02, y + (j / 4) * 0.02)).toDF("id", "lon", "lat")
+    val qsG = centres.toDF("qid", "qlon", "qlat")
+    val qsP = qsG.withColumnRenamed("qid", "query_id")
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val sqlListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = executions.add(funcName)
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = executions.add(funcName)
+    }
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
+    }
+    import scala.jdk.CollectionConverters._
+    // (actions, SQL executions that ran jobs) of building one kNN result
+    def actions(f: => org.apache.spark.sql.DataFrame): (Seq[String], Int) = {
+      org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
+      executions.clear(); jobs.clear()
+      spark.listenerManager.register(sqlListener)
+      spark.sparkContext.addSparkListener(jobListener)
+      try {
+        f
+        org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
+        val js = jobs.asScala.toSeq
+        assert(js.forall(_.nonEmpty), "a job ran outside any SQL execution")
+        (executions.asScala.toSeq, js.flatten.distinct.size)
+      } finally {
+        spark.listenerManager.unregister(sqlListener)
+        spark.sparkContext.removeSparkListener(jobListener)
+      }
+    }
+    // radius pinned, so no density count job: one checkpoint, one probe
+    val (geoActs, geoExecs) =
+      actions(SpatialJoin.knnGeodesic(pts, qsG, k = 4, initMeters = 100000.0))
+    assert(geoActs == Seq("localCheckpoint", "isEmpty") && geoExecs == 2, (geoActs, geoExecs))
+    val (plActs, plExecs) = actions(SpatialJoin.knn(pts, qsP, k = 4, initDeg = 1.0))
+    assert(plActs == Seq("localCheckpoint", "isEmpty") && plExecs == 2, (plActs, plExecs))
+    // and the answers are the round-1 ones: each query's own cluster
+    val got = SpatialJoin.knnGeodesic(pts, qsG, k = 4, initMeters = 100000.0)
+      .select("qid", "neighbor_id").as[(Long, Long)].collect()
+    assert(got.length == 12 && got.forall { case (q, n) => n / 100 == q })
+
+    // an empty query side gives a typed empty result on both metrics
+    val noG = SpatialJoin.knnGeodesic(pts, qsG.limit(0), k = 4, initMeters = 100000.0)
+    assert(noG.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("qid" -> "bigint", "rank" -> "int", "neighbor_id" -> "bigint"))
+    assert(noG.collect().isEmpty)
+    val noP = SpatialJoin.knn(pts, qsP.limit(0), k = 4, initDeg = 1.0)
+    assert(noP.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("query_id" -> "bigint", "rank" -> "int", "neighbor_id" -> "bigint", "dist2" -> "double"))
+    assert(noP.collect().isEmpty)
   }
 
   test("planar knn: no CartesianProduct/BroadcastNestedLoopJoin in ANY plan the operator runs") {

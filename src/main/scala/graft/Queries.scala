@@ -13,6 +13,15 @@ import org.apache.spark.sql.functions._
   * bit-for-bit (see OracleSql.PTS_CTE). Geometry/tiling decisions then flow
   * through the engine's real kernels (Geohash/Hilbert/JTS/Vincenty) while
   * the oracle recomputes them in pure SQL.
+  *
+  * Compute-once guard: eleven queries end an expensive kernel segment
+  * with an eager `.localCheckpoint(true)` before their trailing orderBy.
+  * The sort's range partitioner SAMPLES its child to pick bounds, which
+  * would otherwise re-execute every kernel in that segment; with the
+  * guard the kernels run once and the sample and the sort read blocks
+  * (q38 1.67 → 0.41 s; the guarded set was pruned by A/B measurement —
+  * OPTIMIZATION_r08.md "The sort's range-sample re-executes the pre-sort
+  * segment").
   */
 object Queries {
 
@@ -22,10 +31,11 @@ object Queries {
   // (JTS predicates, H3 coverings, WKT/GeoJSON writers: ≥ µs/row) fan
   // the rows out to every core first via `pts`. Consumers whose per-row
   // work is a handful of codegen'd arithmetic ops take `ptsNarrow`: the
-  // fan-out exchange costs ~0.4 s at bench scale (measured, interleaved
-  // A/B in bench.RepartProbe) while their whole serial kernel is < 50 ms
-  // — and at 100 TB that repartition is a full-table shuffle ahead of a
-  // map, pure waste at every scale for cheap kernels.
+  // fan-out exchange costs ~0.4 s at bench scale (interleaved A/B,
+  // OPTIMIZATION_r08.md "the scan fan-out audit") while their whole
+  // serial kernel is < 50 ms — and at 100 TB that repartition is a
+  // full-table shuffle ahead of a map, pure waste at every scale for
+  // cheap kernels.
   def pts(spark: SparkSession, dir: String): DataFrame =
     ptsFrom(tbl(spark, dir, "events.parquet")
       .repartition(spark.sparkContext.defaultParallelism))
@@ -39,15 +49,23 @@ object Queries {
   /** Resolved-relation memo, one per (session, dir, file): a bare
     * `spark.read.parquet(path)` re-resolves the datasource EVERY call —
     * file listing + parquet footer schema read — a measured ~0.11 s of
-    * driver time per call at bench scale (PlanFloor probes; it is the
-    * dominant share of the cheap queries' planning floor, re-paid on
-    * every rep because Bench times construction). The memo holds only the
-    * RESOLVED RELATION (schema + file index) — no rows, no results: every
-    * execution still scans the parquet files. Session-scoped like
-    * sigCache/embCache (the bench's documented steady-state contract),
-    * keyed by dir so different SFs never mix. At production scale this is
-    * the same reason catalogs/table formats hold resolved metadata —
-    * re-listing a large table per query is pure driver cost (guide §6). */
+    * driver time per call at bench scale (OPTIMIZATION_r08.md "The
+    * per-rep planning floor"; it is the dominant share of the cheap
+    * queries' planning floor, re-paid on every rep because Bench times
+    * construction). The memo holds only the RESOLVED RELATION (schema +
+    * file index) — no rows, no results: every execution still scans the
+    * parquet files. Session-scoped like sigCache/embCache (the bench's
+    * documented steady-state contract), keyed by dir so different SFs
+    * never mix. At production scale this is the same reason catalogs/
+    * table formats hold resolved metadata — re-listing a large table per
+    * query is pure driver cost (guide §6).
+    *
+    * Staleness contract: a `dir` is IMMUTABLE for the life of every
+    * session that has read it. The file index is listed once, at the
+    * first read; files later added under `dir` are not seen, and files
+    * rewritten or deleted there fail the scan or are read against the
+    * old listing. To read a rewritten directory, use a new session (the
+    * key carries the session UUID) or a new path. */
   private val relCache = new SessionCache[DataFrame](64, _ => ())
   private[graft] def tbl(spark: SparkSession, dir: String, file: String): DataFrame =
     relCache.getOrElseUpdate(
@@ -110,11 +128,12 @@ object Queries {
   def q03GhChildren(spark: SparkSession, dir: String): DataFrame = {
     val suffixes = "0123456789bcdefghjkmnpqrstuvwxyz".map(c => lit(c.toString))
     // sort BEFORE the ×32 explode: the range exchange moves the distinct
-    // parents (n rows), not the children (32n). The output order is
-    // unchanged — children share their parent's prefix and the suffix
-    // array is ascending, and explode/project are order-preserving narrow
-    // ops over the range-partitioned sort — so (gh, child) ascending holds
-    // globally, as the former trailing orderBy("gh", "child") produced.
+    // parents (n rows), not the children (32n). The rows come out in
+    // (gh, child) order in practice — children share their parent's
+    // prefix and the suffix array is ascending — but Spark guarantees no
+    // global order after explode/project, so this is not a contract. The
+    // gate does not need one: the oracle compares rows order-insensitively
+    // (tools/check_oracle.py sorts both sides before comparing).
     ptsNarrow(spark, dir)
       .withColumn("gh", ghCol2(3)(lonIdxCol(3), latIdxCol(3)))
       .select("gh").distinct()
@@ -184,7 +203,7 @@ object Queries {
     val hit = udf((lon: Double, lat: Double) =>
       Vincenty.distanceFixed(lon, lat, DW_LON, DW_LAT) < DW_RADIUS)
     ptsNarrow(spark, dir).filter(hit(col("lon"), col("lat"))).select("id")
-      .localCheckpoint(true) // kernels run once; the trailing sort's range-sample pass would otherwise re-execute them (bench.CkptProbe: q38 1.67 -> 0.41 s)
+      .localCheckpoint(true) // compute-once guard (object doc)
       .orderBy("id")
   }
 
@@ -271,7 +290,7 @@ object Queries {
       (length(regexp_replace(col("text"), "[^A-Za-z]", "")) * 100 >=
         length(col("text")) * 70).as("quality_ok"))
 
-      .localCheckpoint(true) // kernels run once; the trailing sort's range-sample pass would otherwise re-execute them (bench.CkptProbe: q38 1.67 -> 0.41 s)
+      .localCheckpoint(true) // compute-once guard (object doc)
       .orderBy("doc_id")
 
   private val LANG_MARKERS: Seq[(String, Seq[String])] = Seq(
@@ -751,12 +770,14 @@ object Queries {
           .bitwiseAND(lit(255L)).as("bkey"))
     // candidate-count observability (plane-scheme changes move the band
     // keys, hence this count — a silent cost lever the round-5 stride fix
-    // pulled by accident, +130% measured): CollectMetrics rides the
-    // existing pass (no extra job); Bench/QBench print `q50_band_rows`
-    // (pre-dedup banded-join rows, the priced cost) per run, so candidate
-    // growth is measured, not guessed. Observed BELOW the dedup shuffle
-    // deliberately: nodes above it sit in the segment the final orderBy's
-    // range-partitioning SAMPLE pass re-executes, which double-counts.
+    // pulled by accident, 148k → 342k banded rows, recorded in STATUS.md):
+    // CollectMetrics rides the existing pass (no extra job); Bench and
+    // QBench (same session config) print `q50_band_rows` through
+    // bench.Observed (pre-dedup banded-join rows, the priced cost) per
+    // run, so candidate growth is measured, not guessed. Observed BELOW
+    // the dedup shuffle deliberately: nodes above it sit in the segment
+    // the final orderBy's range-partitioning SAMPLE pass re-executes,
+    // which double-counts.
     val cand = bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.vec_id") < col("b.vec_id"))
@@ -1202,7 +1223,8 @@ object Queries {
     * yields defaultParallelism BALANCED contiguous partitions, so the former
     * repartition redistributed an already-balanced input — a by-value no-op
     * that cost a full shuffle stage per materialization (measured ~0.35 s at
-    * bench scale, bench.RepartProbe3; same for the video/audio tables). */
+    * bench scale, OPTIMIZATION_r08.md "Multimodal tables"; same for the
+    * video/audio tables). */
   def imageTable(spark: SparkSession, n: Long): org.apache.spark.sql.Dataset[ImageRow] = {
     import spark.implicits._
     spark.range(n).map(r => Images.generate(r))
@@ -1354,7 +1376,7 @@ object Queries {
       (r.image_id, r.fmt, if (p.isInfinite) 999L else math.floor(p).toLong, psnrOk, capOk)
     }.toDF("image_id", "fmt", "psnr_floor_db", "psnr_ok", "caption_ok")
 
-      .localCheckpoint(true) // kernels run once; the trailing sort's range-sample pass would otherwise re-execute them (bench.CkptProbe: q38 1.67 -> 0.41 s)
+      .localCheckpoint(true) // compute-once guard (object doc)
       .orderBy("image_id")
   }
 
@@ -1376,7 +1398,7 @@ object Queries {
       (r.image_id, psnrOk, capOk)
     }.toDF("image_id", "psnr_ok", "caption_ok")
 
-      .localCheckpoint(true) // kernels run once; the trailing sort's range-sample pass would otherwise re-execute them (bench.CkptProbe: q38 1.67 -> 0.41 s)
+      .localCheckpoint(true) // compute-once guard (object doc)
       .orderBy("image_id")
   }
 
@@ -1425,7 +1447,7 @@ object Queries {
       (v.video_id, v.n_frames.toLong, sampled.size.toLong, ok)
     }.toDF("video_id", "n_frames", "n_sampled", "frames_ok")
 
-      .localCheckpoint(true) // kernels run once; the trailing sort's range-sample pass would otherwise re-execute them (bench.CkptProbe: q38 1.67 -> 0.41 s)
+      .localCheckpoint(true) // compute-once guard (object doc)
       .orderBy("video_id")
   }
 
@@ -1522,7 +1544,7 @@ object Queries {
       (a.audio_id, n, sumAbs, zc, ok)
     }.toDF("audio_id", "n_samples", "sum_abs", "n_zero_cross", "wav_ok")
 
-      .localCheckpoint(true) // kernels run once; the trailing sort's range-sample pass would otherwise re-execute them (bench.CkptProbe: q38 1.67 -> 0.41 s)
+      .localCheckpoint(true) // compute-once guard (object doc)
       .orderBy("audio_id")
   }
 
@@ -1832,7 +1854,7 @@ object Queries {
         col("s._1").as("n_disk"), col("s._2").as("n_mutual"),
         col("s._3").as("n_rt"), col("s._4").as("n_touch"))
 
-      .localCheckpoint(true) // kernels run once; the trailing sort's range-sample pass would otherwise re-execute them (bench.CkptProbe: q38 1.67 -> 0.41 s)
+      .localCheckpoint(true) // compute-once guard (object doc)
       .orderBy("id")
   }
 
@@ -1860,7 +1882,7 @@ object Queries {
         col("c._1").as("n_self_cover"), col("c._2").as("self_exact"),
         col("c._3").as("line_has_a"), col("c._4").as("line_has_b"))
 
-      .localCheckpoint(true) // kernels run once; the trailing sort's range-sample pass would otherwise re-execute them (bench.CkptProbe: q38 1.67 -> 0.41 s)
+      .localCheckpoint(true) // compute-once guard (object doc)
       .orderBy("id")
   }
 
@@ -2060,7 +2082,7 @@ object Queries {
         col("s._3").as("leaves_ok"), col("s._4").as("parent_ok"),
         col("s._5").as("range_ok"), col("s._6").as("nest_ok"))
 
-      .localCheckpoint(true) // kernels run once; the trailing sort's range-sample pass would otherwise re-execute them (bench.CkptProbe: q38 1.67 -> 0.41 s)
+      .localCheckpoint(true) // compute-once guard (object doc)
       .orderBy("id")
   }
 
@@ -2079,7 +2101,7 @@ object Queries {
       .select(col("id"), col("c._1").as("n_children"), col("c._2").as("n_compact"),
         col("c._3").as("compact_str"))
 
-      .localCheckpoint(true) // kernels run once; the trailing sort's range-sample pass would otherwise re-execute them (bench.CkptProbe: q38 1.67 -> 0.41 s)
+      .localCheckpoint(true) // compute-once guard (object doc)
       .orderBy("id")
   }
 
@@ -2209,7 +2231,7 @@ object Queries {
       size(regexp_extract_all(t,
         lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]+"), lit(0))).as("n_bpe_tokens"))
 
-      .localCheckpoint(true) // kernels run once; the trailing sort's range-sample pass would otherwise re-execute them (bench.CkptProbe: q38 1.67 -> 0.41 s)
+      .localCheckpoint(true) // compute-once guard (object doc)
       .orderBy("doc_id")
   }
 

@@ -1,6 +1,7 @@
 package graft.bench
 import org.apache.spark.sql.SparkSession
-/** Scratch: repeated single-query timing (args: queryName [reps]). */
+/** Repeated single-query timing under graft.Bench's session config (args:
+  * queryName [reps]), so per-query times come from the plan Bench runs. */
 object QBench {
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -10,7 +11,11 @@ object QBench {
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.files.maxPartitionBytes", s"${4 * 1024 * 1024}")
+      .config("spark.sql.files.openCostInBytes", s"${512 * 1024}")
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val observed = Observed.register(spark)
     val fn = graft.SparkEntry.queries(name)

@@ -3,10 +3,11 @@ package graft.bench
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** THE synthetic text corpus every smoke/probe measurement runs on —
-  * one definition, so ScaleSmoke entries and the standalone probes
-  * (HamProbe, Ham128Probe) that BASELINE.md cross-quotes are provably
-  * measuring the same rows. 1000-word vocab with MIX-based selection:
+/** THE synthetic text corpus every ScaleSmoke measurement runs on — one
+  * definition, so the smoke entries and the standalone exact-Hamming runs
+  * on the same corpus (OPTIMIZATION_r08.md §2 and "Banded joins: band
+  * rows via ONE explode", cross-quoted by BASELINE.md) measure the same
+  * rows. 1000-word vocab with MIX-based selection:
   * a linear (id·A + k·B) derivation collapses the corpus to ~1000
   * distinct 3-grams — every doc's grams form one arithmetic progression
   * mod 1000 (measured in round 7: 100% of docs flagged contaminated;

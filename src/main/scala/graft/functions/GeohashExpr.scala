@@ -13,9 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * SpatialJoinSpec differential now checks both call paths against
   * `Geohash.encode` at cell centres — but the plan the
   * analyzer/optimizer walk shrinks from hundreds of expression nodes to
-  * one, which matters because Catalyst planning runs inside the timed
-  * region of every bench rep (measured 0.15–0.21 s/rep on q02–q05 with
-  * the composed tree, bench.PlanTimeProbe). The interpreted path
+  * one (q02's plan dump 4.3 KB → 1.0 KB). Measured planning-neutral: the
+  * per-rep planning floor was the datasource resolution, not the tree
+  * (OPTIMIZATION_r08.md "The per-rep planning floor"). The interpreted path
   * (`nullSafeEval`) calls the same kernel, so codegen-on and codegen-off
   * plans agree by construction (the H3CellExpr pattern).
   *

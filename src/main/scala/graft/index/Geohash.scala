@@ -214,12 +214,6 @@ object Geohash {
     packCell(li, ai, level)
   }
 
-  /** Same cell as `encode(lat, lon, level)`, as a string. */
-  def packedToBase32(cell: Long): String = {
-    val level = packedLevel(cell)
-    fromIndices(packedLonIdx(cell), packedLatIdx(cell), level)
-  }
-
   /** Tile pyramid levels 1..maxLevel as packed ids (no allocation beyond
     * the result array). */
   def packedPyramid(lat: Double, lon: Double, maxLevel: Int): Array[Long] = {

@@ -89,44 +89,33 @@ object SpatialJoin {
   /** Deployment surface for the auto-bits memo shared by the DataFrame API
     * and the Catalyst rewrite (ONE cache semantics for both): `clear()`
     * after an in-place table rewrite forces the next join to re-derive its
-    * grid; `size`/`hitCount`/`missCount` are the observability counters
-    * (also published per lookup to the active session's
-    * `spark.graft.spatialJoin.bitsMemo.{hits,misses}` confs, the
-    * [[SpatialJoin.LAST_BITS_KEY]] pattern). Entries are cleared wholesale
-    * past [[CAP]] — two ints per entry and a bounded agg to recompute, so
-    * wholesale is simpler than LRU bookkeeping. */
+    * grid; `size`/`hitCount`/`missCount` are process-wide observability
+    * counters (read them before and after a call to price its lookups).
+    * Entries are cleared wholesale past [[CAP]] — two ints per entry and a
+    * bounded agg to recompute, so wholesale is simpler than LRU
+    * bookkeeping. */
   object BitsMemo {
     private val m = new java.util.concurrent.ConcurrentHashMap[String, Int]()
     private val hits = new java.util.concurrent.atomic.AtomicLong()
     private val misses = new java.util.concurrent.atomic.AtomicLong()
     private[graft] val CAP = 4096
-    val HITS_KEY = "spark.graft.spatialJoin.bitsMemo.hits"
-    val MISSES_KEY = "spark.graft.spatialJoin.bitsMemo.misses"
     def size: Int = m.size
     def hitCount: Long = hits.get
     def missCount: Long = misses.get
     /** Drop every memoized grid choice (use after rewriting a table in
       * place, so the next join re-runs the stats job on the new data). */
     def clear(): Unit = m.clear()
-    private def publishCounters(): Unit =
-      try org.apache.spark.sql.SparkSession.getActiveSession.foreach { s =>
-        s.conf.set(HITS_KEY, hits.get.toString)
-        s.conf.set(MISSES_KEY, misses.get.toString)
-      } catch { case scala.util.control.NonFatal(_) => () }
     /** Memoize a bits choice (>= 1) by key. */
     private[graft] def getOrCompute(key: String)(f: => Int): Int = {
       val cached = m.get(key) // absent unboxes to 0; real bits are >= 1
-      val b =
-        if (cached != 0) { hits.incrementAndGet(); cached }
-        else {
-          misses.incrementAndGet()
-          val v = f
-          if (m.size >= CAP) m.clear()
-          m.put(key, v)
-          v
-        }
-      publishCounters()
-      b
+      if (cached != 0) { hits.incrementAndGet(); cached }
+      else {
+        misses.incrementAndGet()
+        val v = f
+        if (m.size >= CAP) m.clear()
+        m.put(key, v)
+        v
+      }
     }
   }
 

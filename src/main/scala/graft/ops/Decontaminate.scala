@@ -71,9 +71,10 @@ object Decontaminate {
     * Returns one row per CONTAMINATED doc: (idCol, n_hits) where
     * n_hits = number of distinct eval n-grams the doc contains.
     * `metricName` names the post-bloom candidate-row observe() metric
-    * (the q50 pattern — Bench/QBench print it, so a bloom-fill
-    * regression shows up as a cost number, not a guess); callers running
-    * more than one decontamination per session pass distinct names.
+    * (the q50 pattern — Bench and QBench print it through
+    * bench.Observed, so a bloom-fill regression shows up as a cost
+    * number, not a guess); callers running more than one
+    * decontamination per session pass distinct names.
     * Note: the eval gram set is localCheckpoint'd (read twice: bloom
     * build + exact refine); its blocks live until session end, so a
     * long-lived session auditing MANY eval sets should bound them by

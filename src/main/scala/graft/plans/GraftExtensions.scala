@@ -28,7 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // runs BEFORE RewriteSubquery, so the NOT EXISTS decontamination
     // shape only becomes a LeftAnti join after the rule's batch is over —
     // the planner strategy below runs at physical planning and catches it
-    // (probed: bench/ExtProbe; an AQE runtime-rule injection does NOT)
+    // (GraftExtensionsSpec; an AQE runtime-rule injection does NOT)
     ext.injectPlannerStrategy(_ => HammingJoinStrategy)
     ext.injectFunction(GraftExtensions.h3CellFunction)
     ext.injectFunction(GraftExtensions.simhash64Function)

@@ -63,14 +63,7 @@ object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       case Literal(v: Long, LongType) => Some(v.toInt)
       case _ => None
     }
-    def sides(x: Expression, y: Expression): Option[(Expression, Expression)] =
-      if (x.references.nonEmpty && x.references.subsetOf(left.outputSet) &&
-          y.references.nonEmpty && y.references.subsetOf(right.outputSet))
-        Some((x, y))
-      else if (x.references.nonEmpty && x.references.subsetOf(right.outputSet) &&
-          y.references.nonEmpty && y.references.subsetOf(left.outputSet))
-        Some((y, x))
-      else None
+    def sides(x: Expression, y: Expression) = JoinRuleSupport.crossSide(x, y, left, right)
     conjuncts.iterator.flatMap { c =>
       (c match {
         case LessThanOrEqual(BitwiseCount(BitwiseXor(x, y)), kl) =>
@@ -129,7 +122,8 @@ object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * joins born AFTER the operator-optimization batch — RewriteSubquery
     * turns `NOT EXISTS` into a LeftAnti join only once that batch is
     * over, so a rule-only registration would silently nested-loop the
-    * advertised SQL decontamination shape; probed in bench/ExtProbe).
+    * advertised SQL decontamination shape; GraftExtensionsSpec pins the
+    * `spark.sql.extensions` path end-to-end).
     * Returns `j` unchanged when the pattern doesn't match. */
   def rewriteJoin(j: Join): LogicalPlan = j match {
     case Join(left, right, jt @ (Inner | LeftSemi | LeftAnti), Some(cond), hint)
@@ -137,15 +131,7 @@ object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
           !left.output.exists(_.name.startsWith(HB)) &&
           !right.output.exists(_.name.startsWith(HB)) =>
       val conjuncts = splitConjunctivePredicates(cond)
-      val hasEquiKey = conjuncts.exists {
-        case EqualTo(a, b) =>
-          (a.references.nonEmpty && a.references.subsetOf(left.outputSet) &&
-            b.references.nonEmpty && b.references.subsetOf(right.outputSet)) ||
-          (a.references.nonEmpty && a.references.subsetOf(right.outputSet) &&
-            b.references.nonEmpty && b.references.subsetOf(left.outputSet))
-        case _ => false
-      }
-      if (hasEquiKey) j
+      if (JoinRuleSupport.hasCrossSideEquiKey(conjuncts, left, right)) j
       else hammingBound(conjuncts, left, right) match {
         case None => j
         case Some((ls0, rs0, k, hamConj)) =>

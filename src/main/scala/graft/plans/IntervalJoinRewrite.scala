@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import JoinRuleSupport.Bounds
 
 /** Catalyst optimizer rule: rewrite the NATURAL temporal range join
   *
@@ -30,9 +30,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * cast in the session zone, identically on both sides).
   *
   * The bucket width is stats-derived at optimize time (median/max window
-  * length through the memoized [[graft.join.SpatialJoin.BitsMemo]], the
-  * same machinery, reentrancy guard, and `statsMaxBytes` size guard as
-  * the spatial rule; `spark.graft.intervalJoin.widthPow` pins it) and
+  * length through [[JoinRuleSupport.statsDerived]], the same memo,
+  * reentrancy guard, and `statsMaxBytes` size guard as the spatial rule;
+  * `spark.graft.intervalJoin.widthPow` pins it) and
   * published to [[graft.join.IntervalJoin.LAST_POW_KEY]]. The AUTO width
   * self-bounds the per-window explode at ~129 buckets (the max/64 rule);
   * a pinned width against longer windows fails in Spark's sequence
@@ -53,19 +53,6 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       Some(p)
   }
 
-  private def statsMaxBytes: BigInt = {
-    val s = conf.getConfString(SpatialJoinRewrite.STATS_MAX_BYTES_KEY, (256L << 20).toString)
-    try BigInt(s.toLong)
-    catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"${SpatialJoinRewrite.STATS_MAX_BYTES_KEY} must be a plain byte count, got '$s'")
-    }
-  }
-
-  private val inStatsJob = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
-  }
-
   /** Cast to TIMESTAMP (µs instant) in the session zone — identical on
     * both sides, so the bucket map stays monotone-consistent. */
   private def toMicros(e: Expression): Expression =
@@ -74,80 +61,17 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       case _ => Cast(e, TimestampType, Some(conf.sessionLocalTimeZone))
     })
 
-  private final case class Bounds(lower: Expression, upper: Expression)
-
-  private def isTsAttr(e: Expression, side: LogicalPlan): Option[Attribute] = e match {
-    case a: AttributeReference
-      if (a.dataType == TimestampType || a.dataType == TimestampNTZType) &&
-        side.outputSet.contains(a) => Some(a)
-    case _ => None
-  }
-
-  private def tsBounds(conjuncts: Seq[Expression], left: LogicalPlan,
-                       right: LogicalPlan): AttributeMap[Bounds] = {
-    def isBound(e: Expression): Boolean =
-      (e.dataType == TimestampType || e.dataType == TimestampNTZType) &&
-        e.references.nonEmpty && e.references.subsetOf(right.outputSet) && e.deterministic
-    val lowers = scala.collection.mutable.Map[Attribute, Expression]()
-    val uppers = scala.collection.mutable.Map[Attribute, Expression]()
-    conjuncts.foreach {
-      case GreaterThanOrEqual(a, b) if isTsAttr(a, left).isDefined && isBound(b) =>
-        lowers.getOrElseUpdate(isTsAttr(a, left).get, b)
-      case GreaterThan(a, b) if isTsAttr(a, left).isDefined && isBound(b) =>
-        lowers.getOrElseUpdate(isTsAttr(a, left).get, b)
-      case LessThanOrEqual(a, b) if isTsAttr(a, left).isDefined && isBound(b) =>
-        uppers.getOrElseUpdate(isTsAttr(a, left).get, b)
-      case LessThan(a, b) if isTsAttr(a, left).isDefined && isBound(b) =>
-        uppers.getOrElseUpdate(isTsAttr(a, left).get, b)
-      case GreaterThanOrEqual(b, a) if isTsAttr(a, left).isDefined && isBound(b) =>
-        uppers.getOrElseUpdate(isTsAttr(a, left).get, b)
-      case GreaterThan(b, a) if isTsAttr(a, left).isDefined && isBound(b) =>
-        uppers.getOrElseUpdate(isTsAttr(a, left).get, b)
-      case LessThanOrEqual(b, a) if isTsAttr(a, left).isDefined && isBound(b) =>
-        lowers.getOrElseUpdate(isTsAttr(a, left).get, b)
-      case LessThan(b, a) if isTsAttr(a, left).isDefined && isBound(b) =>
-        lowers.getOrElseUpdate(isTsAttr(a, left).get, b)
-      case _ =>
-    }
-    AttributeMap(lowers.keySet.intersect(uppers.keySet).map { a =>
-      a -> Bounds(lowers(a), uppers(a))
-    }.toSeq)
-  }
-
   private def widthPow(winSide: LogicalPlan, b: Bounds): Int = {
     val p = confPow.getOrElse {
-      if (inStatsJob.get) DEFAULT_POW
-      else {
-        val maxBytes = statsMaxBytes
-        try {
-          if (winSide.stats.sizeInBytes > maxBytes) DEFAULT_POW
-          else {
-            val boundExprs = Seq(b.lower, b.upper).map { e =>
-              org.apache.spark.sql.catalyst.expressions.BindReferences
-                .bindReference(e, winSide.output).toString
-            }.mkString(",")
-            val key = "ivrule|" + graft.join.SpatialJoin.planKey(winSide) +
-              "|" + graft.join.SpatialJoin.planDigest(boundExprs)
-            graft.join.SpatialJoin.BitsMemo.getOrCompute(key) {
-              val spark = SparkSession.active
-              val proj = Project(Seq(
-                Alias(Subtract(toMicros(b.upper), toMicros(b.lower)), "len")()), winSide)
-              inStatsJob.set(java.lang.Boolean.TRUE)
-              val row =
-                try org.apache.spark.sql.graft.bridge.ofRows(spark, proj)
-                  .selectExpr("percentile_approx(len, 0.5, 100) AS med", "max(len) AS mx")
-                  .head()
-                finally inStatsJob.set(java.lang.Boolean.FALSE)
-              if (row.isNullAt(0)) DEFAULT_POW
-              else graft.join.IntervalJoin.widthPowForLens(
-                row.getLong(0).toDouble, row.getLong(1).toDouble)
-            }
-          }
-        } catch { case scala.util.control.NonFatal(_) => DEFAULT_POW }
+      JoinRuleSupport.statsDerived(winSide, "ivrule", Seq(b.lower, b.upper), DEFAULT_POW,
+          Seq(Alias(Subtract(toMicros(b.upper), toMicros(b.lower)), "len")()),
+          "percentile_approx(len, 0.5, 100) AS med", "max(len) AS mx") { row =>
+        if (row.isNullAt(0)) DEFAULT_POW
+        else graft.join.IntervalJoin.widthPowForLens(
+          row.getLong(0).toDouble, row.getLong(1).toDouble)
       }
     }
-    try conf.setConfString(graft.join.IntervalJoin.LAST_POW_KEY, p.toString)
-    catch { case scala.util.control.NonFatal(_) => () }
+    JoinRuleSupport.publish(graft.join.IntervalJoin.LAST_POW_KEY, p)
     p
   }
 
@@ -156,20 +80,16 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
         if j.resolved &&
           !left.output.exists(_.name == TB) && !right.output.exists(_.name == TB) =>
       val conjuncts = splitConjunctivePredicates(cond)
-      val hasEquiKey = conjuncts.exists {
-        case EqualTo(a, b) =>
-          (a.references.nonEmpty && a.references.subsetOf(left.outputSet) &&
-            b.references.nonEmpty && b.references.subsetOf(right.outputSet)) ||
-          (a.references.nonEmpty && a.references.subsetOf(right.outputSet) &&
-            b.references.nonEmpty && b.references.subsetOf(left.outputSet))
-        case _ => false
-      }
+      val hasEquiKey = JoinRuleSupport.hasCrossSideEquiKey(conjuncts, left, right)
       // defer to the 2-D spatial rule where it applies: a join that ALSO
       // has two double range axes is spatial, not temporal
-      val axesL = if (hasEquiKey) AttributeMap.empty[Bounds] else tsBounds(conjuncts, left, right)
+      def boundsOf(pts: LogicalPlan, wins: LogicalPlan) =
+        JoinRuleSupport.rangeBounds(conjuncts, pts, wins,
+          t => t == TimestampType || t == TimestampNTZType)
+      val axesL = if (hasEquiKey) AttributeMap.empty[Bounds] else boundsOf(left, right)
       val axesR =
         if (hasEquiKey || axesL.nonEmpty || jt != Inner) AttributeMap.empty[Bounds]
-        else tsBounds(conjuncts, right, left)
+        else boundsOf(right, left)
       if (axesL.isEmpty && axesR.isEmpty) j
       else {
         val pointsOnLeft = axesL.nonEmpty

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{DoubleType, LongType}
+import JoinRuleSupport.Bounds
 
 /** Catalyst optimizer rule: rewrite the NATURAL spatial predicate join
   *
@@ -84,30 +85,9 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * above this logical-stats size the rule skips the job and keeps the
     * fixed default (pin [[BITS_KEY]] to tune such joins explicitly).
     * Conf-tunable: a deployment whose box dimension tables legitimately
-    * exceed the default 256 MB raises it instead of pinning bits. */
+    * exceed the default 256 MB raises it instead of pinning bits. The
+    * interval rule honours the same key. */
   val STATS_MAX_BYTES_KEY = "spark.graft.spatialJoin.statsMaxBytes"
-  private def statsMaxBytes: BigInt = {
-    val s = conf.getConfString(STATS_MAX_BYTES_KEY, (256L << 20).toString)
-    // validate LOUDLY (like BITS_KEY): evaluated before gridBits' NonFatal
-    // fallback, so a malformed value (e.g. a "1g" suffix) fails the query
-    // instead of silently pinning every join to the fixed default grid
-    try BigInt(s.toLong)
-    catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"$STATS_MAX_BYTES_KEY must be a plain byte count, got '$s'")
-    }
-  }
-
-  // reentrancy guard for the stats sub-query: running it re-enters the
-  // optimizer, so a box side that ITSELF contains another rewritable
-  // natural spatial join would fire the rule recursively and launch nested
-  // stats jobs (depth bounded only by query nesting; a StackOverflowError
-  // from a deep plan is fatal, not NonFatal). Inside a stats job the inner
-  // rewrite keeps the fixed default grid — the inner join still plans
-  // cell-keyed, just untuned, and the OUTER memoized bits are unaffected.
-  private val inStatsJob = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
-  }
 
   /** The grid for one rewrite: the pinned conf value, else the box-extent
     * derivation over the (small) box side. Both rule axes are mapped by
@@ -116,62 +96,24 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * (each component then dominates the DataFrame API's lon/lat-split
     * call, hence the rule's adaptive grid is never coarser than
     * `bitsForBoxes` on the same table — asserted in SpatialJoinSpec).
-    * Guards: a box side whose logical-plan size estimate exceeds
-    * [[STATS_MAX_BYTES_KEY]] skips the stats job (bounded planning time for
-    * arbitrary SQL — the old fixed grid still plans, just less tuned; the
-    * conf is only consulted — and so only validated — on this adaptive
-    * path, so pinned-bits sessions never fail on a malformed value), a
-    * rewrite reached FROM a running stats job keeps the fixed default
-    * (reentrancy guard above), and any stats failure (streaming child, no
-    * active session) falls back the same way. */
+    * The stats job's guards (size, reentrancy, failure → the fixed
+    * default) are [[JoinRuleSupport.statsDerived]]'s; the size conf is
+    * only consulted — and so only validated — on this adaptive path, so
+    * pinned-bits sessions never fail on a malformed value. */
   private def gridBits(boxSide: LogicalPlan, bx: Bounds, by: Bounds): Int = {
     val b = confBits.getOrElse {
-      if (inStatsJob.get) DEFAULT_BITS
-      else {
-        val maxBytes = statsMaxBytes // validated OUTSIDE the fallback catch
-        try {
-          if (boxSide.stats.sizeInBytes > maxBytes) DEFAULT_BITS
-          else {
-            // 32-bit semantic hashes collide at memo scale — pair them
-            // with the canonicalized-tree + source-paths digest (the
-            // SAME planKey scheme as the DataFrame API's memo). The
-            // bound-expression half is keyed POSITIONALLY: expression-level
-            // canonicalization keeps AttributeReference exprIds — fresh on
-            // every analysis — so a digest of the raw expressions would
-            // miss the memo on every re-built query (bench reps, repeated
-            // SQL) and re-run the stats job each time; binding to ordinals
-            // in the box side's output makes equal-shaped queries key equal
-            val boundExprs = Seq(bx.lower, bx.upper, by.lower, by.upper).map { e =>
-              org.apache.spark.sql.catalyst.expressions.BindReferences
-                .bindReference(e, boxSide.output).toString
-            }.mkString(",")
-            val key = "rule|" + graft.join.SpatialJoin.planKey(boxSide) +
-              "|" + graft.join.SpatialJoin.planDigest(boundExprs)
-            graft.join.SpatialJoin.BitsMemo.getOrCompute(key) {
-              val spark = SparkSession.active
-              val proj = Project(Seq(
-                Alias(Subtract(bx.upper, bx.lower), "dx")(),
-                Alias(Subtract(by.upper, by.lower), "dy")()), boxSide)
-              inStatsJob.set(java.lang.Boolean.TRUE)
-              val row =
-                try org.apache.spark.sql.graft.bridge.ofRows(spark, proj)
-                  .selectExpr(
-                    "percentile_approx(dx, 0.5, 100) AS ex",
-                    "percentile_approx(dy, 0.5, 100) AS ey",
-                    "max(dx) AS mx", "max(dy) AS my")
-                  .head()
-                finally inStatsJob.set(java.lang.Boolean.FALSE)
-              if (row.isNullAt(0) || row.isNullAt(1)) DEFAULT_BITS
-              else graft.join.SpatialJoin.bitsFromExtents(
-                row.getDouble(0), row.getDouble(1), row.getDouble(2), row.getDouble(3),
-                spanX = 360.0, spanY = 360.0)
-            }
-          }
-        } catch { case scala.util.control.NonFatal(_) => DEFAULT_BITS }
+      JoinRuleSupport.statsDerived(boxSide, "rule", Seq(bx.lower, bx.upper, by.lower, by.upper),
+          DEFAULT_BITS,
+          Seq(Alias(Subtract(bx.upper, bx.lower), "dx")(), Alias(Subtract(by.upper, by.lower), "dy")()),
+          "percentile_approx(dx, 0.5, 100) AS ex", "percentile_approx(dy, 0.5, 100) AS ey",
+          "max(dx) AS mx", "max(dy) AS my") { row =>
+        if (row.isNullAt(0) || row.isNullAt(1)) DEFAULT_BITS
+        else graft.join.SpatialJoin.bitsFromExtents(
+          row.getDouble(0), row.getDouble(1), row.getDouble(2), row.getDouble(3),
+          spanX = 360.0, spanY = 360.0)
       }
     }
-    try conf.setConfString(LAST_BITS_KEY, b.toString)
-    catch { case scala.util.control.NonFatal(_) => () }
+    JoinRuleSupport.publish(LAST_BITS_KEY, b)
     b
   }
 
@@ -188,47 +130,6 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
         Literal(l - 1))),
       Literal(0L)))
 
-  private final case class Bounds(lower: Expression, upper: Expression)
-
-  /** For each left-side double attribute bounded from below AND above by
-    * right-side expressions, its bounds. */
-  private def axisBounds(conjuncts: Seq[Expression], left: LogicalPlan,
-                         right: LogicalPlan): AttributeMap[Bounds] = {
-    def isPointAttr(e: Expression): Option[Attribute] = e match {
-      case a: AttributeReference if a.dataType == DoubleType && left.outputSet.contains(a) => Some(a)
-      case _ => None
-    }
-    def isBound(e: Expression): Boolean =
-      e.dataType == DoubleType && e.references.nonEmpty &&
-        e.references.subsetOf(right.outputSet) && e.deterministic
-    val lowers = scala.collection.mutable.Map[Attribute, Expression]()
-    val uppers = scala.collection.mutable.Map[Attribute, Expression]()
-    conjuncts.foreach {
-      case GreaterThanOrEqual(a, b) if isPointAttr(a).isDefined && isBound(b) =>
-        lowers.getOrElseUpdate(isPointAttr(a).get, b)
-      case GreaterThan(a, b) if isPointAttr(a).isDefined && isBound(b) =>
-        lowers.getOrElseUpdate(isPointAttr(a).get, b)
-      case LessThanOrEqual(a, b) if isPointAttr(a).isDefined && isBound(b) =>
-        uppers.getOrElseUpdate(isPointAttr(a).get, b)
-      case LessThan(a, b) if isPointAttr(a).isDefined && isBound(b) =>
-        uppers.getOrElseUpdate(isPointAttr(a).get, b)
-      case GreaterThanOrEqual(b, a) if isPointAttr(a).isDefined && isBound(b) =>
-        uppers.getOrElseUpdate(isPointAttr(a).get, b)
-      case GreaterThan(b, a) if isPointAttr(a).isDefined && isBound(b) =>
-        uppers.getOrElseUpdate(isPointAttr(a).get, b)
-      case LessThanOrEqual(b, a) if isPointAttr(a).isDefined && isBound(b) =>
-        lowers.getOrElseUpdate(isPointAttr(a).get, b)
-      case LessThan(b, a) if isPointAttr(a).isDefined && isBound(b) =>
-        lowers.getOrElseUpdate(isPointAttr(a).get, b)
-      case _ =>
-    }
-    // AttributeMap keys by exprId — SQL-sourced condition attributes carry
-    // view qualifiers that defeat plain case-class equality against output
-    AttributeMap(lowers.keySet.intersect(uppers.keySet).map { a =>
-      a -> Bounds(lowers(a), uppers(a))
-    }.toSeq)
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case j @ Join(left, right, jt @ (Inner | LeftSemi | LeftAnti), Some(cond), hint)
         if j.resolved &&
@@ -238,22 +139,17 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       // equality conjunct already gives the planner a hash-join key, and
       // rewriting would just add a redundant explode (this also makes the
       // rule a no-op on its own output — fixed-point safe twice over)
-      val hasEquiKey = conjuncts.exists {
-        case EqualTo(a, b) =>
-          (a.references.nonEmpty && a.references.subsetOf(left.outputSet) &&
-            b.references.nonEmpty && b.references.subsetOf(right.outputSet)) ||
-          (a.references.nonEmpty && a.references.subsetOf(right.outputSet) &&
-            b.references.nonEmpty && b.references.subsetOf(left.outputSet))
-        case _ => false
-      }
+      val hasEquiKey = JoinRuleSupport.hasCrossSideEquiKey(conjuncts, left, right)
       // point coords on the LEFT (explode the right side) — works for
       // Inner, LeftSemi and LeftAnti. Mirrored form (coords on the RIGHT,
       // explode the LEFT) only for Inner: exploding the left side would
       // let a LeftSemi/LeftAnti emit one row per matching cell.
-      val axesL = if (hasEquiKey) AttributeMap.empty[Bounds] else axisBounds(conjuncts, left, right)
+      def boundsOf(pts: LogicalPlan, boxes: LogicalPlan) =
+        JoinRuleSupport.rangeBounds(conjuncts, pts, boxes, _ == DoubleType)
+      val axesL = if (hasEquiKey) AttributeMap.empty[Bounds] else boundsOf(left, right)
       val axesR =
         if (hasEquiKey || axesL.size >= 2 || jt != Inner) AttributeMap.empty[Bounds]
-        else axisBounds(conjuncts, right, left)
+        else boundsOf(right, left)
       if (axesL.size < 2 && axesR.size < 2) j
       else {
         val pointsOnLeft = axesL.size >= 2

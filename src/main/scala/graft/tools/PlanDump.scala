@@ -1,12 +1,10 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Diagnostics: print the formatted physical plan of a named SparkEntry
-  * query, or run ad-hoc probes. Usage:
+  * query. Usage:
   *   GEOQ_MAIN=graft.tools.PlanDump bin/geoq-spark <queryName> <sfDir>
-  *   GEOQ_MAIN=graft.tools.PlanDump bin/geoq-spark knn-probe <sfDir>
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -20,98 +18,12 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     try {
       args.toList match {
-        case "knn-probe" :: dir :: Nil =>
-          // pin the per-round grid at several granularities: coarse grids
-          // resolve in round 1, fine grids push queries through escalation
-          // and the world round — checksums must agree (exact at every
-          // schedule; the grid only moves cost).
-          val p = graft.Queries.pts(spark, dir)
-          val qs = p.filter(col("id") % 101 === 0)
-            .select(col("id").as("query_id"), col("lon").as("qlon"), col("lat").as("qlat"))
-          for (bits <- Seq(4, 6, 10)) {
-            val r = graft.join.SpatialJoin.knn(p, qs, k = 5, bits = bits)
-              .select("query_id", "rank", "neighbor_id")
-              .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sortBy(x => (x._1, x._2))
-            println(s"bits=$bits rows=${r.length} sample=${r.take(3).mkString(",")}")
-            println(s"bits=$bits checksum=${r.map { case (a, b, c) => a * 31 + b * 7 + c }.sum}")
-          }
-        case "rtree-probe" :: path :: Nil =>
-          // live: parse a line-delimited GeoJSON layer, hilbert-sort, build
-          // the packed R-tree, run a bbox select — the FGB read/write path
-          val lines = scala.io.Source.fromFile(path).getLines().toSeq
-          val feats = lines.flatMap(graft.core.Entity.parseLine)
-          val boxes = feats.map(f => graft.geom.Geo.bbox(f.geom))
-          val ext = boxes.reduce((a, b) => (math.min(a._1, b._1), math.min(a._2, b._2),
-            math.max(a._3, b._3), math.max(a._4, b._4)))
-          val leaves = boxes.zipWithIndex.sortBy { case (b, _) =>
-            graft.index.Hilbert.hilbertBbox((b._1 + b._3) / 2, (b._2 + b._4) / 2,
-              ext._1, ext._2, ext._3, ext._4)
-          }.map { case (b, i) => graft.ops.PackedRTree.Node(b._1, b._2, b._3, b._4, i.toLong) }
-            .toIndexedSeq
-          val (meta, tree) = graft.ops.PackedRTree.build(leaves)
-          println(s"features=${feats.size} nodes=${meta.numNodes} levels=${meta.nodesPerLevel}")
-          val hits = graft.ops.PackedRTree.search(meta, tree, 8.8, 47.2, 9.5, 55.3)
-          println(s"bbox(8.8,47.2,9.5,55.3) hits=${hits.size}")
-          println(s"index bytes=${graft.ops.PackedRTree.serialize(tree).length}")
-        case "imageops-probe" :: dir :: Nil =>
-          // extract features from a live image table, run the near-dup scan,
-          // and cross-check packed cells vs string geohashes on real anchors
-          val imgs = graft.Queries.imageTable(spark, 500)
-          val feats = graft.img.ImageOps.extract(imgs).cache()
-          println(s"features: ${feats.count()} rows")
-          feats.select("image_id", "fmt", "luma_hist").show(3, truncate = false)
-          val pairs = graft.img.ImageOps.nearDupPairs(feats, maxL1 = 300, bits = 2)
-          println(s"near-dup pairs (L1<=300): ${pairs.count()}")
-          import spark.implicits._
-          val mismatches = feats.select("lon", "lat").as[(Double, Double)]
-            .map { case (lon, lat) =>
-              val packed = graft.index.Geohash.packedToBase32(
-                graft.index.Geohash.packedCellOf(lat, lon, 5))
-              val direct = graft.index.Geohash.encode(lat, lon, 5)
-              if (packed == direct) 0 else 1
-            }.reduce(_ + _)
-          println(s"packed-vs-string cell mismatches: $mismatches")
-        case "salt-probe" :: dir :: Nil =>
-          // skewed join: plain vs salted must agree; print the salted plan's
-          // join keys to show the salt participates in the shuffle
-          import spark.implicits._
-          val pts = spark.range(200000).map { i =>
-            if (i % 10 != 0) (i, 10.001 + (i % 97) * 1e-6, 45.001 + (i % 89) * 1e-6)
-            else (i, -170.0 + (i % 340).toDouble, -80.0 + (i % 160).toDouble)
-          }.toDF("id", "lon", "lat")
-          val boxes = Seq((1L, 9.0, 44.0, 11.0, 46.0), (2L, -100.0, -50.0, -60.0, 0.0))
-            .toDF("rid", "minx", "miny", "maxx", "maxy")
-          def t(f: => Long): (Long, Double) = {
-            val s = System.nanoTime(); val n = f; (n, (System.nanoTime() - s) / 1e9)
-          }
-          val (nPlain, tPlain) = t(graft.join.SpatialJoin.joinPointsInBoxes(pts, boxes).count())
-          val (nSalt, tSalt) = t(graft.join.SpatialJoin.joinPointsInBoxesSalted(pts, boxes).count())
-          println(s"plain: $nPlain pairs in ${tPlain}s; salted: $nSalt pairs in ${tSalt}s; match=${nPlain == nSalt}")
-          val plan = graft.join.SpatialJoin.joinPointsInBoxesSalted(pts, boxes)
-            .queryExecution.executedPlan.toString
-          println(plan.split('\n').find(_.contains("Join")).getOrElse("no join line"))
-        case "cluster-probe" :: dir :: Nil =>
-          // write the derived points hilbert-clustered, then run a bbox scan
-          // and report rows + the physical plan's pushed filters
-          val out = java.nio.file.Files.createTempDirectory("clustered").toString
-          graft.sources.TableIO.writeClustered(
-            graft.Queries.pts(spark, dir), out, "lon", "lat", buckets = 16)
-          val q = graft.sources.TableIO.readBbox(spark, out, -10, -10, 10, 10)
-          println(s"bbox rows: ${q.count()}")
-          val scan = q.queryExecution.executedPlan.toString
-          println(scan.split('\n').filter(_.contains("PushedFilters")).mkString("\n"))
-          val files = new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet"))
-          println(s"files written: $files")
         case name :: dir :: Nil =>
-          SparkEntry.queriesByName(name)(spark, dir).explain("formatted")
+          graft.SparkEntry.queries(name)(spark, dir).explain("formatted")
         case other =>
-          System.err.println(s"usage: PlanDump <queryName|knn-probe> <sfDir> (got $other)")
+          System.err.println(s"usage: PlanDump <queryName> <sfDir> (got $other)")
           sys.exit(2)
       }
     } finally spark.stop()
   }
-}
-
-object SparkEntry {
-  def queriesByName(name: String) = graft.SparkEntry.queries(name)
 }

@@ -221,7 +221,7 @@ class HammingRewriteSpec extends AnyFunSuite {
     // the decontamination shape: RewriteSubquery only manufactures the
     // LeftAnti join AFTER the optimizer-rule batches — the strategy twin
     // must catch it at physical planning (strategy-only would also work;
-    // bench/ExtProbe pins the spark.sql.extensions path end-to-end)
+    // GraftExtensionsSpec pins the spark.sql.extensions path end-to-end)
     for ((shape, op) <- Seq(("NOT EXISTS", "left_anti"), ("EXISTS", "left_semi"))) {
       val df = s2.sql(
         s"""SELECT t.id FROM nedocs t WHERE $shape (

@@ -16,9 +16,20 @@ import org.apache.spark.sql.functions._
   * in O(log diameter) rounds instead of O(diameter), so a long near-dup
   * CHAIN (a~b~c~…) doesn't need one Spark job per hop. Each round is
   * two hash joins + an aggregation on (edges + labels)-sized data.
-  * Labels are checkpointed per round so lineage stays flat; the
-  * convergence count rides the SAME job that materializes the round's
-  * checkpoint (lazy localCheckpoint + count) instead of a second pass.
+  *
+  * Round shape: each round is ONE eager localCheckpoint (lineage stays
+  * flat), and its changed-vertex count rides that checkpoint as an
+  * observe() metric, so no count() runs. A lazy checkpoint plus count()
+  * is not one job under AQE: the count plans its own exchange and job,
+  * and with the label table sort-merged (a checkpoint carries no size
+  * estimate) a round ran five or six jobs. When the label table fits
+  * under `spark.sql.autoBroadcastJoinThreshold`, both joins of a round
+  * broadcast it, and the round runs three jobs: the broadcast, the
+  * aggregation's exchange and the checkpoint's result stage (geobench
+  * `geoq_stream_neardup`: 18 → 8 jobs a call, 0.71 → 0.54 s). A round
+  * with no exchange at all was not possible: on Spark 4.1.2 a
+  * localCheckpoint of `repartition(col("dst"))` reports
+  * `UnknownPartitioning(0)`, so a later `groupBy("dst")` exchanges again.
   *
   * Deterministic: the fixpoint (every vertex labeled with its component's
   * min id) is unique, so the result is hash-gateable. Throws loudly if
@@ -40,6 +51,14 @@ object ConnectedComponents {
     * stages and loses nothing measured; the knob stays for graphs whose
     * labels are far smaller than their edges. */
   private val JUMPS = 1
+
+  /** Name of each round's observe() metric: (changed, rows). */
+  private[graft] val METRIC = "graft_cc_round"
+
+  /** Bytes a label-table row (two longs) counts against the broadcast
+    * threshold: Spark's `EstimationUtils.getSizePerRow` for it (8 bytes of
+    * row overhead + 8 per long). */
+  private val ROW_BYTES = 24L
 
   /** Drop a localCheckpoint's persisted RDD blocks NOW: `Dataset
     * .unpersist` only talks to the CacheManager, which never saw a
@@ -68,13 +87,22 @@ object ConnectedComponents {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true) // reread every round; never recompute the pair join
-    var labelsCk = vertices.select(col("id"), col("id").as("component"))
-      .localCheckpoint(true)
-    var labels = labelsCk
+    // Round 1 reads `vertices` directly: its labels are the identity map,
+    // so there is nothing to checkpoint before the first aggregation.
+    var labels = vertices.select(col("id"), col("id").as("component"))
+    var labelsCk: DataFrame = null
+    // A checkpoint carries no size estimate, so the planner would
+    // sort-merge the label table every round. Round 1 counts the vertices;
+    // when the table (ROW_BYTES a row, Spark's own per-row estimate for
+    // two longs) fits under the session's broadcast threshold, later
+    // rounds broadcast it to both joins. Above it they keep the shuffle
+    // join.
+    var bcast = false
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
       val roundT0 = System.nanoTime()
+      val lab = if (bcast) broadcast(labels) else labels
       // min over {own label} ∪ {neighbors' labels} in ONE aggregation: the
       // self row rides the same groupBy (every vertex has exactly one, so
       // max-ignoring-nulls recovers the old label for the changed count) —
@@ -90,7 +118,7 @@ object ConnectedComponents {
           sym.select(col("dst").as("id"), col("src").as("lab"),
             lit(null).cast("long").as("own"))
         else
-          sym.join(labels, sym("src") === labels("id"))
+          sym.join(lab, sym("src") === lab("id"))
             .select(col("dst").as("id"), col("component").as("lab"),
               lit(null).cast("long").as("own"))
       val selfRows = labels.select(col("id"), col("component").as("lab"),
@@ -102,28 +130,38 @@ object ConnectedComponents {
       // pointer jumping: follow the label table JUMPS times (component is
       // a vertex id, so it has a row in `labels`). The build side stays
       // the RAW labels plan — canonically identical to the neighbor join's
-      // build subtree, so when the planner broadcasts the label table the
-      // per-round broadcast is built ONCE and reused by both joins (the
-      // former pointer-side aliasing broke canonical equality and built it
-      // twice per round). The stream side is aliased instead, which also
-      // keeps the self-lineage attributes unambiguous.
+      // build subtree, so a broadcast label table is built ONCE per round
+      // and reused by both joins. The stream side is aliased instead,
+      // which also keeps the self-lineage attributes unambiguous.
       val jumped =
         if (round == 0) stepped // identity pointer table: the jump is a no-op
         else (1 to JUMPS).foldLeft(stepped) { (cur, j) =>
-          cur.as("cur").join(labels.as(s"ptr$j"),
+          cur.as("cur").join(lab.as(s"ptr$j"),
               col("cur.c") === col(s"ptr$j.id"), "left")
             .select(col("cur.id").as("id"), col("cur.component").as("component"),
               least(col("cur.c"),
                 coalesce(col(s"ptr$j.component"), col("cur.c"))).as("c"))
         }
-      // ONE job materializes the round AND counts convergence: the lazy
-      // checkpoint persists its blocks under the count() action (an eager
-      // checkpoint plus a separate count would run the blocks twice, and
-      // counting the un-checkpointed plan would re-execute the joins)
-      val doubled = jumped.withColumnRenamed("c", "newComp").localCheckpoint(false)
-      val changed = doubled.filter(col("newComp") < col("component")).count()
+      // ONE eager checkpoint; its changed and row counts ride it as an
+      // observe() metric, read from the observed plan once it returns
+      val observed = jumped.withColumnRenamed("c", "newComp")
+        .observe(METRIC,
+          count(when(col("newComp") < col("component"), 1)).as("changed"),
+          count(lit(1)).as("rows"))
+      val doubled = observed.localCheckpoint(true)
+      // The metric sits at the root of the checkpointed plan, above every
+      // node AQE's empty-relation rule can replace, so an empty round
+      // still reports 0 changed. A missing metric fails loudly: reading it
+      // as 0 would stop on a plausible-but-wrong labeling.
+      val (changed, rows) = observed.queryExecution.observedMetrics.get(METRIC)
+        .map(r => (r.getLong(0), r.getLong(1)))
+        .getOrElse(throw new IllegalStateException(
+          s"ConnectedComponents round ${round + 1} reported no $METRIC metric"))
+      if (round == 0)
+        bcast = rows * ROW_BYTES <=
+          vertices.queryExecution.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
       // the new checkpoint is materialized — the superseded one can go
-      dropCheckpoint(labelsCk)
+      if (labelsCk != null) dropCheckpoint(labelsCk)
       labelsCk = doubled
       labels = doubled.select(col("id"), col("newComp").as("component"))
       converged = changed == 0

@@ -326,6 +326,99 @@ class JoinOpsSpec extends AnyFunSuite {
     intercept[IllegalStateException](ConnectedComponents.run(vertices, edges, maxRounds = 2))
   }
 
+  test("connected components: each round is one localCheckpoint and no count; labels exact with and without broadcast") {
+    import spark.implicits._
+    import graft.ops.ConnectedComponents
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    // ground truth by union-find; linking the larger root under the
+    // smaller keeps every root its set's min id
+    def truth(vs: Seq[Long], es: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+      val parent = scala.collection.mutable.Map(vs.map(v => v -> v): _*)
+      def find(v: Long): Long = if (parent(v) == v) v else find(parent(v))
+      es.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      vs.map(v => (v, find(v))).sorted
+    }
+    // a 16-hop chain, a star entered from its leaves, a reversed pair and
+    // two isolated vertices
+    val es = (0L until 16L).map(i => (i, i + 1)) ++ (101L to 105L).map(l => (l, 100L)) ++
+      Seq((201L, 200L))
+    val vs = (0L to 16L) ++ (100L to 105L) ++ Seq(200L, 201L, 300L, 301L)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    // (action, whether its plan reported the round metric)
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        actions.add((funcName, qe.observedMetrics.contains(ConnectedComponents.METRIC)))
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = actions.add((s"failed $funcName", false))
+    }
+    /** Labels, rounds, per-round changed counts, jobs and SQL actions of one run. */
+    def traced(vs: Seq[Long], es: Seq[(Long, Long)]) = {
+      val vertices = vs.toDF("id")
+      val edges = es.toDF("src", "dst")
+      org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
+      jobs.set(0); actions.clear()
+      val changed = scala.collection.mutable.ArrayBuffer[Long]()
+      val out = ConnectedComponents.run(vertices, edges, 30, (_, _, c) => changed += c)
+      org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
+      val (nJobs, acts) = (jobs.get, actions.asScala.toSeq)
+      val labels = out.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      (labels, changed.toSeq, nJobs, acts)
+    }
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    try {
+      for (threshold <- Seq(None, Some("-1"))) {
+        threshold.foreach(spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+        try {
+          val (labels, changed, nJobs, acts) = traced(vs, es)
+          assert(labels == truth(vs, es), s"threshold $threshold")
+          val rounds = changed.size
+          assert(rounds >= 3 && changed.last == 0L && changed.init.forall(_ > 0L), s"$changed")
+          // the edge checkpoint, then one eager checkpoint per round: no
+          // count() or any other action
+          assert(acts.map(_._1) == Seq.fill(rounds + 1)("localCheckpoint"), s"threshold $threshold: $acts")
+          assert(acts.map(_._2) == false +: Seq.fill(rounds)(true))
+          if (threshold.isEmpty) {
+            // under the broadcast threshold: the edge checkpoint's job,
+            // round 1's exchange and result jobs, then at most the label
+            // broadcast, the exchange and the result job per later round
+            // (a lazy checkpoint plus count() ran five or six)
+            assert(nJobs <= 1 + 2 + 3 * (rounds - 1), s"$nJobs jobs in $rounds rounds")
+          }
+          // isolated vertices only: one round, nothing changes
+          val iso = Seq(7L, 3L, 5L)
+          val (isoLabels, isoChanged, _, isoActs) = traced(iso, Seq.empty)
+          assert(isoLabels == iso.sorted.map(v => (v, v)) && isoChanged == Seq(0L))
+          assert(isoActs == Seq(("localCheckpoint", false), ("localCheckpoint", true)))
+          // empty vertex set: the round's metric still reports (0 changed).
+          // AQE's empty-relation rule replaces an empty subtree together
+          // with any CollectMetrics node inside it, but the round metric
+          // sits at the root of the checkpointed plan, above every node
+          // the rule can replace, so it is never lost (a missing one fails
+          // the run rather than reading as converged)
+          val (emptyLabels, emptyChanged, _, emptyActs) = traced(Seq.empty, Seq.empty)
+          assert(emptyActs == Seq(("localCheckpoint", false), ("localCheckpoint", true)))
+          assert(emptyLabels.isEmpty && emptyChanged == Seq(0L))
+        } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(qeListener)
+    }
+  }
+
   test("similarity joins: seeded randomized differential vs brute force") {
     import spark.implicits._
     import graft.join.SimilarityJoin

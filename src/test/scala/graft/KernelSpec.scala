@@ -277,37 +277,39 @@ class KernelSpec extends AnyFunSuite {
     assert(Num.json(1e-7) == "0.0000001")
   }
 
+  // independent reference for Num's fast paths: the pre-optimization probe
+  // algorithm — smallest precision whose %e rendering parses back to the
+  // same bits
+  private def probeShortest(d: Double): (String, Int) = {
+    def fmt(p: Int): String =
+      String.format(java.util.Locale.ROOT, "%." + (p - 1) + "e", Double.box(d))
+    var lo = 1; var hi = 17
+    while (lo < hi) {
+      val mid = (lo + hi) / 2
+      if (java.lang.Double.parseDouble(fmt(mid)) == d) hi = mid else lo = mid + 1
+    }
+    val s = fmt(lo)
+    val ei = s.indexOf('e')
+    val mant = s.substring(0, ei).replace("-", "").replace(".", "")
+    val trimmed = {
+      val t = mant.reverse.dropWhile(_ == '0').reverse
+      if (t.isEmpty) "0" else t
+    }
+    (trimmed, s.substring(ei + 1).toInt + 1)
+  }
+  private def probePlain(d: Double, forceDot: Boolean): String = {
+    val (digits, exp) = probeShortest(math.abs(d))
+    val sb = new StringBuilder
+    if (d < 0) sb.append('-')
+    if (exp <= 0) { sb.append("0."); (exp until 0).foreach(_ => sb.append('0')); sb.append(digits) }
+    else if (exp >= digits.length) {
+      sb.append(digits); (digits.length until exp).foreach(_ => sb.append('0'))
+      if (forceDot) sb.append(".0")
+    } else sb.append(digits.substring(0, exp)).append('.').append(digits.substring(exp))
+    sb.toString
+  }
+
   test("integral fast path == format/parse probe path (differential)") {
-    // independent reference: the pre-optimization probe algorithm —
-    // smallest precision whose %e rendering parses back to the same bits
-    def probeShortest(d: Double): (String, Int) = {
-      def fmt(p: Int): String =
-        String.format(java.util.Locale.ROOT, "%." + (p - 1) + "e", Double.box(d))
-      var lo = 1; var hi = 17
-      while (lo < hi) {
-        val mid = (lo + hi) / 2
-        if (java.lang.Double.parseDouble(fmt(mid)) == d) hi = mid else lo = mid + 1
-      }
-      val s = fmt(lo)
-      val ei = s.indexOf('e')
-      val mant = s.substring(0, ei).replace("-", "").replace(".", "")
-      val trimmed = {
-        val t = mant.reverse.dropWhile(_ == '0').reverse
-        if (t.isEmpty) "0" else t
-      }
-      (trimmed, s.substring(ei + 1).toInt + 1)
-    }
-    def probePlain(d: Double, forceDot: Boolean): String = {
-      val (digits, exp) = probeShortest(math.abs(d))
-      val sb = new StringBuilder
-      if (d < 0) sb.append('-')
-      if (exp <= 0) { sb.append("0."); (exp until 0).foreach(_ => sb.append('0')); sb.append(digits) }
-      else if (exp >= digits.length) {
-        sb.append(digits); (digits.length until exp).foreach(_ => sb.append('0'))
-        if (forceDot) sb.append(".0")
-      } else sb.append(digits.substring(0, exp)).append('.').append(digits.substring(exp))
-      sb.toString
-    }
     val rnd = new scala.util.Random(42)
     val integral: Seq[Double] =
       Seq(1.0, -1.0, 34.0, -180.0, 100.0, 12300.0, 65535.0, 4294967296.0,
@@ -321,13 +323,66 @@ class KernelSpec extends AnyFunSuite {
       // and the output parses back to the same bits (round-trip safety)
       assert(java.lang.Double.parseDouble(Num.rust(d)) == d)
     }
-    // fractional and boundary values still go through the probe path
+    // and non-integral and out-of-range values agree too
     val frac = (1 to 200).map(_ => (rnd.nextDouble() - 0.5) * 1e6) ++
       Seq(0.35, 1e-7, -119.53125, 9.007199254740993e15, 1.8e18)
     frac.foreach { d =>
       assert(Num.rust(d) == probePlain(d, forceDot = false), s"rust($d)")
       assert(Num.json(d) == probePlain(d, forceDot = true), s"json($d)")
     }
+  }
+
+  test("Schubfach path == format/parse probe path (differential, 200k values per distribution)") {
+    val rnd = new scala.util.Random(0x5C4BFAC4L)
+    val n = 200000
+    def rounded(d: Double, places: Int): Double =
+      java.lang.Double.parseDouble(String.format(java.util.Locale.ROOT, s"%.${places}f", Double.box(d)))
+    val minBits = java.lang.Double.doubleToRawLongBits(java.lang.Double.MIN_NORMAL)
+    val topBits = java.lang.Double.doubleToRawLongBits(9.007199254740992e15) // 2^53
+    val dists: Seq[(String, () => Double)] = Seq(
+      "uniform ±180" -> (() => (rnd.nextDouble() - 0.5) * 360),
+      "%.6f coordinates" -> (() => rounded((rnd.nextDouble() - 0.5) * 360, 6)),
+      "%.3f coordinates" -> (() => rounded((rnd.nextDouble() - 0.5) * 360, 3)),
+      "|d| < 5e-6" -> (() => (rnd.nextDouble() - 0.5) * 1e-5),
+      "random bits in [MIN_NORMAL, 2^53)" -> (() => {
+        val d = java.lang.Double.longBitsToDouble(minBits + (rnd.nextLong() >>> 1) % (topBits - minBits))
+        if (rnd.nextBoolean()) -d else d
+      }))
+    for ((name, gen) <- dists; _ <- 0 until n) {
+      val d = gen()
+      if (d != 0.0) { // ±0 is special-cased before either path
+        val expect = probePlain(d, forceDot = false)
+        assert(Num.rust(d) == expect, s"$name: rust($d)")
+        // serde style differs only by the ".0" of an integral value
+        assert(Num.json(d) == (if (expect.contains('.')) expect else expect + ".0"), s"$name: json($d)")
+      }
+    }
+  }
+
+  test("formatter boundaries outside the Schubfach range keep the probe path's output") {
+    val belowMinNormal = java.lang.Math.nextDown(java.lang.Double.MIN_NORMAL)
+    def tiny(zeros: Int, digits: String) = "0." + "0" * zeros + digits
+    // (value, rust, json): the probe algorithm's output. Schubfach differs
+    // on subnormals (MIN_VALUE → 4.9E-324) and on some doubles ≥ 2^53
+    // (1.76244969343576525E18 → …5200)
+    val pinned = Seq(
+      (java.lang.Double.MIN_NORMAL, tiny(307, "22250738585072014"), tiny(307, "22250738585072014")),
+      (belowMinNormal, tiny(307, "2225073858507201"), tiny(307, "2225073858507201")),
+      (java.lang.Double.MIN_VALUE, tiny(323, "5"), tiny(323, "5")),
+      (9.007199254740992e15, "9007199254740992", "9007199254740992.0"),
+      (1.76244969343576525e18, "1762449693435765300", "1762449693435765300.0"))
+    for ((d, rust, json) <- pinned; sign <- Seq(1.0, -1.0)) {
+      val v = sign * d
+      val neg = if (sign < 0) "-" else ""
+      assert(Num.rust(v) == neg + rust, s"rust($v)")
+      assert(Num.json(v) == neg + json, s"json($v)")
+      assert(Num.rust(v) == probePlain(v, forceDot = false), s"rust($v)")
+      assert(Num.json(v) == probePlain(v, forceDot = true), s"json($v)")
+    }
+    assert(Num.rust(-0.0) == "-0" && Num.json(-0.0) == "-0.0")
+    assert(Num.rust(Double.NaN) == "NaN" && Num.json(Double.NaN) == "null")
+    assert(Num.rust(Double.PositiveInfinity) == "inf" && Num.json(Double.PositiveInfinity) == "null")
+    assert(Num.rust(Double.NegativeInfinity) == "-inf" && Num.json(Double.NegativeInfinity) == "null")
   }
 
   // --- hilbert curve (fgb/hilbert.rs:236-291) ---

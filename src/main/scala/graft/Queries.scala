@@ -1163,11 +1163,13 @@ object Queries {
   /** CONNECTED COMPONENTS over the q61 hamming pairs under the driver
     * gate — the step that turns near-dup PAIRS into dedup CLUSTERS with a
     * deterministic keeper (component = min member id). The engine side is
-    * min-label propagation with pointer doubling (O(log diameter) rounds,
-    * loud failure on non-convergence); the oracle computes the same
-    * fixpoint INDEPENDENTLY via a recursive CTE (min id over the
-    * reachability closure), so a propagation bug anywhere — a missed
-    * round, a one-directional edge, a shortcut error — hash-fails. */
+    * union-find on the driver when the pair list fits the broadcast
+    * threshold, else min-label propagation with pointer doubling
+    * (O(log diameter) rounds, loud failure on non-convergence); the oracle
+    * computes the same fixpoint INDEPENDENTLY via a recursive CTE (min id
+    * over the reachability closure), so a labeling bug anywhere — a missed
+    * round, a one-directional edge, a shortcut or linking error —
+    * hash-fails. */
   def q63Components(spark: SparkSession, dir: String): DataFrame = {
     val sh = udf((text: String) => simhash32(text))
     // materialize once: both the pair join AND the vertex list read it —

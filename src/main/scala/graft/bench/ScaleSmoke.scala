@@ -258,7 +258,10 @@ object ScaleSmoke {
     // hot cluster carrying ~half the vertices — skewed label traffic).
     // Reports rounds, per-round wall, and PEAK block-manager storage
     // DELTA over the run: the per-round dropCheckpoint hygiene as a
-    // measured number instead of a code comment.
+    // measured number instead of a code comment. The rounds run only when
+    // the ~2n symmetrized edge rows (24 B each) exceed the broadcast
+    // threshold (n above ~220k at the 10 MB default); below it the graph
+    // is labeled on the driver and reports 0 rounds.
     val chainLen = 10000L
     val ccEdges = spark.range(chainLen - 1)
       .select(col("id").as("src"), (col("id") + 1).as("dst"))

@@ -77,11 +77,18 @@ object Vincenty {
     B * a * (sigma - deltaSigma)
   }
 
-  /** Fixed-iteration variant (no early exit): runs the lambda update exactly
-    * `iters` times. Numerically identical to [[distance]] to well below 1e-9
-    * relative once converged, but with a deterministic, loop-free dataflow
-    * that an external SQL oracle can replicate term-for-term (the engine's
-    * cross-checkable form; production code uses [[distance]]).
+  /** Fixed-iteration variant: the result of running the lambda update
+    * exactly `iters` times. Numerically identical to [[distance]] to well
+    * below 1e-9 relative once converged, but with a deterministic,
+    * loop-free dataflow that an external SQL oracle can replicate
+    * term-for-term (the engine's cross-checkable form; production code
+    * uses [[distance]]).
+    *
+    * The loop stops early once an update returns lambda bit-for-bit: every
+    * later iteration would recompute the same state from the same lambda,
+    * so the output bits equal the full `iters`-iteration loop's (pairs
+    * that never reach a fixed point, e.g. near-antipodal ones, run all
+    * `iters`). Most pairs repeat within a few iterations.
     */
   def distanceFixed(lon1: Double, lat1: Double, lon2: Double, lat2: Double,
                     iters: Int = 20): Double = {
@@ -96,7 +103,8 @@ object Vincenty {
     var sinSigma = 0.0; var cosSigma = 0.0; var sigma = 0.0
     var cosSqAlpha = 0.0; var cos2SigmaM = 0.0
     var it = 0
-    while (it < iters) {
+    var fixed = false
+    while (it < iters && !fixed) {
       val sinLambda = math.sin(lambda)
       val cosLambda = math.cos(lambda)
       sinSigma = math.sqrt(
@@ -109,9 +117,12 @@ object Vincenty {
       cosSqAlpha = 1.0 - sinAlpha * sinAlpha
       cos2SigmaM = cosSigma - 2.0 * sinU1 * sinU2 / cosSqAlpha
       val c = F / 16.0 * cosSqAlpha * (4.0 + F * (4.0 - 3.0 * cosSqAlpha))
+      val lambdaPrev = lambda
       lambda = l + (1.0 - c) * F * sinAlpha *
         (sigma + c * sinSigma *
           (cos2SigmaM + c * cosSigma * (-1.0 + 2.0 * cos2SigmaM * cos2SigmaM)))
+      fixed = java.lang.Double.doubleToRawLongBits(lambda) ==
+        java.lang.Double.doubleToRawLongBits(lambdaPrev)
       it += 1
     }
     val uSq = cosSqAlpha * (A * A - B * B) / (B * B)

@@ -88,13 +88,12 @@ object H3 {
     if (s.length >= 15) s else ("0" * (15 - s.length)) + s
   }
 
+  /** Digits parentRes+1..15 are the low 3·(15 − parentRes) bits; a
+    * parent has them all set to 7, so one mask fills them. */
   def cellToParent(cell: Long, parentRes: Int): Long = {
     val res = resolution(cell)
     require(parentRes >= 0 && parentRes < res, s"invalid parent res $parentRes for res $res")
-    var out = withResolution(cell, parentRes)
-    var r = parentRes + 1
-    while (r <= 15) { out = withDigit(out, r, 7); r += 1 }
-    out
+    withResolution(cell, parentRes) | ((1L << (3 * (15 - parentRes))) - 1L)
   }
 
   /** Children at childRes in digit order (0..6; pentagons skip digit 1 on

@@ -446,6 +446,10 @@ object SpatialJoin {
         .select(col("id"), col("qid"), col("meters")))
       .drop("meters")
 
+  /** Name of each kNN round checkpoint's observe() metric: (open), the
+    * queries still short of k candidates. */
+  private[graft] val KNN_METRIC = "graft_knn_open"
+
   /** The radius-round loop of [[knnGeodesic]] and [[knn]]: `queries` is
     * (key, qlon, qlat), `round(qs, radius)` every (key, id, `dist`) pair
     * with `dist` < radius, `world(qs)` every pair; returns (key, rank,
@@ -454,7 +458,11 @@ object SpatialJoin {
     * which survives `rank ≤ k` exactly when its query has fewer than k
     * candidates — so ONE eager `localCheckpoint` yields both the solved
     * top-k rows and the next round's queries (the surviving sentinels carry
-    * their coordinates), and one emptiness probe ends the loop. The world
+    * their coordinates). The surviving sentinels are counted by an
+    * observe() metric on that checkpoint ([[KNN_METRIC]]), so ending the
+    * loop runs no job; the metric sits at the plan's root, above every
+    * node AQE's empty-relation rule can replace, and a missing one throws
+    * (read as 0 it would drop the open queries). The world
     * round (AUTO grid whatever the round pin: its clamp keeps a world box
     * at 2×2 cells) pairs every point with every open query exactly once. */
   private def knnRounds(queries: DataFrame, k: Int, dist: String,
@@ -479,12 +487,16 @@ object SpatialJoin {
         lit(Double.PositiveInfinity).as(dist), col(qlon), col(qlat))
       // n counts the non-sentinel rows among a query's top k (the window
       // shares the rank window's partitioning, so it adds no exchange)
-      val ck = ranked(cand.unionByName(sentinels, allowMissingColumns = true))
+      val observed = ranked(cand.unionByName(sentinels, allowMissingColumns = true))
         .withColumn("n", count(col("id")).over(Window.partitionBy(key)))
-        .localCheckpoint(true)
+        .observe(KNN_METRIC, count(when(col("id").isNull, 1)).as("open"))
+      val ck = observed.localCheckpoint(true)
       acc :+= ck.filter(col("n") >= k).select(out: _*)
       remaining = ck.filter(col("id").isNull).select(key, qlon, qlat)
-      open = !remaining.isEmpty
+      open = observed.queryExecution.observedMetrics.get(KNN_METRIC)
+        .map(_.getLong(0))
+        .getOrElse(throw new IllegalStateException(
+          s"kNN round ${r + 1} reported no $KNN_METRIC metric")) > 0
       radius *= 4.0
       r += 1
     }

@@ -1,15 +1,29 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed CONNECTED COMPONENTS over a pair list — the step that turns
   * near-dup PAIRS (LSH/banded join output: q19/q50/q54/q61/q62) into
   * dedup CLUSTERS with a deterministic keeper (component = min member id,
   * which IS the keeper id under the engine's min-id-keeper convention).
   *
-  * Min-label propagation with a POINTER-JUMPING shortcut each round
-  * (hash-to-min family, cf. Kiveris et al. "Connected Components in
+  * Two paths, chosen by the input size. The symmetrized edge list is
+  * checkpointed once, and its row count rides that checkpoint as an
+  * observe() metric (`graft_cc_edges`), so measuring it runs no job.
+  *
+  * Driver path: when the edge rows (ROW_BYTES a row) fit under the
+  * session's `spark.sql.autoBroadcastJoinThreshold`, the edges are
+  * collected once and labeled on the driver by union-find over primitive
+  * arrays, and the vertices are left-joined to the broadcast label table.
+  * One job (the collect) instead of a job-bound round loop: at benchmark
+  * size (geobench `geoq_stream_neardup`, 1,145 pairs, traced) the rounds
+  * cost 8 jobs and 0.42 s a call, the driver path 1 job and 0.05 s. A
+  * threshold of −1 always takes the round path.
+  *
+  * Round path: min-label propagation with a POINTER-JUMPING shortcut each
+  * round (hash-to-min family, cf. Kiveris et al. "Connected Components in
   * MapReduce and Beyond", SOCC 2014): every round each vertex takes the
   * min of (its label, its neighbors' labels) and then follows the label
   * table `JUMPS` times (the classic doubling at JUMPS = 1) — convergence
@@ -25,14 +39,14 @@ import org.apache.spark.sql.functions._
   * estimate) a round ran five or six jobs. When the label table fits
   * under `spark.sql.autoBroadcastJoinThreshold`, both joins of a round
   * broadcast it, and the round runs three jobs: the broadcast, the
-  * aggregation's exchange and the checkpoint's result stage (geobench
-  * `geoq_stream_neardup`: 18 → 8 jobs a call, 0.71 → 0.54 s). A round
+  * aggregation's exchange and the checkpoint's result stage. A round
   * with no exchange at all was not possible: on Spark 4.1.2 a
   * localCheckpoint of `repartition(col("dst"))` reports
   * `UnknownPartitioning(0)`, so a later `groupBy("dst")` exchanges again.
   *
   * Deterministic: the fixpoint (every vertex labeled with its component's
-  * min id) is unique, so the result is hash-gateable. Throws loudly if
+  * min id) is unique and both paths compute it, so the result is
+  * hash-gateable whichever path ran. The round path throws loudly if
   * maxRounds is reached without convergence (a silently unconverged
   * labeling would be plausible-but-wrong clusters); 30 rounds cover any
   * graph a driver can hold (2^30-hop chains after doubling). */
@@ -52,12 +66,20 @@ object ConnectedComponents {
     * labels are far smaller than their edges. */
   private val JUMPS = 1
 
-  /** Name of each round's observe() metric: (changed, rows). */
+  /** Name of the edge checkpoint's observe() metric: (rows), the
+    * symmetrized edge rows. */
+  private[graft] val EDGE_METRIC = "graft_cc_edges"
+
+  /** Name of the path's observe() metric: (round, changed, rows) on each
+    * round's checkpoint; (round = 0) on the driver path's edge collect. Its
+    * first column, the last value the bench's observed map keeps, is the
+    * path taken: 0 = labeled on the driver, N = N rounds. */
   private[graft] val METRIC = "graft_cc_round"
 
-  /** Bytes a label-table row (two longs) counts against the broadcast
-    * threshold: Spark's `EstimationUtils.getSizePerRow` for it (8 bytes of
-    * row overhead + 8 per long). */
+  /** Bytes a row of two longs (an edge row or a label-table row) counts
+    * against the broadcast threshold: Spark's
+    * `EstimationUtils.getSizePerRow` for it (8 bytes of row overhead + 8
+    * per long). */
   private val ROW_BYTES = 24L
 
   /** Drop a localCheckpoint's persisted RDD blocks NOW: `Dataset
@@ -71,32 +93,107 @@ object ConnectedComponents {
       case _ => ()
     }
 
-  /** vertices: (id); edges: (src, dst) — undirected (symmetrized here),
-    * ids must be members of `vertices`. Returns (id, component) with
-    * component = min id reachable from the vertex (its own id for
-    * singletons). */
+  /** The `name` metric of an executed plan. A missing metric fails
+    * loudly: reading it as 0 would pick a path or stop on a
+    * plausible-but-wrong labeling. Each metric sits at the root of its
+    * plan, above every node AQE's empty-relation rule can replace, so an
+    * empty input still reports it. */
+  private def metric(df: DataFrame, name: String, where: String): Row =
+    df.queryExecution.observedMetrics.getOrElse(name,
+      throw new IllegalStateException(s"ConnectedComponents $where reported no $name metric"))
+
+  /** vertices: (id), distinct ids; edges: (src, dst) — undirected
+    * (symmetrized here), ids must be members of `vertices`. Returns (id,
+    * component) with component = min id reachable from the vertex (its
+    * own id for singletons). */
   def run(vertices: DataFrame, edges: DataFrame, maxRounds: Int = 30): DataFrame =
     run(vertices, edges, maxRounds, (_, _, _) => ())
 
   /** As [[run]], with a per-round observer `(round, seconds, changed)` —
     * the measurement hook ScaleSmoke uses to report rounds taken and
     * per-round wall time at 10M+ edges (no behavior change; the default
-    * overload passes a no-op). */
+    * overload passes a no-op). The driver path runs no rounds: it calls
+    * neither `onRound` nor checks `maxRounds`. */
   def run(vertices: DataFrame, edges: DataFrame, maxRounds: Int,
           onRound: (Int, Double, Long) => Unit): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
+    // reread by every round and by the driver path's collect; never
+    // recompute the pair join
+    val symObs = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true) // reread every round; never recompute the pair join
+      .observe(EDGE_METRIC, count(lit(1)).as("rows"))
+    val sym = symObs.localCheckpoint(true)
+    val edgeRows = metric(symObs, EDGE_METRIC, "edge checkpoint").getLong(0)
+    val threshold =
+      vertices.queryExecution.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    // the result never reads the edge copy again, which would otherwise
+    // sit in block-manager storage until session end, accumulating across
+    // invocations
+    try
+      if (edgeRows * ROW_BYTES <= threshold) driverLabels(vertices, sym)
+      else rounds(vertices, sym, maxRounds, onRound, threshold)
+    finally dropCheckpoint(sym)
+  }
+
+  /** Collects one direction of each edge (its src < dst row; self-loops
+    * join nothing) and labels by union-find. Ids map to their rank among
+    * the sorted distinct edge ends, so linking the larger root under the
+    * smaller keeps every root its component's min id. Only vertices whose
+    * label is not their own id enter the broadcast table; every other
+    * vertex keeps its own id through the coalesce. */
+  private def driverLabels(vertices: DataFrame, sym: DataFrame): DataFrame = {
+    val es = sym.filter(col("src") < col("dst"))
+      .select(col("src").cast("long"), col("dst").cast("long"))
+      .observe(METRIC, lit(0L).as("round"))
+      .collect()
+    val src = es.map(_.getLong(0))
+    val dst = es.map(_.getLong(1))
+    val ends = src ++ dst
+    java.util.Arrays.sort(ends)
+    var m = 0
+    var i = 0
+    while (i < ends.length) {
+      if (m == 0 || ends(i) != ends(m - 1)) { ends(m) = ends(i); m += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(ends, m)
+    val parent = Array.range(0, ids.length)
+    def find(v: Int): Int = {
+      var x = v
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    i = 0
+    while (i < src.length) {
+      val a = find(java.util.Arrays.binarySearch(ids, src(i)))
+      val b = find(java.util.Arrays.binarySearch(ids, dst(i)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      i += 1
+    }
+    val labels = new java.util.ArrayList[Row]()
+    i = 0
+    while (i < ids.length) {
+      val r = find(i)
+      if (r != i) labels.add(Row(ids(i), ids(r)))
+      i += 1
+    }
+    val table = vertices.sparkSession.createDataFrame(labels,
+      StructType(Seq(StructField("id", LongType, false), StructField("component", LongType, false))))
+    vertices.select(col("id"))
+      .join(broadcast(table), Seq("id"), "left")
+      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+  }
+
+  private def rounds(vertices: DataFrame, sym: DataFrame, maxRounds: Int,
+                     onRound: (Int, Double, Long) => Unit, threshold: Long): DataFrame = {
     // Round 1 reads `vertices` directly: its labels are the identity map,
     // so there is nothing to checkpoint before the first aggregation.
     var labels = vertices.select(col("id"), col("id").as("component"))
     var labelsCk: DataFrame = null
     // A checkpoint carries no size estimate, so the planner would
     // sort-merge the label table every round. Round 1 counts the vertices;
-    // when the table (ROW_BYTES a row, Spark's own per-row estimate for
-    // two longs) fits under the session's broadcast threshold, later
-    // rounds broadcast it to both joins. Above it they keep the shuffle
-    // join.
+    // when the table (ROW_BYTES a row) fits under the session's broadcast
+    // threshold, later rounds broadcast it to both joins. Above it they
+    // keep the shuffle join.
     var bcast = false
     var round = 0
     var converged = false
@@ -145,21 +242,13 @@ object ConnectedComponents {
       // ONE eager checkpoint; its changed and row counts ride it as an
       // observe() metric, read from the observed plan once it returns
       val observed = jumped.withColumnRenamed("c", "newComp")
-        .observe(METRIC,
+        .observe(METRIC, lit(round + 1L).as("round"),
           count(when(col("newComp") < col("component"), 1)).as("changed"),
           count(lit(1)).as("rows"))
       val doubled = observed.localCheckpoint(true)
-      // The metric sits at the root of the checkpointed plan, above every
-      // node AQE's empty-relation rule can replace, so an empty round
-      // still reports 0 changed. A missing metric fails loudly: reading it
-      // as 0 would stop on a plausible-but-wrong labeling.
-      val (changed, rows) = observed.queryExecution.observedMetrics.get(METRIC)
-        .map(r => (r.getLong(0), r.getLong(1)))
-        .getOrElse(throw new IllegalStateException(
-          s"ConnectedComponents round ${round + 1} reported no $METRIC metric"))
-      if (round == 0)
-        bcast = rows * ROW_BYTES <=
-          vertices.queryExecution.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+      val m = metric(observed, METRIC, s"round ${round + 1}")
+      val changed = m.getAs[Long]("changed")
+      if (round == 0) bcast = m.getAs[Long]("rows") * ROW_BYTES <= threshold
       // the new checkpoint is materialized — the superseded one can go
       if (labelsCk != null) dropCheckpoint(labelsCk)
       labelsCk = doubled
@@ -172,10 +261,6 @@ object ConnectedComponents {
       throw new IllegalStateException(
         s"ConnectedComponents did not converge in $maxRounds rounds — " +
           "the labeling would be plausible-but-wrong clusters; raise maxRounds")
-    // the final labels checkpoint is materialized and self-contained — the
-    // symmetrized edge copy would otherwise sit in block-manager storage
-    // until session end, accumulating across invocations
-    dropCheckpoint(sym)
     labels
   }
 }

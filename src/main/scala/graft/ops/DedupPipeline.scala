@@ -28,7 +28,10 @@ import org.apache.spark.sql.functions._
   *      the clusters — are exact, not LSH-probabilistic.
   *   4. Components give transitive closure: near-dup CHAINS (a~b~c
   *      where a,c are not themselves within k) still collapse to one
-  *      keeper, which pairwise dedup silently misses.
+  *      keeper, which pairwise dedup silently misses. A pair graph that
+  *      fits the broadcast threshold is labeled on the driver in one
+  *      job; a larger one runs the distributed rounds
+  *      (ConnectedComponents).
   *
   * Returns one row per INPUT row: (idCol, keeper) with
   * keeper = min id over the row's full dedup cluster (exact group ∪

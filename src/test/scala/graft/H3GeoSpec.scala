@@ -92,6 +92,26 @@ class H3GeoSpec extends AnyFunSuite {
     assert(exact.toDouble / total > 0.7, s"only $exact/$total exact parent matches")
   }
 
+  test("cellToParent's one mask == the per-digit loop for every (res, parentRes)") {
+    // the digit-by-digit form the mask replaced
+    def loopParent(cell: Long, parentRes: Int): Long = {
+      var out = H3.withResolution(cell, parentRes)
+      var r = parentRes + 1
+      while (r <= 15) { out = H3.withDigit(out, r, 7); r += 1 }
+      out
+    }
+    // seeded cells at every resolution, plus each pentagon's center chain
+    val cells = samplePoints(300).flatMap { case (lat, lon) =>
+      (1 to 15).map(res => H3Geo.latLngToCell(lat, lon, res)) } ++
+      H3Geo.pentagons.flatMap { bc =>
+        Iterator.iterate(H3Geo.res0Cell(bc))(c => H3.cellToChildren(c, H3.resolution(c) + 1).head)
+          .slice(1, 16).toSeq }
+    assert(cells.map(H3.resolution).toSet == (1 to 15).toSet)
+    for (c <- cells; parentRes <- 0 until H3.resolution(c))
+      assert(H3.cellToParent(c, parentRes) == loopParent(c, parentRes),
+        s"${hex(c)} at parent res $parentRes")
+  }
+
   test("every child's center encodes back to that child; compact restores the parent") {
     for ((lat, lon) <- samplePoints(8); res <- Seq(2, 5)) {
       val c = H3Geo.latLngToCell(lat, lon, res)

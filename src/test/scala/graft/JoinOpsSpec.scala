@@ -304,26 +304,51 @@ class JoinOpsSpec extends AnyFunSuite {
     assert(anti.count() == 2000L - semiN && semiN > 0)
   }
 
-  test("connected components == ground truth; 200-hop chain converges via pointer doubling; non-convergence throws") {
+  /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold` set to
+    * `threshold` (None: the default), restoring the default after. */
+  private def withThreshold[T](threshold: Option[Long])(f: => T): T = {
+    threshold.foreach(t => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", t.toString))
+    try f finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  /** CC ground truth by union-find; linking the larger root under the
+    * smaller keeps every root its set's min id. */
+  private def ccTruth(vs: Seq[Long], es: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map(vs.map(v => v -> v): _*)
+    def find(v: Long): Long = if (parent(v) == v) v else find(parent(v))
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    vs.map(v => (v, find(v))).sorted
+  }
+
+  private def ccLabels(vs: Seq[Long], es: Seq[(Long, Long)], maxRounds: Int = 30): Seq[(Long, Long)] = {
     import spark.implicits._
-    import graft.ops.ConnectedComponents
+    graft.ops.ConnectedComponents.run(vs.toDF("id"), es.toDF("src", "dst"), maxRounds)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+  }
+
+  test("connected components == ground truth; 200-hop chain converges via pointer doubling; non-convergence throws") {
     // a 200-node CHAIN (the adversarial case for plain min-propagation —
     // one hop per round without the doubling shortcut), two separate
     // clusters, and singletons
     val chain = (0 until 199).map(i => (i.toLong, (i + 1).toLong))
-    val extra = Seq((500L, 501L), (501L, 502L), (600L, 601L))
-    val edges = (chain ++ extra).toDF("src", "dst")
-    val vertices = ((0 to 199).map(_.toLong) ++ Seq(500L, 501L, 502L, 600L, 601L, 700L, 701L))
-      .toDF("id")
-    val got = ConnectedComponents.run(vertices, edges)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val edges = chain ++ Seq((500L, 501L), (501L, 502L), (600L, 601L))
+    val vertices = (0 to 199).map(_.toLong) ++ Seq(500L, 501L, 502L, 600L, 601L, 700L, 701L)
     val expect = ((0 to 199).map(i => (i.toLong, 0L)) ++
       Seq((500L, 500L), (501L, 500L), (502L, 500L),
         (600L, 600L), (601L, 600L), (700L, 700L), (701L, 701L))).sorted
-    assert(got == expect)
+    // default threshold: labeled on the driver; -1: the pointer-doubling
+    // rounds
+    for (threshold <- Seq(None, Some(-1L)))
+      assert(withThreshold(threshold)(ccLabels(vertices, edges)) == expect, s"threshold $threshold")
     // an insufficient round budget must fail LOUDLY, not return a
-    // plausible-but-wrong labeling
-    intercept[IllegalStateException](ConnectedComponents.run(vertices, edges, maxRounds = 2))
+    // plausible-but-wrong labeling; the driver path runs no rounds
+    withThreshold(Some(-1L)) {
+      intercept[IllegalStateException](ccLabels(vertices, edges, maxRounds = 2))
+    }
+    assert(ccLabels(vertices, edges, maxRounds = 2) == expect)
   }
 
   test("connected components: each round is one localCheckpoint and no count; labels exact with and without broadcast") {
@@ -332,17 +357,6 @@ class JoinOpsSpec extends AnyFunSuite {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.util.QueryExecutionListener
     import scala.jdk.CollectionConverters._
-    // ground truth by union-find; linking the larger root under the
-    // smaller keeps every root its set's min id
-    def truth(vs: Seq[Long], es: Seq[(Long, Long)]): Seq[(Long, Long)] = {
-      val parent = scala.collection.mutable.Map(vs.map(v => v -> v): _*)
-      def find(v: Long): Long = if (parent(v) == v) v else find(parent(v))
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      vs.map(v => (v, find(v))).sorted
-    }
     // a 16-hop chain, a star entered from its leaves, a reversed pair and
     // two isolated vertices
     val es = (0L until 16L).map(i => (i, i + 1)) ++ (101L to 105L).map(l => (l, 100L)) ++
@@ -352,18 +366,18 @@ class JoinOpsSpec extends AnyFunSuite {
     val jobListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    // (action, whether its plan reported the round metric)
-    val actions = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]
+    // (action, the observe() metrics its plan reported)
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[(String, Set[String])]
     val qeListener = new QueryExecutionListener {
       override def onSuccess(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              durationNs: Long): Unit =
-        actions.add((funcName, qe.observedMetrics.contains(ConnectedComponents.METRIC)))
+        actions.add((funcName, qe.observedMetrics.keySet))
       override def onFailure(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = actions.add((s"failed $funcName", false))
+                             exception: Exception): Unit = actions.add((s"failed $funcName", Set.empty))
     }
-    /** Labels, rounds, per-round changed counts, jobs and SQL actions of one run. */
+    /** Labels, per-round changed counts, jobs and SQL actions of one run. */
     def traced(vs: Seq[Long], es: Seq[(Long, Long)]) = {
       val vertices = vs.toDF("id")
       val edges = es.toDF("src", "dst")
@@ -376,46 +390,81 @@ class JoinOpsSpec extends AnyFunSuite {
       val labels = out.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       (labels, changed.toSeq, nJobs, acts)
     }
+    val edgeCk = ("localCheckpoint", Set(ConnectedComponents.EDGE_METRIC))
+    val roundCk = ("localCheckpoint", Set(ConnectedComponents.METRIC))
+    val driverCollect = ("collect", Set(ConnectedComponents.METRIC))
+    // label-table bytes (24 a row) fit under `between`; the symmetrized
+    // edge list's do not, so it runs rounds with broadcast labels
+    val between = vs.size * 24L
+    assert(2 * es.size * 24L > between)
     spark.sparkContext.addSparkListener(jobListener)
     spark.listenerManager.register(qeListener)
     try {
-      for (threshold <- Seq(None, Some("-1"))) {
-        threshold.foreach(spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-        try {
-          val (labels, changed, nJobs, acts) = traced(vs, es)
-          assert(labels == truth(vs, es), s"threshold $threshold")
+      for (threshold <- Seq(None, Some(between), Some(-1L))) withThreshold(threshold) {
+        val (labels, changed, nJobs, acts) = traced(vs, es)
+        assert(labels == ccTruth(vs, es), s"threshold $threshold")
+        if (threshold.isEmpty) {
+          // the driver path: the edge checkpoint and one collect, no rounds
+          assert(acts == Seq(edgeCk, driverCollect) && changed.isEmpty, s"$acts $changed")
+          assert(nJobs <= 2, s"$nJobs jobs")
+        } else {
           val rounds = changed.size
           assert(rounds >= 3 && changed.last == 0L && changed.init.forall(_ > 0L), s"$changed")
           // the edge checkpoint, then one eager checkpoint per round: no
           // count() or any other action
-          assert(acts.map(_._1) == Seq.fill(rounds + 1)("localCheckpoint"), s"threshold $threshold: $acts")
-          assert(acts.map(_._2) == false +: Seq.fill(rounds)(true))
-          if (threshold.isEmpty) {
-            // under the broadcast threshold: the edge checkpoint's job,
-            // round 1's exchange and result jobs, then at most the label
-            // broadcast, the exchange and the result job per later round
-            // (a lazy checkpoint plus count() ran five or six)
+          assert(acts == edgeCk +: Seq.fill(rounds)(roundCk), s"threshold $threshold: $acts")
+          if (threshold.contains(between)) {
+            // broadcast labels: the edge checkpoint's job, round 1's
+            // exchange and result jobs, then at most the label broadcast,
+            // the exchange and the result job per later round (a lazy
+            // checkpoint plus count() ran five or six)
             assert(nJobs <= 1 + 2 + 3 * (rounds - 1), s"$nJobs jobs in $rounds rounds")
           }
-          // isolated vertices only: one round, nothing changes
-          val iso = Seq(7L, 3L, 5L)
-          val (isoLabels, isoChanged, _, isoActs) = traced(iso, Seq.empty)
-          assert(isoLabels == iso.sorted.map(v => (v, v)) && isoChanged == Seq(0L))
-          assert(isoActs == Seq(("localCheckpoint", false), ("localCheckpoint", true)))
-          // empty vertex set: the round's metric still reports (0 changed).
-          // AQE's empty-relation rule replaces an empty subtree together
-          // with any CollectMetrics node inside it, but the round metric
-          // sits at the root of the checkpointed plan, above every node
-          // the rule can replace, so it is never lost (a missing one fails
-          // the run rather than reading as converged)
-          val (emptyLabels, emptyChanged, _, emptyActs) = traced(Seq.empty, Seq.empty)
-          assert(emptyActs == Seq(("localCheckpoint", false), ("localCheckpoint", true)))
-          assert(emptyLabels.isEmpty && emptyChanged == Seq(0L))
-        } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        }
+        // no edges: within any threshold but -1 that is the driver path;
+        // the rounds converge in one round with nothing changed
+        val noEdges = if (threshold.contains(-1L)) Seq(edgeCk, roundCk) else Seq(edgeCk, driverCollect)
+        val noEdgeChanged = if (threshold.contains(-1L)) Seq(0L) else Seq.empty
+        // isolated vertices only
+        val iso = Seq(7L, 3L, 5L)
+        val (isoLabels, isoChanged, _, isoActs) = traced(iso, Seq.empty)
+        assert(isoLabels == iso.sorted.map(v => (v, v)) && isoChanged == noEdgeChanged)
+        assert(isoActs == noEdges, s"threshold $threshold: $isoActs")
+        // empty vertex set: each metric still reports. AQE's empty-relation
+        // rule replaces an empty subtree together with any CollectMetrics
+        // node inside it, but both metrics sit at the root of their
+        // checkpointed plan, above every node the rule can replace, so
+        // they are never lost (a missing one fails the run rather than
+        // reading as converged)
+        val (emptyLabels, emptyChanged, _, emptyActs) = traced(Seq.empty, Seq.empty)
+        assert(emptyActs == noEdges, s"threshold $threshold: $emptyActs")
+        assert(emptyLabels.isEmpty && emptyChanged == noEdgeChanged)
       }
     } finally {
       spark.sparkContext.removeSparkListener(jobListener)
       spark.listenerManager.unregister(qeListener)
+    }
+  }
+
+  test("connected components: driver labeling == round labeling on seeded random graphs") {
+    val rnd = new scala.util.Random(0xCC)
+    // chains, stars, duplicate and reversed edges over a vertex pool with
+    // isolated vertices left over, plus a graph with no edges
+    val graphs = (0 until 6).map { g =>
+      val vs = (0 until 40 + rnd.nextInt(40)).map(_ => rnd.nextInt(1000).toLong).distinct
+      def v() = vs(rnd.nextInt(vs.size))
+      val chain = Seq.fill(3 + rnd.nextInt(12))(v()).sliding(2).map(p => (p.head, p.last)).toSeq
+      val hub = v()
+      val star = Seq.fill(rnd.nextInt(10))((v(), hub))
+      val loose = Seq.fill(rnd.nextInt(15))((v(), v()))
+      val es = chain ++ star ++ loose
+      val dups = es.take(4) ++ es.takeRight(3).map(_.swap)
+      (vs, rnd.shuffle(es ++ dups))
+    } :+ ((1L to 5L), Seq.empty[(Long, Long)])
+    for (((vs, es), g) <- graphs.zipWithIndex) {
+      val want = ccTruth(vs, es)
+      assert(ccLabels(vs, es) == want, s"graph $g on the driver")
+      assert(withThreshold(Some(-1L))(ccLabels(vs, es)) == want, s"graph $g in rounds")
     }
   }
 

@@ -196,6 +196,79 @@ class KernelSpec extends AnyFunSuite {
     assert(math.round(d) == 3944422L)
   }
 
+  test("vincenty distanceFixed's fixed-point exit == the full 20-iteration loop, bit for bit") {
+    // the loop without the exit; also reports whether lambda ever repeated
+    def full(lon1: Double, lat1: Double, lon2: Double, lat2: Double): (Double, Boolean) = {
+      val (a, b, f) = (6378137.0, 6356752.314245, 1.0 / 298.257223563)
+      if (lon1 == lon2 && lat1 == lat2) return (0.0, true)
+      val l = math.toRadians(lon2 - lon1)
+      val u1 = math.atan((1.0 - f) * math.tan(math.toRadians(lat1)))
+      val u2 = math.atan((1.0 - f) * math.tan(math.toRadians(lat2)))
+      val sinU1 = math.sin(u1); val cosU1 = math.cos(u1)
+      val sinU2 = math.sin(u2); val cosU2 = math.cos(u2)
+      var lambda = l
+      var sinSigma = 0.0; var cosSigma = 0.0; var sigma = 0.0
+      var cosSqAlpha = 0.0; var cos2SigmaM = 0.0
+      var repeated = false
+      for (_ <- 0 until 20) {
+        val sinLambda = math.sin(lambda)
+        val cosLambda = math.cos(lambda)
+        sinSigma = math.sqrt(
+          (cosU2 * sinLambda) * (cosU2 * sinLambda) +
+            (cosU1 * sinU2 - sinU1 * cosU2 * cosLambda) *
+            (cosU1 * sinU2 - sinU1 * cosU2 * cosLambda))
+        cosSigma = sinU1 * sinU2 + cosU1 * cosU2 * cosLambda
+        sigma = math.atan2(sinSigma, cosSigma)
+        val sinAlpha = cosU1 * cosU2 * sinLambda / sinSigma
+        cosSqAlpha = 1.0 - sinAlpha * sinAlpha
+        cos2SigmaM = cosSigma - 2.0 * sinU1 * sinU2 / cosSqAlpha
+        val c = f / 16.0 * cosSqAlpha * (4.0 + f * (4.0 - 3.0 * cosSqAlpha))
+        val prev = lambda
+        lambda = l + (1.0 - c) * f * sinAlpha *
+          (sigma + c * sinSigma *
+            (cos2SigmaM + c * cosSigma * (-1.0 + 2.0 * cos2SigmaM * cos2SigmaM)))
+        repeated ||= java.lang.Double.doubleToRawLongBits(lambda) ==
+          java.lang.Double.doubleToRawLongBits(prev)
+      }
+      val uSq = cosSqAlpha * (a * a - b * b) / (b * b)
+      val aa = 1.0 + uSq / 16384.0 * (4096.0 + uSq * (-768.0 + uSq * (320.0 - 175.0 * uSq)))
+      val bb = uSq / 1024.0 * (256.0 + uSq * (-128.0 + uSq * (74.0 - 47.0 * uSq)))
+      val deltaSigma = bb * sinSigma *
+        (cos2SigmaM + bb / 4.0 *
+          (cosSigma * (-1.0 + 2.0 * cos2SigmaM * cos2SigmaM) -
+            bb / 6.0 * cos2SigmaM * (-3.0 + 4.0 * sinSigma * sinSigma) *
+            (-3.0 + 4.0 * cos2SigmaM * cos2SigmaM)))
+      (b * aa * (sigma - deltaSigma), repeated)
+    }
+    val rnd = new scala.util.Random(0x5EED)
+    def lon() = rnd.nextDouble() * 360 - 180
+    def lat() = math.toDegrees(math.asin(rnd.nextDouble() * 2 - 1))
+    def tiny() = (rnd.nextDouble() - 0.5) * 1e-6
+    val kinds: Seq[(String, () => (Double, Double, Double, Double))] = Seq(
+      "random" -> (() => (lon(), lat(), lon(), lat())),
+      "near-antipodal" -> { () =>
+        val (x, y) = (lon(), lat())
+        (x, y, (if (x > 0) x - 180 else x + 180) + rnd.nextDouble() - 0.5, -y + rnd.nextDouble() - 0.5) },
+      "very close" -> { () => val (x, y) = (lon(), lat()); (x, y, x + tiny(), y + tiny()) },
+      "equatorial" -> (() => (lon(), 0.0, lon(), 0.0)),
+      "polar" -> (() => (lon(), 90.0 - rnd.nextDouble() * 1e-3, lon(), -90.0 + rnd.nextDouble() * 1e-3)),
+      "coincident" -> { () => val (x, y) = (lon(), lat()); (x, y, x, y) })
+    for ((kind, gen) <- kinds) {
+      var (exits, runsAll) = (0, 0)
+      for (_ <- 0 until 50000) {
+        val (x1, y1, x2, y2) = gen()
+        val (want, repeated) = full(x1, y1, x2, y2)
+        val got = Vincenty.distanceFixed(x1, y1, x2, y2)
+        assert(java.lang.Double.doubleToLongBits(got) == java.lang.Double.doubleToLongBits(want),
+          s"$kind ($x1, $y1) → ($x2, $y2): $got vs $want")
+        if (repeated) exits += 1 else runsAll += 1
+      }
+      // every kind but the near-antipodal one mostly reaches a fixed point
+      assert(kind == "near-antipodal" || exits > 40000, s"$kind: $exits of 50000 exit early")
+      if (kind == "near-antipodal") assert(runsAll > 0, "no pair ran all 20 iterations")
+    }
+  }
+
   test("distance 0 for contained point") {
     val poly = Geo.boxPolyBL(-119.53125, 33.75, -118.125, 35.15625)
     val p = Geo.point(-118.2437, 34.0522)

@@ -783,12 +783,13 @@ class SpatialJoinSpec extends AnyFunSuite {
         spark.sparkContext.removeSparkListener(jobListener)
       }
     }
-    // radius pinned, so no density count job: one checkpoint, one probe
+    // radius pinned, so no density count job: one checkpoint, whose
+    // observe() metric is the emptiness probe (no isEmpty execution)
     val (geoActs, geoExecs) =
       actions(SpatialJoin.knnGeodesic(pts, qsG, k = 4, initMeters = 100000.0))
-    assert(geoActs == Seq("localCheckpoint", "isEmpty") && geoExecs == 2, (geoActs, geoExecs))
+    assert(geoActs == Seq("localCheckpoint") && geoExecs == 1, (geoActs, geoExecs))
     val (plActs, plExecs) = actions(SpatialJoin.knn(pts, qsP, k = 4, initDeg = 1.0))
-    assert(plActs == Seq("localCheckpoint", "isEmpty") && plExecs == 2, (plActs, plExecs))
+    assert(plActs == Seq("localCheckpoint") && plExecs == 1, (plActs, plExecs))
     // and the answers are the round-1 ones: each query's own cluster
     val got = SpatialJoin.knnGeodesic(pts, qsG, k = 4, initMeters = 100000.0)
       .select("qid", "neighbor_id").as[(Long, Long)].collect()

@@ -149,7 +149,7 @@ object OracleSql {
            |    sinSg, cosSg, sg, cosSqA, c2SM
            |  FROM (
            |   SELECT *, ($F / 16.0 * cosSqA * (4.0 + $F * (4.0 - 3.0 * cosSqA))) AS cc FROM (
-           |    SELECT *, (cosSg - 2.0 * sinU1 * sinU2 / cosSqA) AS c2SM, atan2(sinSg, cosSg) AS sg FROM (
+           |    SELECT *, (CASE WHEN cosSqA = 0.0 THEN 0.0 ELSE cosSg - 2.0 * sinU1 * sinU2 / cosSqA END) AS c2SM, atan2(sinSg, cosSg) AS sg FROM (
            |     SELECT *, (1.0 - sinA * sinA) AS cosSqA FROM (
            |      SELECT *, (cosU1 * cosU2 * sinLam / sinSg) AS sinA FROM (
            |       SELECT *,

@@ -1173,7 +1173,8 @@ object Queries {
   def q63Components(spark: SparkSession, dir: String): DataFrame = {
     val sh = udf((text: String) => simhash32(text))
     // materialize once: both the pair join AND the vertex list read it —
-    // an unmaterialized plan re-scans documents.parquet for the vertices
+    // an unmaterialized plan re-scans documents.parquet for the vertices.
+    // The Hamming join reads this checkpoint as is and takes none of its own.
     val sims = docs(spark, dir).select(col("doc_id").as("id"), sh(col("text")).as("sim"))
       .localCheckpoint(true)
     // hamming <= 1 via 2x16-bit bands (pigeonhole needs bands > k): the

@@ -115,7 +115,9 @@ object Vincenty {
       sigma = math.atan2(sinSigma, cosSigma)
       val sinAlpha = cosU1 * cosU2 * sinLambda / sinSigma
       cosSqAlpha = 1.0 - sinAlpha * sinAlpha
-      cos2SigmaM = cosSigma - 2.0 * sinU1 * sinU2 / cosSqAlpha
+      cos2SigmaM =
+        if (cosSqAlpha == 0.0) 0.0 // equatorial line: 0/0 otherwise
+        else cosSigma - 2.0 * sinU1 * sinU2 / cosSqAlpha
       val c = F / 16.0 * cosSqAlpha * (4.0 + F * (4.0 - 3.0 * cosSqAlpha))
       val lambdaPrev = lambda
       lambda = l + (1.0 - c) * F * sinAlpha *

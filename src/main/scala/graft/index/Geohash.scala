@@ -202,10 +202,6 @@ object Geohash {
   def packCell(lonIdx: Long, latIdx: Long, level: Int): Long =
     (level.toLong << 60) | (lonIdx << 30) | latIdx
 
-  def packedLevel(cell: Long): Int = ((cell >>> 60) & 0xF).toInt
-  def packedLonIdx(cell: Long): Long = (cell >>> 30) & ((1L << 30) - 1)
-  def packedLatIdx(cell: Long): Long = cell & ((1L << 30) - 1)
-
   def packedCellOf(lat: Double, lon: Double, level: Int): Long = {
     val lonCells = 1L << lonBitsFor(level)
     val latCells = 1L << latBitsFor(level)
@@ -224,34 +220,6 @@ object Geohash {
       l += 1
     }
     out
-  }
-
-  /** 3×3 neighbor ring (incl. self) at `level` as packed ids — index
-    * arithmetic (lon wraps, lat clamps at the poles), the engine's
-    * kNN/dwithin candidate primitive. */
-  def packedRing(lat: Double, lon: Double, level: Int): Array[Long] = {
-    val lonCells = 1L << lonBitsFor(level)
-    val latCells = 1L << latBitsFor(level)
-    val c = packedCellOf(lat, lon, level)
-    val li = packedLonIdx(c)
-    val ai = packedLatIdx(c)
-    val out = new Array[Long](9)
-    var n = 0
-    var dy = -1
-    while (dy <= 1) {
-      val ay = ai + dy
-      if (ay >= 0 && ay < latCells) {
-        var dx = -1
-        while (dx <= 1) {
-          val lx = (li + dx + lonCells) % lonCells
-          out(n) = packCell(lx, ay, level)
-          n += 1
-          dx += 1
-        }
-      }
-      dy += 1
-    }
-    if (n == 9) out else java.util.Arrays.copyOf(out, n)
   }
 
   /** u64 → 12-char geohash, 5 bits per char from the LSB end

@@ -985,15 +985,6 @@ private[index] object H3Math {
     h.normalize()
   }
 
-  def rotate60cwIJK(h: IJK): Unit = {
-    // i -> ik, j -> ij, k -> jk
-    val ni = h.i + h.j
-    val nj = h.j + h.k
-    val nk = h.i + h.k
-    h.i = ni; h.j = nj; h.k = nk
-    h.normalize()
-  }
-
   /** 2D line intersection (spec _v2dIntersect). */
   def v2dIntersect(p0x: Double, p0y: Double, p1x: Double, p1y: Double,
                    p2x: Double, p2y: Double, p3x: Double, p3y: Double): (Double, Double) = {

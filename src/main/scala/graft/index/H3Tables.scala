@@ -46,7 +46,6 @@ private[index] object H3Tables {
   def faceAxesAzRads0(f: Int): Double = T.az0(f)
   def pentagonBaseCells: Set[Int] = T.pentSet
   def homeFijk(bc: Int): FaceIJK = T.home(bc)
-  def cellCenterLatLngRad(bc: Int): (Double, Double) = T.bcCenter(bc)
   def baseCellLookup(face: Int, ijk: IJK): Int = T.lookupBc(face, ijk)
   def baseCellRotationLookup(face: Int, ijk: IJK): Int = T.lookupRot(face, ijk)
   def isCwOffset(bc: Int, face: Int): Boolean = T.cwOffset.contains((bc, face))

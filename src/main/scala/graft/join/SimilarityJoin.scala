@@ -31,7 +31,7 @@ object SimilarityJoin {
   /** sims: (id, sim) with `sim` a fingerprint in the low `bits` bits.
     * Returns (id_a, id_b, hamming) for all pairs with hamming ≤ k.
     * Requires bands > k (the pigeonhole) and bands | bits. `metricName`
-    * names the pre-dedup candidate-row observe() metric — callers that
+    * names the pre-refine candidate-row observe() metric — callers that
     * run MORE THAN ONE hamming join per session must pass distinct names
     * (the bench's metric map keeps the last value per name, so a shared
     * name silently clobbers the other join's cost signal). */
@@ -43,32 +43,33 @@ object SimilarityJoin {
     val w = bits / bands
     val mask = (1L << w) - 1
     bandedHammingJoin(sims, simCols = Seq("sim"), nBands = bands,
-      bandKey = b => shiftright(col("sim"), b * w).bitwiseAND(lit(mask)),
+      bandKey = (b, c) => shiftright(c("sim"), b * w).bitwiseAND(lit(mask)),
       hamming = (a, b) => bit_count(a("sim").bitwiseXOR(b("sim"))),
       k = k, metricName = metricName)
   }
 
   /** Shared banded-pigeonhole core of the exact Hamming joins: checkpoint
-    * the fingerprint table once, explode to (id, band, 16-bit key) rows,
-    * equi-join on (band, key) with id_a < id_b, observe the candidate
-    * count, refine with the exact distance fetched from the checkpointed
-    * table, THEN Distinct — dedup runs on the qualifying pairs, never on
-    * the candidate table (the join's biggest intermediate; see the inline
-    * comment). Parameterized over the word columns and the per-band
-    * key/distance expressions so one body serves every fingerprint width
-    * (32/64-bit single-long, 128-bit two-long, and the next rung for
-    * free). */
+    * the fingerprint table once unless it is already a column subset of a
+    * materialization ([[materialized]]), explode to (id, band, 16-bit key)
+    * rows that carry the fingerprint words, equi-join on (band, key) with
+    * id_a < id_b, observe the candidate count, then refine with the exact
+    * distance and the minimal-band guard (see the inline comment), so each
+    * qualifying pair comes out exactly once with no Distinct. Parameterized
+    * over the word columns and the per-band key/distance expressions (each
+    * given a resolver from word name to column) so one body serves every
+    * fingerprint width (32/64-bit single-long, 128-bit two-long, and the
+    * next rung for free). */
   private def bandedHammingJoin(sims: DataFrame, simCols: Seq[String], nBands: Int,
-      bandKey: Int => org.apache.spark.sql.Column,
+      bandKey: (Int, String => org.apache.spark.sql.Column) => org.apache.spark.sql.Column,
       hamming: (String => org.apache.spark.sql.Column, String => org.apache.spark.sql.Column) => org.apache.spark.sql.Column,
       k: Int, metricName: String): DataFrame = {
-    // materialize the fingerprints ONCE (eager, lineage-truncating): the
-    // band union reads them `nBands` times and the refine twice more — an
-    // un-materialized input would re-run the caller's fingerprint UDF and
-    // source scan per read. The blocks live until session end (a lazy
-    // result can't drop them itself — callers running MANY joins per
-    // session own that hygiene; cf. ConnectedComponents.dropCheckpoint).
-    val s = sims.select((col("id") +: simCols.map(col)): _*).localCheckpoint(true)
+    // the self-join reads the fingerprints twice; an un-materialized input
+    // would re-run the caller's fingerprint UDF and source scan per read.
+    // Checkpointed blocks live until session end (a lazy result can't drop
+    // them itself — callers running MANY joins per session own that
+    // hygiene; cf. ConnectedComponents.dropCheckpoint).
+    val cols = sims.select((col("id") +: simCols.map(col)): _*)
+    val s = if (materialized(cols)) cols else cols.localCheckpoint(true)
     // the fingerprint words RIDE the band rows (8-16 bytes each, on a
     // table of n×bands rows) instead of being fetched back by id joins:
     // the former two fetch joins each EXCHANGED the candidate table — the
@@ -81,15 +82,11 @@ object SimilarityJoin {
     // partitions by nBands on BOTH join sides (8 bands × 32 partitions =
     // 256 probe tasks + 256 broadcast-build tasks of ~600 rows each at
     // sf0.1 — measured as the dominant share of q86's join stage, pure
-    // task-launch overhead). Same rows, same candidates; one scan.
-    val bkeyCase = (1 until nBands).foldLeft(
-      when(col("band") === 0, bandKey(0))) { (acc, b) =>
-      acc.when(col("band") === b, bandKey(b))
-    }
-    val banded = s
-      .withColumn("band", explode(array((0 until nBands).map(lit): _*)))
-      .select((col("id") +: col("band") +: bkeyCase.as("bkey") +:
-        simCols.map(col)): _*)
+    // task-launch overhead). Same rows, same candidates; one scan. The
+    // posexplode of the band keys yields (band, key) in one projection.
+    val banded = s.select((col("id") +:
+      posexplode(array((0 until nBands).map(bandKey(_, col)): _*)).as(Seq("band", "bkey")) +:
+      simCols.map(col)): _*)
     // no explicit repartition here: at gate scale the planner broadcasts
     // one banded side (BHJ — zero exchanges), and the probe side inherits
     // the checkpoint's parallel partitions, so the candidate enumeration +
@@ -102,20 +99,45 @@ object SimilarityJoin {
     val cand = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.id") < col("b.id"))
-      .select((col("a.id").as("id_a") +: col("b.id").as("id_b") +:
+      .select((col("a.id").as("id_a") +: col("b.id").as("id_b") +: col("a.band").as("__band") +:
         (simCols.map(c => col(s"a.$c").as(s"__a_$c")) ++
          simCols.map(c => col(s"b.$c").as(s"__b_$c")))): _*)
       .observe(metricName, count(lit(1)).as("rows"))
-    // dedup AFTER the refine, not before: per-band duplicate candidates
-    // cost only extra cheap popcount evaluations, while a pre-refine
-    // Distinct is a full exchange of the CANDIDATE table. The hamming
-    // column is functionally determined by the pair, so the post-filter
-    // Distinct yields the identical unique-pair result.
-    cand
-      .withColumn("hamming", hamming(c => col(s"__a_$c"), c => col(s"__b_$c")))
-      .filter(col("hamming") <= k)
-      .select("id_a", "id_b", "hamming")
-      .distinct()
+    // a pair agreeing on several bands is a candidate once per band; keep
+    // it only from its FIRST agreeing band (no earlier band key agrees,
+    // checked on the carried words, the HammingJoinRewrite guard), so each
+    // pair survives exactly once. This replaces a Distinct after the
+    // refine, whose exchange was a job of its own at every size.
+    val firstBand = (0 until nBands - 1).map { b =>
+      col("__band") <= b ||
+        bandKey(b, c => col(s"__a_$c")) =!= bandKey(b, c => col(s"__b_$c"))
+    }.foldLeft(lit(true))(_ && _)
+    val dist = hamming(c => col(s"__a_$c"), c => col(s"__b_$c"))
+    cand.filter(dist <= k && firstBand).select(col("id_a"), col("id_b"), dist.as("hamming"))
+  }
+
+  /** Whether `df` is a column subset of a materialization: every leaf is
+    * a checkpoint (`LogicalRDD`) or a cached relation, with only filters
+    * and attribute-only projections (renames included) above it. Reading
+    * such a plan twice rescans stored rows and computes nothing again, so
+    * the join needs no checkpoint of its own (DedupPipeline's and q63's
+    * fingerprints are checkpointed by their callers; q61/q86 compute
+    * theirs in a projection and keep the join's checkpoint). */
+  private def materialized(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+    def stored(p: LogicalPlan): Boolean = p match {
+      case _: org.apache.spark.sql.execution.LogicalRDD |
+           _: org.apache.spark.sql.execution.columnar.InMemoryRelation => true
+      case f: Filter => stored(f.child)
+      case pr: Project => pr.projectList.forall {
+          case _: Attribute => true
+          case Alias(_: Attribute, _) => true
+          case _ => false
+        } && stored(pr.child)
+      case _ => false
+    }
+    stored(df.queryExecution.withCachedData)
   }
 
   /** 128-bit EXACT Hamming join — the rung above [[simhashHammingJoin]]
@@ -126,15 +148,16 @@ object SimilarityJoin {
     * width. sims: (id, lo, hi) — two longs per the engine's simhash128.
     * Returns (id_a, id_b, hamming) for all pairs with
     * popcount(lo⊕lo′) + popcount(hi⊕hi′) ≤ k. Same plan shape as the
-    * 64-bit join: band union → equi-join on (band, key) → observe →
-    * exact refine → distinct; candidates are PROVABLY complete. */
+    * 64-bit join: band explode → equi-join on (band, key) → observe →
+    * exact refine with the first-band guard; candidates are PROVABLY
+    * complete. */
   def simhash128HammingJoin(sims: DataFrame, k: Int,
                             metricName: String = "simhash128_join_band_rows"): DataFrame = {
     val bands = 8
     require(bands > k && k >= 0, s"pigeonhole needs bands ($bands) > k ($k) >= 0")
     val mask = (1L << 16) - 1
     bandedHammingJoin(sims, simCols = Seq("lo", "hi"), nBands = bands,
-      bandKey = b => shiftright(if (b < 4) col("lo") else col("hi"), (b % 4) * 16)
+      bandKey = (b, c) => shiftright(if (b < 4) c("lo") else c("hi"), (b % 4) * 16)
         .bitwiseAND(lit(mask)),
       hamming = (a, b) => bit_count(a("lo").bitwiseXOR(b("lo"))) +
         bit_count(a("hi").bitwiseXOR(b("hi"))),

@@ -291,7 +291,9 @@ object SpatialJoin {
     * matter how small the fence. Pass `bits` explicitly to override. */
   def dwithinJoin(points: DataFrame, queries: DataFrame, meters: Double,
                   bits: Int = AUTO_BITS): DataFrame =
-    dwithinPairs(points, queries, meters, bits).select(col("id"), col("qid"))
+    dwithinCandidates(points, queries, meters, bits)
+      .filter(col("meters") < meters)
+      .select(col("id"), col("qid"))
 
   /** Sentinel: derive the grid from the radius ([[bitsForRadius]]). */
   val AUTO_BITS: Int = -1
@@ -319,7 +321,7 @@ object SpatialJoin {
     if (bits == AUTO_BITS) bitsForRadius(meters) else bits
 
   /** Strictly above the longest possible geodesic (~20,038 km), with slack:
-    * a [[dwithinPairs]] pass at this radius provably reaches EVERY point
+    * a [[dwithinCandidates]] pass at this radius provably reaches EVERY point
     * (the cap boxes span the globe and the `< WORLD_METERS` refine drops
     * nothing), so it serves as a complete final kNN round with no
     * dedicated full-scan code path. */
@@ -358,23 +360,23 @@ object SpatialJoin {
     } / 1000.0
 
   /** The exact geodesic kernel as a UDF — ONE definition shared by the
-    * radius rounds' refine and the kNN world round, so the two paths can
-    * never diverge. */
+    * geofence refine and every kNN round, so the paths can never diverge. */
   private val vinUdf = udf((lon: Double, lat: Double, qlon: Double, qlat: Double) =>
-    graft.geom.Vincenty.distanceFixed(lon, lat, qlon, qlat))
+    graft.geom.Vincenty.distanceFixed(lon, lat, qlon, qlat)).withName("vincenty")
 
-  /** [[dwithinJoin]] candidates + exact Vincenty refine, keeping the
-    * distance: (id, qid, meters) with meters < the cutoff. Shared by the
-    * geofence join and the geodesic kNN's radius rounds. */
-  private[join] def dwithinPairs(points: DataFrame, queries: DataFrame,
-                                 meters: Double, bits: Int): DataFrame = {
+  /** [[dwithinJoin]] candidates that pass the cap-box filter, with their
+    * Vincenty distance: (id, qid, meters), a superset of the pairs with
+    * meters < the radius (the box contains the disk). The kNN rounds rank
+    * these directly, so each candidate's distance is computed once; a
+    * `meters <` filter on top is pushed into the join condition while the
+    * projection keeps its own copy of the UDF, i.e. two calls a pair. */
+  private def dwithinCandidates(points: DataFrame, queries: DataFrame,
+                                meters: Double, bits: Int): DataFrame =
     dwithinCellJoin(points, queries, meters, bits)
       .filter(col("lon") >= col("minx") && col("lon") <= col("maxx") &&
         col("lat") >= col("miny") && col("lat") <= col("maxy"))
-      .withColumn("meters", vinUdf(col("lon"), col("lat"), col("qlon"), col("qlat")))
-      .filter(col("meters") < meters)
-      .select(col("id"), col("qid"), col("meters"))
-  }
+      .select(col("id"), col("qid"),
+        vinUdf(col("lon"), col("lat"), col("qlon"), col("qlat")).as("meters"))
 
   /** The raw cell-keyed candidate join (pre box-filter, pre refine) — the
     * row count that actually prices the join at a given grid granularity
@@ -418,11 +420,12 @@ object SpatialJoin {
   /** Exact GEODESIC kNN: for each query (qid, qlon, qlat), the k nearest
     * points by Vincenty distance, ties by id — (qid, rank, neighbor_id).
     *
-    * Radius rounds ([[knnRounds]]): round r gathers all points strictly
-    * within the current radius (the cap-box candidates are a PROVEN
-    * superset of the radius disk), and a query is complete once it has ≥ k
-    * of them — every excluded point is ≥ radius away, strictly beyond the
-    * kth candidate, so the local top-k is the global top-k. Incomplete
+    * Radius rounds ([[knnRounds]]): round r ranks the cap-box candidates
+    * (a PROVEN superset of the radius disk) by their one Vincenty
+    * distance, and a query is complete once its k nearest all lie strictly
+    * within the current radius — every point outside the box is ≥ radius
+    * away, strictly beyond the kth candidate, so the local top-k is the
+    * global top-k. Incomplete
     * queries (sparse neighborhoods) escalate the radius ×4 for `rounds`
     * rounds; stragglers finish with a WORLD-radius round through the same
     * cell-keyed path (candidates are every point — complete by
@@ -437,7 +440,7 @@ object SpatialJoin {
                   bits: Int = AUTO_BITS): DataFrame =
     knnRounds(queries.select("qid", "qlon", "qlat"), k, "meters",
       if (initMeters == AUTO_RADIUS) autoInitMeters(points, k) else initMeters, rounds,
-      (qs, radius) => dwithinPairs(points, qs, radius, bits),
+      (qs, radius) => (dwithinCandidates(points, qs, radius, bits), radius),
       // world round without the box/radius refines: they exclude nothing
       // in-domain, and skipping them keeps out-of-domain coordinates (e.g.
       // [0,360) longitudes — cellCols clamps them, Vincenty is periodic)
@@ -451,12 +454,16 @@ object SpatialJoin {
   private[graft] val KNN_METRIC = "graft_knn_open"
 
   /** The radius-round loop of [[knnGeodesic]] and [[knn]]: `queries` is
-    * (key, qlon, qlat), `round(qs, radius)` every (key, id, `dist`) pair
-    * with `dist` < radius, `world(qs)` every pair; returns (key, rank,
-    * neighbor_id, `dist`). A round ranks its candidates by (key; dist, id)
-    * together with one sentinel per open query (null id, +∞ distance),
-    * which survives `rank ≤ k` exactly when its query has fewer than k
-    * candidates — so ONE eager `localCheckpoint` yields both the solved
+    * (key, qlon, qlat); `round(qs, radius)` gives (key, id, `dist`)
+    * candidates, a superset of every pair within the radius, and the
+    * `dist` value at the radius (the cutoff); `world(qs)` gives every
+    * pair; returns (key, rank, neighbor_id, `dist`). A round ranks its
+    * candidates by (key; dist, id) together with one sentinel per open
+    * query (null id, the cutoff as its distance; a null id sorts first
+    * among equal distances), which survives `rank ≤ k` exactly when its
+    * query has fewer than k candidates strictly inside the radius: the
+    * candidates at or past the cutoff, which a superset may hold, rank
+    * behind it. So ONE eager `localCheckpoint` yields both the solved
     * top-k rows and the next round's queries (the surviving sentinels carry
     * their coordinates). The surviving sentinels are counted by an
     * observe() metric on that checkpoint ([[KNN_METRIC]]), so ending the
@@ -467,7 +474,7 @@ object SpatialJoin {
     * at 2×2 cells) pairs every point with every open query exactly once. */
   private def knnRounds(queries: DataFrame, k: Int, dist: String,
                         initRadius: Double, rounds: Int,
-                        round: (DataFrame, Double) => DataFrame,
+                        round: (DataFrame, Double) => (DataFrame, Double),
                         world: DataFrame => DataFrame): DataFrame = {
     val Seq(key, qlon, qlat) = queries.columns.toSeq
     val w = Window.partitionBy(key).orderBy(col(dist).asc, col("id").asc)
@@ -481,12 +488,15 @@ object SpatialJoin {
     var acc = Seq.empty[DataFrame]
     var r = 0
     while (open && r < rounds) {
-      val cand = round(remaining, radius).select(col(key), col("id"), col(dist))
+      val (pairs, cutoff) = round(remaining, radius)
+      val cand = pairs.select(col(key), col("id"), col(dist))
       val sentinels = remaining.select(col(key),
         lit(null).cast(cand.schema("id").dataType).as("id"),
-        lit(Double.PositiveInfinity).as(dist), col(qlon), col(qlat))
-      // n counts the non-sentinel rows among a query's top k (the window
-      // shares the rank window's partitioning, so it adds no exchange)
+        lit(cutoff).as(dist), col(qlon), col(qlat))
+      // n counts the non-sentinel rows among a query's top k: k of them
+      // exactly when the sentinel ranked past k, i.e. all k lie inside the
+      // radius (the window shares the rank window's partitioning, so it
+      // adds no exchange)
       val observed = ranked(cand.unionByName(sentinels, allowMissingColumns = true))
         .withColumn("n", count(col("id")).over(Window.partitionBy(key)))
         .observe(KNN_METRIC, count(when(col("id").isNull, 1)).as("open"))
@@ -578,7 +588,8 @@ object SpatialJoin {
         .withColumn("dist2", d2)
     knnRounds(queries.select("query_id", "qlon", "qlat"), k, "dist2",
       if (initDeg == AUTO_RADIUS) autoInitDeg(points, k) else initDeg, rounds,
-      (qs, radius) => pairs(qs, radius, bits).filter(col("dist2") < lit(radius * radius)),
+      (qs, radius) =>
+        (pairs(qs, radius, bits).filter(col("dist2") < lit(radius * radius)), radius * radius),
       qs => pairs(qs, WORLD_DEG, AUTO_BITS))
   }
 

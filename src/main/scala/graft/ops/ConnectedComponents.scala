@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -9,20 +10,24 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * dedup CLUSTERS with a deterministic keeper (component = min member id,
   * which IS the keeper id under the engine's min-id-keeper convention).
   *
-  * Two paths, chosen by the input size. The symmetrized edge list is
-  * checkpointed once, and its row count rides that checkpoint as an
-  * observe() metric (`graft_cc_edges`), so measuring it runs no job.
+  * Two paths, chosen by one bounded collect ([[labels]]) that keeps the
+  * edge rows it computed and brings at most cap + 1 of them to the
+  * driver, cap being the rows whose symmetrized copy (ROW_BYTES a row,
+  * both directions) fits under the session's
+  * `spark.sql.autoBroadcastJoinThreshold`.
   *
-  * Driver path: when the edge rows (ROW_BYTES a row) fit under the
-  * session's `spark.sql.autoBroadcastJoinThreshold`, the edges are
-  * collected once and labeled on the driver by union-find over primitive
-  * arrays, and the vertices are left-joined to the broadcast label table.
-  * One job (the collect) instead of a job-bound round loop: at benchmark
-  * size (geobench `geoq_stream_neardup`, 1,145 pairs, traced) the rounds
-  * cost 8 jobs and 0.42 s a call, the driver path 1 job and 0.05 s. A
-  * threshold of −1 always takes the round path.
+  * Driver path: up to cap rows came back, which is all of them. They are
+  * labeled by union-find over primitive arrays, and the non-identity
+  * labels become a broadcast table. The collect is the path's only Spark
+  * execution: at benchmark size (geobench `geoq_stream_neardup`, 1,145
+  * pairs, traced) the rounds cost 8 jobs and 0.42 s a call, against 1 job
+  * and 0.05 s for collecting and labeling an already materialized edge
+  * list. A threshold of −1 skips the collect and always takes the round
+  * path.
   *
-  * Round path: min-label propagation with a POINTER-JUMPING shortcut each
+  * Round path: cap + 1 rows came back. The rounds read the kept rows, so
+  * the edge plan is not evaluated again, symmetrized into one checkpoint.
+  * Min-label propagation with a POINTER-JUMPING shortcut each
   * round (hash-to-min family, cf. Kiveris et al. "Connected Components in
   * MapReduce and Beyond", SOCC 2014): every round each vertex takes the
   * min of (its label, its neighbors' labels) and then follows the label
@@ -66,12 +71,15 @@ object ConnectedComponents {
     * labels are far smaller than their edges. */
   private val JUMPS = 1
 
-  /** Name of the edge checkpoint's observe() metric: (rows), the
-    * symmetrized edge rows. */
+  /** Name of the edge-count observe() metric: (rows), the input's edge
+    * rows, one direction as given. The bounded collect reports it, which
+    * reads every row on the driver path; on the round path the edge
+    * checkpoint reports the full count after it (the collect stopped at
+    * cap + 1). */
   private[graft] val EDGE_METRIC = "graft_cc_edges"
 
-  /** Name of the path's observe() metric: (round, changed, rows) on each
-    * round's checkpoint; (round = 0) on the driver path's edge collect. Its
+  /** Name of the path's observe() metric: (round = 0) on the bounded
+    * collect, then (round, changed, rows) on each round's checkpoint. Its
     * first column, the last value the bench's observed map keeps, is the
     * path taken: 0 = labeled on the driver, N = N rounds. */
   private[graft] val METRIC = "graft_cc_round"
@@ -82,9 +90,10 @@ object ConnectedComponents {
     * per long). */
   private val ROW_BYTES = 24L
 
-  /** Drop a localCheckpoint's persisted RDD blocks NOW: `Dataset
-    * .unpersist` only talks to the CacheManager, which never saw a
-    * checkpoint, so superseded label copies would otherwise sit in
+  /** Drop the persisted RDD blocks under a localCheckpoint (or a
+    * `bridge.takeAndKeep` result) NOW: `Dataset.unpersist` only talks to
+    * the CacheManager, which never saw them, so superseded label copies
+    * would otherwise sit in
     * block-manager storage until GC-driven cleanup — up to maxRounds full
     * label tables on a big graph. */
   private[graft] def dropCheckpoint(df: DataFrame): Unit =
@@ -94,7 +103,7 @@ object ConnectedComponents {
     }
 
   /** The `name` metric of an executed plan. A missing metric fails
-    * loudly: reading it as 0 would pick a path or stop on a
+    * loudly: reading it as 0 would stop the rounds on a
     * plausible-but-wrong labeling. Each metric sits at the root of its
     * plan, above every node AQE's empty-relation rule can replace, so an
     * empty input still reports it. */
@@ -102,10 +111,9 @@ object ConnectedComponents {
     df.queryExecution.observedMetrics.getOrElse(name,
       throw new IllegalStateException(s"ConnectedComponents $where reported no $name metric"))
 
-  /** vertices: (id), distinct ids; edges: (src, dst) — undirected
-    * (symmetrized here), ids must be members of `vertices`. Returns (id,
-    * component) with component = min id reachable from the vertex (its
-    * own id for singletons). */
+  /** vertices: (id), distinct ids; edges: (src, dst) — undirected, ids
+    * must be members of `vertices`. Returns (id, component) with component
+    * = min id reachable from the vertex (its own id for singletons). */
   def run(vertices: DataFrame, edges: DataFrame, maxRounds: Int = 30): DataFrame =
     run(vertices, edges, maxRounds, (_, _, _) => ())
 
@@ -115,36 +123,47 @@ object ConnectedComponents {
     * overload passes a no-op). The driver path runs no rounds: it calls
     * neither `onRound` nor checks `maxRounds`. */
   def run(vertices: DataFrame, edges: DataFrame, maxRounds: Int,
-          onRound: (Int, Double, Long) => Unit): DataFrame = {
-    // reread by every round and by the driver path's collect; never
-    // recompute the pair join
-    val symObs = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .observe(EDGE_METRIC, count(lit(1)).as("rows"))
-    val sym = symObs.localCheckpoint(true)
-    val edgeRows = metric(symObs, EDGE_METRIC, "edge checkpoint").getLong(0)
+          onRound: (Int, Double, Long) => Unit): DataFrame =
+    vertices.select(col("id"))
+      .join(labels(vertices, edges, maxRounds, onRound), Seq("id"), "left")
+      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+
+  /** The non-identity labels: (id, component) for exactly the vertices
+    * whose component is not their own id; every other vertex is its own
+    * component. Same inputs as [[run]], which left-joins the vertices to
+    * this table; a caller that holds its own vertex-keyed rows can join
+    * them to it directly.
+    *
+    * One bounded collect of the edges (`bridge.takeAndKeep`) keeps the
+    * rows it computed and brings at most cap + 1 of them to the driver,
+    * cap = threshold / (2 · ROW_BYTES): the symmetrized list the rounds
+    * read counts ROW_BYTES a row against the threshold. Up to cap rows came
+    * back complete and are labeled on the driver; cap + 1 rows take the
+    * rounds, which read the kept rows, so the edge plan (typically a pair
+    * join) is evaluated once either way. The kept blocks are released
+    * before this returns. A threshold of −1 skips the collect and always
+    * runs the rounds. */
+  def labels(vertices: DataFrame, edges: DataFrame, maxRounds: Int = 30,
+             onRound: (Int, Double, Long) => Unit = (_, _, _) => ()): DataFrame = {
     val threshold =
       vertices.queryExecution.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    // the result never reads the edge copy again, which would otherwise
-    // sit in block-manager storage until session end, accumulating across
-    // invocations
+    val oneDir = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    if (threshold < 0) return rounds(vertices, oneDir, maxRounds, onRound, threshold)
+    val cap = math.min(threshold / (2 * ROW_BYTES), Int.MaxValue - 1L).toInt
+    val (es, kept) = org.apache.spark.sql.graft.bridge.takeAndKeep(
+      oneDir.observe(EDGE_METRIC, count(lit(1)).as("rows"))
+        .observe(METRIC, lit(0L).as("round")), cap + 1)
     try
-      if (edgeRows * ROW_BYTES <= threshold) driverLabels(vertices, sym)
-      else rounds(vertices, sym, maxRounds, onRound, threshold)
-    finally dropCheckpoint(sym)
+      if (es.length <= cap) driverLabels(vertices.sparkSession, es)
+      else rounds(vertices, kept, maxRounds, onRound, threshold)
+    finally dropCheckpoint(kept)
   }
 
-  /** Collects one direction of each edge (its src < dst row; self-loops
-    * join nothing) and labels by union-find. Ids map to their rank among
-    * the sorted distinct edge ends, so linking the larger root under the
-    * smaller keeps every root its component's min id. Only vertices whose
-    * label is not their own id enter the broadcast table; every other
-    * vertex keeps its own id through the coalesce. */
-  private def driverLabels(vertices: DataFrame, sym: DataFrame): DataFrame = {
-    val es = sym.filter(col("src") < col("dst"))
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .observe(METRIC, lit(0L).as("round"))
-      .collect()
+  /** Labels the collected edge rows by union-find. Ids map to their rank
+    * among the sorted distinct edge ends, so linking the larger root under
+    * the smaller keeps every root its component's min id. Only ids whose
+    * label is not their own enter the (broadcast) table. */
+  private def driverLabels(spark: SparkSession, es: Array[InternalRow]): DataFrame = {
     val src = es.map(_.getLong(0))
     val dst = es.map(_.getLong(1))
     val ends = src ++ dst
@@ -176,15 +195,30 @@ object ConnectedComponents {
       if (r != i) labels.add(Row(ids(i), ids(r)))
       i += 1
     }
-    val table = vertices.sparkSession.createDataFrame(labels,
-      StructType(Seq(StructField("id", LongType, false), StructField("component", LongType, false))))
-    vertices.select(col("id"))
-      .join(broadcast(table), Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+    broadcast(spark.createDataFrame(labels,
+      StructType(Seq(StructField("id", LongType, false), StructField("component", LongType, false)))))
   }
 
-  private def rounds(vertices: DataFrame, sym: DataFrame, maxRounds: Int,
+  /** The round path: symmetrizes the edges into one checkpoint, read by
+    * every round and dropped once the labels are materialized, and returns
+    * the non-identity labels. */
+  private def rounds(vertices: DataFrame, edges: DataFrame, maxRounds: Int,
                      onRound: (Int, Double, Long) => Unit, threshold: Long): DataFrame = {
+    // both directions from ONE read of the edges; the input's row count
+    // (half the symmetrized rows) rides the checkpoint's root
+    val symObs = edges
+      .select(explode(array(struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .observe(EDGE_METRIC, (count(lit(1)) / 2).cast("long").as("rows"))
+    val sym = symObs.localCheckpoint(true)
+    try propagate(vertices, sym, maxRounds, onRound, threshold)
+      .filter(col("component") =!= col("id"))
+    finally dropCheckpoint(sym)
+  }
+
+  private def propagate(vertices: DataFrame, sym: DataFrame, maxRounds: Int,
+                        onRound: (Int, Double, Long) => Unit, threshold: Long): DataFrame = {
     // Round 1 reads `vertices` directly: its labels are the identity map,
     // so there is nothing to checkpoint before the first aggregation.
     var labels = vertices.select(col("id"), col("id").as("component"))

@@ -39,26 +39,37 @@ import org.apache.spark.sql.functions._
   */
 object DedupPipeline {
 
+  /** Three Spark executions, counting the caller's action:
+    *   1. one eager checkpoint of (id, rep, sim): the normalized key and
+    *      the per-key min-id rep in ONE shuffle (window min, no
+    *      self-join), with the fingerprint computed only on rep rows
+    *      (id == rep) and the text dropped. The Hamming join reads its
+    *      (id, sim) rows as a column subset of this materialization, so it
+    *      takes no checkpoint of its own; the keeper join reads (id, rep).
+    *   2. connected components' bounded collect of the pair list
+    *      ([[ConnectedComponents.labels]]), which evaluates the Hamming
+    *      join; above the broadcast threshold the rounds follow.
+    *   3. the caller's action on the result: each row's rep left-joined to
+    *      the non-identity label table, keeper = coalesce(component, rep).
+    */
   def run(docs: DataFrame, idCol: String, textCol: String, k: Int = 3,
           metricName: String = "dedup_pipeline_band_rows"): DataFrame = {
     val sh = udf((t: String) => graft.Queries.simhash64(t))
-    // normalized key + per-key min-id rep in ONE shuffle (window min,
-    // no self-join); materialized once — read again by the final join
     val withRep = Normalize.withKey(
         docs.select(col(idCol).as("id"), col(textCol).as("text")), "text")
       .withColumn("rep", min(col("id")).over(Window.partitionBy("key_md5")))
+      .select(col("id"), col("rep"),
+        // one fingerprint per exact-dup group, over the normalized text
+        when(col("id") === col("rep"), sh(Normalize.normKey(col("text")))).as("sim"))
       .localCheckpoint(true)
-    // one fingerprint per exact-dup group, over the normalized text
-    val sims = withRep.filter(col("id") === col("rep"))
-      .select(col("id"), sh(Normalize.normKey(col("text"))).as("sim"))
+    val sims = withRep.filter(col("id") === col("rep")).select(col("id"), col("sim"))
     val pairs = graft.join.SimilarityJoin
       .simhashHammingJoin(sims, k = k, bits = 64, bands = 4,
         metricName = metricName)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-    val comps = ConnectedComponents.run(sims.select("id"), pairs)
+    val labels = ConnectedComponents.labels(sims.select("id"), pairs)
       .withColumnRenamed("id", "rep")
-    withRep.select(col("id"), col("rep"))
-      .join(comps, "rep")
-      .select(col("id").as(idCol), col("component").as("keeper"))
+    withRep.join(labels, Seq("rep"), "left")
+      .select(col("id").as(idCol), coalesce(col("component"), col("rep")).as("keeper"))
   }
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.core.{Entity, GeoqException}
 import graft.geom._
-import graft.index.{Geohash, H3, H3Geo, Hilbert}
+import graft.index.{Geohash, H3, H3Geo}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.locationtech.jts.geom.{Geometry, Point, Polygon}
 
@@ -324,25 +324,6 @@ object GeoOps {
         .getOrElse(throw GeoqException("Indeterminate distance"))
       (f.rowId, f.subIdx, s"${Num.rust(d)}\t${f.raw}")
     }
-  }
-
-  // ---- spatial clustering ----
-
-  /** Hilbert-clustered ordering: global sort by the reference's u32 curve of
-    * each feature's bbox center scaled into the dataset extent
-    * (`src/geoq/fgb/hilbert.rs:180-233`). Two-pass: extent agg, then
-    * range-partitioned sort — Spark's native global sort shuffle. */
-  def hilbertSorted(feats: Dataset[FeatureRow]): Dataset[FeatureRow] = {
-    import feats.sparkSession.implicits._
-    import org.apache.spark.sql.functions._
-    val (minX, minY, maxX, maxY) = bboxAll(feats)
-    val idx = feats.map { f =>
-      val (bMinX, bMinY, bMaxX, bMaxY) = Geo.bbox(Geo.fromWkb(f.wkb))
-      val h = Hilbert.hilbertBbox((bMinX + bMaxX) / 2.0, (bMinY + bMaxY) / 2.0,
-        minX, minY, maxX, maxY)
-      (h, f)
-    }.toDF("h", "f")
-    idx.orderBy(col("h")).select("f.*").as[FeatureRow]
   }
 
   def entityOf(f: FeatureRow): Entity =

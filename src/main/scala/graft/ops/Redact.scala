@@ -36,13 +36,6 @@ object Redact {
   val PHONE = "\\+[0-9][0-9.-]+[0-9]"
   val IP = "[0-9]+\\.[0-9]+\\.[0-9]+\\.[0-9]+"
 
-  def redactCol(text: Column): Column =
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(text, EMAIL, "<EMAIL>"),
-        PHONE, "<PHONE>"),
-      IP, "<IP>")
-
   /** Per-doc redaction + audit counts. Each count is taken at its
     * stage of the chain (emails on the original text, phones after
     * email masking, IPs after phone masking), so the counts record

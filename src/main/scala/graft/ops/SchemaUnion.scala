@@ -1,8 +1,6 @@
 package graft.ops
 
 import graft.geom._
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
 
 /** FGB-style property-schema inference: widening type-union aggregation over
   * all features' properties (reference `src/geoq/fgb/header.rs:63-129`,
@@ -10,10 +8,9 @@ import org.apache.spark.sql.expressions.Aggregator
   *
   * Lattice: first-seen type wins; Long+Double conflict widens to Double;
   * any other conflict widens to Json; nulls are skipped (column simply
-  * absent for that row). Arrays/objects are Json. Expressed as a typed
-  * `Aggregator[String, Map, Map]` — merge is associative/commutative, so
-  * Spark runs it with map-side partial aggregation (the distributed form of
-  * the reference's single pass).
+  * absent for that row). Arrays/objects are Json. [[mergeMaps]] is
+  * associative/commutative, so a fold in any order (FgbIO's header pass)
+  * gives the same schema.
   */
 object SchemaUnion {
   sealed trait PropType { def name: String }
@@ -64,24 +61,4 @@ object SchemaUnion {
     Json.parseObject(propsJson).fields.flatMap { case (k, v) =>
       of(v).map(t => k -> t.name)
     }.toMap
-
-  /** props-JSON column → inferred column schema. */
-  val aggregator: Aggregator[String, Map[String, String], Map[String, String]] =
-    new Aggregator[String, Map[String, String], Map[String, String]] {
-      def zero: Map[String, String] = Map.empty
-      def reduce(buf: Map[String, String], props: String): Map[String, String] =
-        mergeMaps(buf, typesOf(props))
-      def merge(a: Map[String, String], b: Map[String, String]): Map[String, String] =
-        mergeMaps(a, b)
-      def finish(r: Map[String, String]): Map[String, String] = r
-      def bufferEncoder: Encoder[Map[String, String]] =
-        Encoders.kryo[Map[String, String]]
-      def outputEncoder: Encoder[Map[String, String]] =
-        Encoders.kryo[Map[String, String]]
-    }
-
-  def inferSchema(props: Dataset[String]): Map[String, String] = {
-    import props.sparkSession.implicits._
-    props.select(aggregator.toColumn).head()
-  }
 }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Minimal visibility bridge: `Column <-> catalyst Expression` converters
   * are `private[sql]` in Spark 4, so custom native expressions (the usual
   * extension mechanism — same trick as Sedona/Frameless) need a one-liner
-  * inside the sql package. Nothing else from the private API is touched.
+  * inside the sql package; so do a few session, plan and execution
+  * helpers below.
   */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -36,6 +37,33 @@ object bridge {
     * of identity hash codes (which can recur after GC). */
   def sessionUUID(spark: org.apache.spark.sql.SparkSession): String =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+
+  /** A bounded collect that keeps what it computed: ONE SQL execution,
+    * reported to listeners as `collect` (so observe() metrics and plan
+    * listeners see it like any action), runs `df` into an RDD persisted
+    * MEMORY_AND_DISK and brings at most `n` of its rows to the driver.
+    * Returns those rows and a DataFrame over the persisted RDD, which
+    * reads the stored partitions and computes, once, any partition the
+    * bounded take left unread (it keeps the lineage, so no recompute of
+    * the shuffle stages the take ran). The caller drops the blocks with
+    * `rdd.unpersist` on the returned plan's `LogicalRDD`. `Dataset
+    * .persist` would give the same reuse, but a plan reading a cached
+    * relation under AQE first runs a whole job to materialize it, and
+    * `withAction`, the helper behind `collect` and `localCheckpoint`, is
+    * private. */
+  def takeAndKeep(df: org.apache.spark.sql.DataFrame, n: Int)
+      : (Array[org.apache.spark.sql.catalyst.InternalRow], org.apache.spark.sql.DataFrame) = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+    val qe = ds.queryExecution
+    val (kept, rows) =
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
+        val rdd = qe.executedPlan.execute().map(_.copy())
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (rdd, rdd.take(n))
+      }
+    (rows, org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(kept, ds, isStreaming = false)))
+  }
 
   /** Drain the async listener bus (`listenerBus` is `private[spark]`) —
     * test assertions over QueryExecutionListener-captured plans need the

@@ -106,4 +106,78 @@ class DedupPipelineSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp.values.toSet === Set(10L), s"chain must collapse (chained=$chained)")
   }
+
+  test("pipeline runs in three SQL executions at benchmark size; keepers == driver-side reference") {
+    val sp = spark
+    import sp.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    // the neardup benchmark's shape: 1,200 captions plus one noisy copy of
+    // each (case/punctuation noise, or the caption repeated)
+    val rnd = new scala.util.Random(11)
+    val n = 1200
+    val originals = (0 until n).map(i => (i.toLong, graft.img.Images.caption(i)))
+    val copies = rnd.shuffle((0 until n).toList).zipWithIndex.map { case (o, j) =>
+      val text = originals(o)._2
+      val noisy = rnd.nextInt(3) match {
+        case 0 => text.split(' ').map(w => if (rnd.nextBoolean()) w.toUpperCase else w + ",").mkString("  ")
+        case 1 => text + " " + text
+        case _ => (text + " " + text + " " + text).toUpperCase
+      }
+      ((n + j).toLong, noisy)
+    }
+    val rows = originals ++ copies
+    val docs = rows.toDF("id", "text").repartition(sp.sparkContext.defaultParallelism).cache()
+    docs.count()
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = actions.add(funcName)
+      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = actions.add(s"failed $funcName")
+    }
+    org.apache.spark.sql.graft.bridge.waitListenerBus(sp)
+    sp.sparkContext.addSparkListener(jobListener)
+    sp.listenerManager.register(qeListener)
+    val got = try {
+      val out = graft.ops.DedupPipeline.run(docs, "id", "text", k = 3).collect()
+      org.apache.spark.sql.graft.bridge.waitListenerBus(sp)
+      out.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    } finally {
+      sp.sparkContext.removeSparkListener(jobListener)
+      sp.listenerManager.unregister(qeListener)
+    }
+    // the (id, rep, sim) checkpoint, connected components' bounded collect
+    // (which runs the Hamming join) and the caller's collect
+    val acts = actions.asScala.toSeq
+    assert(acts == Seq("localCheckpoint", "collect", "collect"), acts)
+    assert(jobs.get <= 7, s"${jobs.get} jobs")
+
+    // reference on the driver: normalized-key groups, all-pairs hamming
+    // <= 3 between group reps, union-find, min id per cluster
+    def norm(t: String) =
+      t.toLowerCase.replaceAll("[^a-z ]", " ").replaceAll(" +", " ").trim
+    val groups = rows.groupBy { case (_, t) => norm(t) }.values.toSeq
+    val reps = groups.map(g => (g.map(_._1).min, Queries.simhash64(norm(g.head._2))))
+    val parent = scala.collection.mutable.Map(reps.map(r => r._1 -> r._1): _*)
+    def find(v: Long): Long = if (parent(v) == v) v else find(parent(v))
+    for (i <- reps.indices; j <- i + 1 until reps.size
+         if java.lang.Long.bitCount(reps(i)._2 ^ reps(j)._2) <= 3) {
+      val (a, b) = (find(reps(i)._1), find(reps(j)._1))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val want = groups.flatMap { g =>
+      val k = find(g.map(_._1).min)
+      g.map { case (id, _) => id -> k }
+    }.toMap
+    assert(got == want)
+    assert(want.values.toSet.size < n, "no near-dup pair joined two groups — weak fixture")
+    docs.unpersist()
+  }
 }

@@ -390,9 +390,11 @@ class JoinOpsSpec extends AnyFunSuite {
       val labels = out.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       (labels, changed.toSeq, nJobs, acts)
     }
+    // the bounded collect reports both metrics whichever path follows; the
+    // round path's edge checkpoint reports the edge count again
+    val boundedCollect = ("collect", Set(ConnectedComponents.EDGE_METRIC, ConnectedComponents.METRIC))
     val edgeCk = ("localCheckpoint", Set(ConnectedComponents.EDGE_METRIC))
     val roundCk = ("localCheckpoint", Set(ConnectedComponents.METRIC))
-    val driverCollect = ("collect", Set(ConnectedComponents.METRIC))
     // label-table bytes (24 a row) fit under `between`; the symmetrized
     // edge list's do not, so it runs rounds with broadcast labels
     val between = vs.size * 24L
@@ -404,26 +406,28 @@ class JoinOpsSpec extends AnyFunSuite {
         val (labels, changed, nJobs, acts) = traced(vs, es)
         assert(labels == ccTruth(vs, es), s"threshold $threshold")
         if (threshold.isEmpty) {
-          // the driver path: the edge checkpoint and one collect, no rounds
-          assert(acts == Seq(edgeCk, driverCollect) && changed.isEmpty, s"$acts $changed")
+          // the driver path: the bounded collect is its one execution
+          assert(acts == Seq(boundedCollect) && changed.isEmpty, s"$acts $changed")
           assert(nJobs <= 2, s"$nJobs jobs")
         } else {
           val rounds = changed.size
           assert(rounds >= 3 && changed.last == 0L && changed.init.forall(_ > 0L), s"$changed")
-          // the edge checkpoint, then one eager checkpoint per round: no
-          // count() or any other action
-          assert(acts == edgeCk +: Seq.fill(rounds)(roundCk), s"threshold $threshold: $acts")
+          // (the bounded collect, unless -1), the edge checkpoint, then one
+          // eager checkpoint per round: no count() or any other action
+          val collects = if (threshold.contains(-1L)) Seq.empty else Seq(boundedCollect)
+          assert(acts == collects ++ (edgeCk +: Seq.fill(rounds)(roundCk)), s"threshold $threshold: $acts")
           if (threshold.contains(between)) {
-            // broadcast labels: the edge checkpoint's job, round 1's
-            // exchange and result jobs, then at most the label broadcast,
-            // the exchange and the result job per later round (a lazy
-            // checkpoint plus count() ran five or six)
-            assert(nJobs <= 1 + 2 + 3 * (rounds - 1), s"$nJobs jobs in $rounds rounds")
+            // broadcast labels: at most two jobs of the bounded collect's
+            // take, the edge checkpoint's job, round 1's exchange and result
+            // jobs, then at most the label broadcast, the exchange and the
+            // result job per later round (a lazy checkpoint plus count() ran
+            // five or six)
+            assert(nJobs <= 2 + 1 + 2 + 3 * (rounds - 1), s"$nJobs jobs in $rounds rounds")
           }
         }
         // no edges: within any threshold but -1 that is the driver path;
         // the rounds converge in one round with nothing changed
-        val noEdges = if (threshold.contains(-1L)) Seq(edgeCk, roundCk) else Seq(edgeCk, driverCollect)
+        val noEdges = if (threshold.contains(-1L)) Seq(edgeCk, roundCk) else Seq(boundedCollect)
         val noEdgeChanged = if (threshold.contains(-1L)) Seq(0L) else Seq.empty
         // isolated vertices only
         val iso = Seq(7L, 3L, 5L)
@@ -444,6 +448,48 @@ class JoinOpsSpec extends AnyFunSuite {
       spark.sparkContext.removeSparkListener(jobListener)
       spark.listenerManager.unregister(qeListener)
     }
+  }
+
+  test("connected components above the collect cap: the edge plan is evaluated once; labels exact") {
+    import spark.implicits._
+    import graft.ops.ConnectedComponents
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    // two chains and a star, spread over four partitions
+    val es = (0L until 30L).map(i => (i, i + 1)) ++ (50L until 70L).map(i => (i, i + 1)) ++
+      (101L to 110L).map(l => (l, 100L))
+    val vs = ((0L to 30L) ++ (50L to 70L) ++ (100L to 110L) ++ Seq(200L, 201L)).distinct
+    val evals = spark.sparkContext.longAccumulator("cc edge rows evaluated")
+    val counted = udf((v: Long) => { evals.add(1); v })
+    val edges = es.toDF("src", "dst").repartition(4)
+      .select(counted(col("src")).as("src"), col("dst"))
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = actions.add(funcName)
+      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = actions.add(s"failed $funcName")
+    }
+    spark.listenerManager.register(qeListener)
+    try {
+      // cap = edge rows − 1: the collect reads every row and still takes
+      // the rounds; cap = 0: it stops after one row and the rounds compute
+      // the partitions it left unread
+      for (threshold <- Seq((es.size - 1) * 48L, 0L)) withThreshold(Some(threshold)) {
+        org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
+        evals.reset(); actions.clear()
+        var rounds = 0
+        val labels = ConnectedComponents.run(vs.toDF("id"), edges, 30, (_, _, _) => rounds += 1)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+        org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
+        assert(labels == ccTruth(vs, es), s"threshold $threshold")
+        assert(rounds > 0, s"threshold $threshold took the driver path")
+        assert(evals.value == es.size.toLong, s"threshold $threshold: ${evals.value} edge-row evaluations")
+        val acts = actions.asScala.toSeq
+        assert(acts.take(2) == Seq("collect", "localCheckpoint") &&
+          acts.drop(2).init.forall(_ == "localCheckpoint") && acts.last == "collect", acts)
+      }
+    } finally spark.listenerManager.unregister(qeListener)
   }
 
   test("connected components: driver labeling == round labeling on seeded random graphs") {

@@ -221,7 +221,7 @@ class KernelSpec extends AnyFunSuite {
         sigma = math.atan2(sinSigma, cosSigma)
         val sinAlpha = cosU1 * cosU2 * sinLambda / sinSigma
         cosSqAlpha = 1.0 - sinAlpha * sinAlpha
-        cos2SigmaM = cosSigma - 2.0 * sinU1 * sinU2 / cosSqAlpha
+        cos2SigmaM = if (cosSqAlpha == 0.0) 0.0 else cosSigma - 2.0 * sinU1 * sinU2 / cosSqAlpha
         val c = f / 16.0 * cosSqAlpha * (4.0 + f * (4.0 - 3.0 * cosSqAlpha))
         val prev = lambda
         lambda = l + (1.0 - c) * f * sinAlpha *
@@ -266,6 +266,20 @@ class KernelSpec extends AnyFunSuite {
       // every kind but the near-antipodal one mostly reaches a fixed point
       assert(kind == "near-antipodal" || exits > 40000, s"$kind: $exits of 50000 exit early")
       if (kind == "near-antipodal") assert(runsAll > 0, "no pair ran all 20 iterations")
+    }
+  }
+
+  test("vincenty distanceFixed on the equator == distanceRaw (no 0/0 NaN)") {
+    // both ends on latitude 0: cosSqAlpha is exactly 0, and the unguarded
+    // cos2SigmaM term was 0/0. Away from antipodes the geodesic runs along
+    // the equator, so the distance is also the arc a·|Δλ|
+    for ((x1, x2, dLon) <- Seq((10.0, 20.0, 10.0), (0.0, 0.001, 0.001),
+                               (-179.5, 179.5, 1.0), (0.0, -90.0, 90.0))) {
+      val fixed = Vincenty.distanceFixed(x1, 0.0, x2, 0.0)
+      val raw = Vincenty.distanceRaw(x1, 0.0, x2, 0.0)
+      val arc = 6378137.0 * math.toRadians(dLon)
+      assert(!fixed.isNaN && math.abs(fixed - raw) <= 1e-7 * raw, s"$x1 → $x2: $fixed vs $raw")
+      assert(math.abs(fixed - arc) <= 1e-9 * arc, s"$x1 → $x2: $fixed vs arc $arc")
     }
   }
 

@@ -220,6 +220,53 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(wrapIds.intersect(wests).nonEmpty, "no across-the-meridian match for query 3")
   }
 
+  test("dwithinJoin and knnGeodesic keep pairs that both lie on the equator") {
+    import spark.implicits._
+    // Null Island and its equatorial neighbours, plus one off-equator point
+    val pts = Seq((1L, 0.0, 0.0), (2L, 0.001, 0.0), (3L, 0.3, 0.0), (4L, -0.2, 0.0), (5L, 0.1, 2.0))
+      .toDF("id", "lon", "lat")
+    val qs = Seq((1L, 0.0, 0.0), (2L, 10.0, 0.0)).toDF("qid", "qlon", "qlat")
+    // expected by plain arithmetic, not by the kernel under test: along the
+    // equator 1° is 111,319.49 m, and 2° of latitude is ~221 km
+    val within = SpatialJoin.dwithinJoin(pts, qs, 50000.0)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(within == Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L)))
+    val knn = SpatialJoin.knnGeodesic(pts, qs.filter(col("qid") === 1L), k = 3, initMeters = 50000.0)
+      .collect().map(r => (r.getInt(1), r.getLong(2))).sorted.toSeq
+    assert(knn == Seq((1, 1L), (2, 2L), (3, 4L)))
+  }
+
+  test("a geodesic kNN round computes each candidate's Vincenty distance once") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val pts = (0 until 400).map(i => (i.toLong, 10.0 + (i % 20) * 0.01, 45.0 + (i / 20) * 0.01))
+      .toDF("id", "lon", "lat")
+    val qs = Seq((1L, 10.1, 45.1), (2L, 10.05, 45.02)).toDF("qid", "qlon", "qlat")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
+    spark.listenerManager.register(listener)
+    try {
+      SpatialJoin.knnGeodesic(pts, qs, k = 5, initMeters = 5000.0).collect()
+      org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val helper = new AdaptiveSparkPlanHelper {}
+    val rounds = plans.asScala.toSeq
+    assert(rounds.size == 1, s"${rounds.size} round checkpoints")
+    val calls = helper.flatMap(rounds.head)(_.expressions.flatMap(_.collect {
+      case u: ScalaUDF if u.udfName.contains("vincenty") => u
+    }))
+    assert(calls.size == 1, s"${calls.size} Vincenty calls in the round plan:\n${rounds.head}")
+  }
+
   test("knnGeodesic == brute force through every path (round-1, escalation, fallback)") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window

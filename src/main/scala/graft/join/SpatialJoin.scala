@@ -12,10 +12,13 @@ import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory
   * The reference's filters are stream × broadcast-query-set semi-joins
   * (`src/geoq/commands/filter.rs:6-29`); at 100 TB the query side may be a
   * full table, so the engine re-expresses the same keep/drop semantics as a
-  * cell-keyed equi-join: explode both sides to covering cells, hash-join on
-  * the cell key, keep each candidate pair in one shared cell, then refine
-  * with the exact JTS predicate. Candidate generation is a pure superset
-  * step — cell-assignment float edges can NOT change results, only costs.
+  * cell-keyed equi-join: explode the box side to its covering cells, key
+  * each point to its one cell, hash-join on the cell key, then refine with
+  * the exact predicate. A point meets a box in at most one cell, so point
+  * joins need no dedup; box×box pairs can share several cells and take a
+  * `distinct`, and the intersects filter collapses repeats in a semi-join.
+  * Candidate generation is a pure superset step — cell-assignment float
+  * edges can NOT change results, only costs.
   *
   * kNN (planar and geodesic) follows the radius-round pattern: gather all
   * points strictly within the current radius through the cell-keyed join,
@@ -48,6 +51,43 @@ object SpatialJoin {
     catch { case scala.util.control.NonFatal(_) => () }
     b
   }
+
+  /** The grid a call runs on, published to [[LAST_BITS_KEY]]: `auto` under
+    * [[AUTO_BITS]], else the pin, which must lie in the [1, 12] range of
+    * every derived grid (a finer pin explodes one world-spanning box into
+    * up to 2^(2·bits) rows; a negative shift or one past 31 wraps the cell
+    * index). */
+  private def gridBits(df: DataFrame, bits: Int)(auto: => Int): Int = {
+    require(bits == AUTO_BITS || (bits >= 1 && bits <= 12),
+      s"grid bits must be AUTO_BITS or in [1, 12], got $bits")
+    publishBits(df, if (bits == AUTO_BITS) auto else bits)
+  }
+
+  /** One row per grid cell that each (minx, miny, maxx, maxy) bbox of
+    * `boxes` touches, keyed (cx, cy). */
+  private def boxCells(boxes: DataFrame, bits: Int): DataFrame = {
+    val (x0, y0) = cellCols(col("minx"), col("miny"), bits)
+    val (x1, y1) = cellCols(col("maxx"), col("maxy"), bits)
+    boxes.withColumn("cx", explode(sequence(x0, x1)))
+      .withColumn("cy", explode(sequence(y0, y1)))
+  }
+
+  /** The candidate step of every point × box join: each (lon, lat) point
+    * keyed to its one cell, equi-joined with the [[boxCells]] of `boxes`
+    * on (cx, cy) plus `keys` — a plain shuffled (or broadcast) hash join in
+    * which a point meets each box row at most once. */
+  private def cellJoin(points: DataFrame, boxes: DataFrame, bits: Int,
+                       keys: Seq[String] = Nil): DataFrame = {
+    val (cx, cy) = cellCols(col("lon"), col("lat"), bits)
+    points.withColumn("cx", cx).withColumn("cy", cy)
+      .join(boxCells(boxes, bits), Seq("cx", "cy") ++ keys)
+  }
+
+  /** The exact refine of a [[cellJoin]]: the point lies in the box, edges
+    * included. */
+  private val inBox: Column =
+    col("lon") >= col("minx") && col("lon") <= col("maxx") &&
+      col("lat") >= col("miny") && col("lat") <= col("maxy")
 
   /** The pure grid formula from box-extent stats (median dx/dy, max
     * dx/dy): cell width ≈ half the median box extent (cost balance: each
@@ -187,9 +227,6 @@ object SpatialJoin {
     b
   }
 
-  private def resolveBoxBits(bits: Int, right: DataFrame): Int =
-    publishBits(right, if (bits == AUTO_BITS) bitsForBoxes(right) else bits)
-
   /** Spatial inner join: `left` (id, lon, lat) points × `right`
     * (rid, minx, miny, maxx, maxy) boxes → (id, rid) pairs where the point
     * intersects the box (inclusive boundary). Cell-keyed: the box side is
@@ -198,46 +235,10 @@ object SpatialJoin {
     * by the exact predicate. The grid adapts to the box table's median
     * extent by default ([[bitsForBoxes]]); pass `bits` to override. */
   def joinPointsInBoxes(left: DataFrame, right: DataFrame,
-                        bits: Int = AUTO_BITS): DataFrame = {
-    val b = resolveBoxBits(bits, right)
-    val (pcx, pcy) = cellCols(col("lon"), col("lat"), b)
-    val pts = left.withColumn("cx", pcx).withColumn("cy", pcy)
-
-    // covering cells of each box: all cells its bbox touches
-    val (bx0, by0) = cellCols(col("minx"), col("miny"), b)
-    val (bx1, by1) = cellCols(col("maxx"), col("maxy"), b)
-    val boxes = right
-      .withColumn("cx", explode(sequence(bx0, bx1)))
-      .withColumn("cy", explode(sequence(by0, by1)))
-
-    pts.join(boxes, Seq("cx", "cy"))
-      .filter(col("lon") >= col("minx") && col("lon") <= col("maxx") &&
-        col("lat") >= col("miny") && col("lat") <= col("maxy"))
+                        bits: Int = AUTO_BITS): DataFrame =
+    cellJoin(left, right, gridBits(right, bits)(bitsForBoxes(right)))
+      .filter(inBox)
       .select(col("id"), col("rid"))
-  }
-
-  /** H3-keyed variant of [[joinPointsInBoxes]] — the north rule's "batched
-    * H3 cell encode UDFs feed a broadcast-or-partitioned PIP join": each
-    * point keys to its H3 cell, each box explodes to the SUPERSET of cells
-    * whose hexagons intersect it (H3Cover.intersectingCells — candidate
-    * completeness: a point inside the box makes its own cell intersect the
-    * box), then the exact predicate refines. Join decisions are identical
-    * to the geohash-keyed path (equivalence-tested in SpatialJoinSpec). */
-  def joinPointsInBoxesH3(left: DataFrame, right: DataFrame, res: Int = 3): DataFrame = {
-    val boxCells = udf((minx: Double, miny: Double, maxx: Double, maxy: Double) =>
-      graft.index.H3Cover.intersectingCells(
-        graft.geom.Geo.boxPolyBL(minx, miny, maxx, maxy), res).toArray)
-    // point side = the 100 TB scan side: native codegen'd expression, not a
-    // boxed UDF (the box side is small and per-box flood work dominates)
-    val pts = left.withColumn("cell",
-      graft.functions.H3CellExpr.h3Cell(col("lat"), col("lon"), res))
-    val boxes = right.withColumn("cell",
-      explode(boxCells(col("minx"), col("miny"), col("maxx"), col("maxy"))))
-    pts.join(boxes, Seq("cell"))
-      .filter(col("lon") >= col("minx") && col("lon") <= col("maxx") &&
-        col("lat") >= col("miny") && col("lat") <= col("maxy"))
-      .select(col("id"), col("rid"))
-  }
 
   /** Rectangle × rectangle intersection join: (id, rid) pairs whose boxes
     * intersect (inclusive edges). BOTH sides explode to their covering
@@ -248,23 +249,12 @@ object SpatialJoin {
   def joinBoxesBoxes(a: DataFrame, b: DataFrame, bits: Int = AUTO_BITS): DataFrame = {
     // grid from the LARGER side's extents (coarser of the two choices,
     // computed in ONE union-agg stats job over both sides)
-    val gb = publishBits(a,
-      if (bits != AUTO_BITS) bits else bitsForBoxSides(a, b))
-    def cells(df: DataFrame) = {
-      val (x0, y0) = cellCols(col("minx"), col("miny"), gb)
-      val (x1, y1) = cellCols(col("maxx"), col("maxy"), gb)
-      df.withColumn("cx", explode(sequence(x0, x1)))
-        .withColumn("cy", explode(sequence(y0, y1)))
-    }
-    val aa = cells(a)
-      .select(col("id"), col("cx"), col("cy"),
-        col("minx").as("aminx"), col("miny").as("aminy"),
-        col("maxx").as("amaxx"), col("maxy").as("amaxy"))
-    val bb = cells(b)
-      .select(col("rid"), col("cx"), col("cy"),
-        col("minx").as("bminx"), col("miny").as("bminy"),
-        col("maxx").as("bmaxx"), col("maxy").as("bmaxy"))
-    aa.join(bb, Seq("cx", "cy"))
+    val gb = gridBits(a, bits)(bitsForBoxSides(a, b))
+    // each side's cells with its id and its bbox under a side prefix
+    def cells(df: DataFrame, id: String, p: String) = boxCells(df, gb).select(
+      Seq(col(id), col("cx"), col("cy")) ++
+        Seq("minx", "miny", "maxx", "maxy").map(c => col(c).as(p + c)): _*)
+    cells(a, "id", "a").join(cells(b, "rid", "b"), Seq("cx", "cy"))
       .filter(col("aminx") <= col("bmaxx") && col("amaxx") >= col("bminx") &&
         col("aminy") <= col("bmaxy") && col("amaxy") >= col("bminy"))
       .select(col("id"), col("rid"))
@@ -311,14 +301,12 @@ object SpatialJoin {
     * 12 is a bounded worst case, 2^20 would be a one-row OOM (same
     * rationale as the SpatialJoinRewrite bits-conf cap). Sub-100 m radii
     * hit the clamp with ~10 km cells — still radius-dominated candidates. */
-  def bitsForRadius(meters: Double): Int = {
-    val rDeg = math.toDegrees(meters / 6300000.0) * 1.02
-    val b = math.floor(math.log(180.0 / rDeg) / math.log(2.0)).toInt
-    math.max(1, math.min(12, b))
-  }
+  def bitsForRadius(meters: Double): Int = bitsForDegrees(capDeg(meters))
 
-  private def resolveBits(bits: Int, meters: Double): Int =
-    if (bits == AUTO_BITS) bitsForRadius(meters) else bits
+  /** The latitude half-extent, in degrees, of a `meters` cap box: the
+    * radius over R = 6,300,000 m (under every WGS84 curvature radius), with
+    * a ×1.02 margin. */
+  private def capDeg(meters: Double): Double = math.toDegrees(meters / 6300000.0) * 1.02
 
   /** Strictly above the longest possible geodesic (~20,038 km), with slack:
     * a [[dwithinCandidates]] pass at this radius provably reaches EVERY point
@@ -373,8 +361,7 @@ object SpatialJoin {
   private def dwithinCandidates(points: DataFrame, queries: DataFrame,
                                 meters: Double, bits: Int): DataFrame =
     dwithinCellJoin(points, queries, meters, bits)
-      .filter(col("lon") >= col("minx") && col("lon") <= col("maxx") &&
-        col("lat") >= col("miny") && col("lat") <= col("maxy"))
+      .filter(inBox)
       .select(col("id"), col("qid"),
         vinUdf(col("lon"), col("lat"), col("qlon"), col("qlat")).as("meters"))
 
@@ -385,9 +372,9 @@ object SpatialJoin {
     * SpatialJoinSpec. */
   private[graft] def dwithinCellJoin(points: DataFrame, queries: DataFrame,
                                      meters: Double, bits: Int): DataFrame = {
-    val b = publishBits(points, resolveBits(bits, meters))
+    val b = gridBits(points, bits)(bitsForRadius(meters))
+    val rDeg = capDeg(meters)
     val boxesOf = udf((qlon: Double, qlat: Double) => {
-      val rDeg = math.toDegrees(meters / 6300000.0) * 1.02
       val miny = math.max(qlat - rDeg, -90.0)
       val maxy = math.min(qlat + rDeg, 90.0)
       val dLon =
@@ -407,14 +394,7 @@ object SpatialJoin {
       .select(col("qid"), col("qlon"), col("qlat"),
         col("b._1").as("minx"), col("b._2").as("miny"),
         col("b._3").as("maxx"), col("b._4").as("maxy"))
-    val (bx0, by0) = cellCols(col("minx"), col("miny"), b)
-    val (bx1, by1) = cellCols(col("maxx"), col("maxy"), b)
-    val boxCells = boxes
-      .withColumn("cx", explode(sequence(bx0, bx1)))
-      .withColumn("cy", explode(sequence(by0, by1)))
-    val (pcx, pcy) = cellCols(col("lon"), col("lat"), b)
-    val pts = points.withColumn("cx", pcx).withColumn("cy", pcy)
-    pts.join(boxCells, Seq("cx", "cy"))
+    cellJoin(points, boxes, b)
   }
 
   /** Exact GEODESIC kNN: for each query (qid, qlon, qlat), the k nearest
@@ -539,7 +519,7 @@ object SpatialJoin {
     * by default ([[bitsForDegrees]]). */
   private[graft] def planarCellJoin(points: DataFrame, queries: DataFrame,
                                     deg: Double, bits: Int): DataFrame = {
-    val b = publishBits(points, if (bits == AUTO_BITS) bitsForDegrees(deg) else bits)
+    val b = gridBits(points, bits)(bitsForDegrees(deg))
     // absolute rounding guard: the box endpoints qlon±deg are ROUNDED
     // floats, so a point could pass the float dist² < deg² filter yet sit
     // a half-ulp (~1.4e-14 at |lon| ≤ 180) outside the rounded box and one
@@ -548,13 +528,9 @@ object SpatialJoin {
     // the float-distance disk at every schedule, which the kNN rounds'
     // completeness proof requires with zero margin otherwise.
     val degW = deg + 1e-12
-    val (bx0, by0) = cellCols(col("qlon") - lit(degW), col("qlat") - lit(degW), b)
-    val (bx1, by1) = cellCols(col("qlon") + lit(degW), col("qlat") + lit(degW), b)
-    val qCells = queries
-      .withColumn("cx", explode(sequence(bx0, bx1)))
-      .withColumn("cy", explode(sequence(by0, by1)))
-    val (pcx, pcy) = cellCols(col("lon"), col("lat"), b)
-    points.withColumn("cx", pcx).withColumn("cy", pcy).join(qCells, Seq("cx", "cy"))
+    cellJoin(points, queries.select(col("*"),
+      (col("qlon") - lit(degW)).as("minx"), (col("qlat") - lit(degW)).as("miny"),
+      (col("qlon") + lit(degW)).as("maxx"), (col("qlat") + lit(degW)).as("maxy")), b)
   }
 
   /** Exact PLANAR kNN of `queries` (query_id, qlon, qlat) among `points`
@@ -605,22 +581,12 @@ object SpatialJoin {
     * one shuffle partition). */
   def joinPointsInBoxesSalted(left: DataFrame, right: DataFrame,
                               bits: Int = AUTO_BITS, salts: Int = 8): DataFrame = {
-    val b = resolveBoxBits(bits, right)
-    val (pcx, pcy) = cellCols(col("lon"), col("lat"), b)
-    val pts = left.withColumn("cx", pcx).withColumn("cy", pcy)
-      // deterministic salt (xxhash64 of id) keeps runs reproducible
-      .withColumn("salt", pmod(xxhash64(col("id")), lit(salts)).cast("int"))
-
-    val (bx0, by0) = cellCols(col("minx"), col("miny"), b)
-    val (bx1, by1) = cellCols(col("maxx"), col("maxy"), b)
-    val boxes = right
-      .withColumn("cx", explode(sequence(bx0, bx1)))
-      .withColumn("cy", explode(sequence(by0, by1)))
-      .withColumn("salt", explode(array((0 until salts).map(lit): _*)))
-
-    pts.join(boxes, Seq("cx", "cy", "salt"))
-      .filter(col("lon") >= col("minx") && col("lon") <= col("maxx") &&
-        col("lat") >= col("miny") && col("lat") <= col("maxy"))
+    require(salts >= 1, s"salts must be >= 1, got $salts")
+    val b = gridBits(right, bits)(bitsForBoxes(right))
+    // deterministic salt (xxhash64 of id) keeps runs reproducible
+    cellJoin(left.withColumn("salt", pmod(xxhash64(col("id")), lit(salts)).cast("int")),
+      right.withColumn("salt", explode(array((0 until salts).map(lit): _*))), b, Seq("salt"))
+      .filter(inBox)
       .select(col("id"), col("rid"))
   }
 

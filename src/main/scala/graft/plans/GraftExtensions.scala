@@ -10,11 +10,18 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * surface with `--conf spark.sql.extensions=graft.plans.GraftExtensions`
   * (or `.withExtensions(new GraftExtensions)`), the standard mechanism for
   * Spark-native libraries. Injects:
-  *  - [[SpatialJoinRewrite]] as an optimizer rule (natural range-predicate
-  *    spatial joins → cell-keyed equi-joins);
+  *  - three optimizer rules: [[SpatialJoinRewrite]] (natural range-predicate
+  *    spatial joins → cell-keyed equi-joins), [[IntervalJoinRewrite]]
+  *    (temporal range joins → bucket-keyed equi-joins) and
+  *    [[HammingJoinRewrite]] (Hamming-distance joins → banded equi-joins);
+  *  - [[HammingJoinStrategy]] as a planner strategy, for the semi and
+  *    anti joins that `EXISTS` / `NOT EXISTS` become only after the
+  *    optimizer's rule batch;
   *  - `h3_cell(lat, lon, res)` as a SQL function backed by the native
   *    codegen'd [[H3CellExpr]], so `spark.sql` users get the icosahedral
-  *    encoder without the DataFrame API.
+  *    encoder without the DataFrame API;
+  *  - `simhash64(text)` as a SQL function, so the Hamming near-dup join is
+  *    writable end to end in SQL.
   *
   * For an ALREADY-RUNNING session (notebooks), [[SpatialPlanner.enable]]
   * and [[SpatialPlanner.registerSql]] install the same pieces at runtime.

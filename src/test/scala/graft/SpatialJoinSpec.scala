@@ -12,24 +12,77 @@ class SpatialJoinSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** (actions, SQL executions that ran jobs, Spark jobs) of running `f`:
+    * the name of every finished QueryExecution action, in order, and the
+    * jobs it started, each of which must run inside a SQL execution. */
+  private def actions(f: => Any): (Seq[String], Int, Int) = {
+    import scala.jdk.CollectionConverters._
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val sqlListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = executions.add(funcName)
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = executions.add(funcName)
+    }
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
+    }
+    org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
+    spark.listenerManager.register(sqlListener)
+    spark.sparkContext.addSparkListener(jobListener)
+    try {
+      f
+      org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
+      val js = jobs.asScala.toSeq
+      assert(js.forall(_.nonEmpty), "a job ran outside any SQL execution")
+      (executions.asScala.toSeq, js.flatten.distinct.size, js.size)
+    } finally {
+      spark.listenerManager.unregister(sqlListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
+  }
+
   test("salted join produces identical pairs on skewed data") {
     import spark.implicits._
     // pathological skew: 90% of points in one tiny hot spot (one cell)
+    val edge = Seq(
+      (90001L, 9.0, 45.5), (90002L, 11.0, 46.0),   // box 1's west edge, NE corner
+      (90003L, 10.0, 45.0), (90004L, -90.0, -45.0), // on cell edges at every grid
+      (90005L, -60.0, 0.0),                         // both: box 2's NE corner, cell corner
+      (90006L, 180.0, 90.0), (90007L, -180.0, -90.0), (90008L, -175.0, -87.0),
+      (90009L, 179.0, 60.0))                        // box 3's NE corner
     val pts = spark.range(5000).map { i =>
       if (i % 10 != 0) (i, 10.001 + (i % 97) * 1e-6, 45.001 + (i % 89) * 1e-6)
       else (i, -170.0 + (i % 340).toDouble, -80.0 + (i % 160).toDouble)
-    }.toDF("id", "lon", "lat")
-    val boxes = Seq(
+    }.toDF("id", "lon", "lat").unionByName(edge.toDF("id", "lon", "lat"))
+    val boxRows = Seq(
       (1L, 9.0, 44.0, 11.0, 46.0),   // covers the hot spot
       (2L, -100.0, -50.0, -60.0, 0.0),
-      (3L, 150.0, 20.0, 179.0, 60.0))
-      .toDF("rid", "minx", "miny", "maxx", "maxy")
+      (3L, 150.0, 20.0, 179.0, 60.0),
+      (4L, 170.0, 80.0, 180.0, 90.0), // touches lon 180 and lat 90
+      (5L, -180.0, -90.0, -175.0, -85.0))
+    val boxes = boxRows.toDF("rid", "minx", "miny", "maxx", "maxy")
+    // lon -90 and 0, lat -45, 0 and 45 are cell edges at every grid >= 2
+    assert(SpatialJoin.bitsForBoxes(boxes) >= 2)
 
     val plain = SpatialJoin.joinPointsInBoxes(pts, boxes)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val salted = SpatialJoin.joinPointsInBoxesSalted(pts, boxes, salts = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(plain == salted)
+    // brute force on the driver: every point against every box
+    val brute = (for {
+      r <- pts.collect().toSeq
+      (rid, x0, y0, x1, y1) <- boxRows
+      (x, y) = (r.getDouble(1), r.getDouble(2))
+      if x >= x0 && x <= x1 && y >= y0 && y <= y1
+    } yield (r.getLong(0), rid)).sorted
+    assert(salted == brute)
+    assert(brute.map(_._1).distinct.count(_ > 90000L) == edge.size, brute.filter(_._1 > 90000L))
     assert(plain.count(_._2 == 1L) > 4000) // the hot cell really is hot
   }
 
@@ -374,14 +427,33 @@ class SpatialJoinSpec extends AnyFunSuite {
     val fixed = SpatialJoin.joinPointsInBoxes(pts, boxes, bits = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(auto == fixed && auto.nonEmpty)
-    // and boxBoxes with mixed sizes stays exact under AUTO
-    val bb = SpatialJoin.joinBoxesBoxes(
-      boxes.withColumnRenamed("rid", "id"), wide)
+    // and boxBoxes with mixed sizes stays exact under AUTO; the extra rows
+    // touch lon ±180 and lat ±90, meet only on an edge or a corner (902's
+    // corner with 952 is on a cell corner too), or overlap over several
+    // cells (902 with 953)
+    val aSide = boxes.withColumnRenamed("rid", "id").unionByName(Seq(
+      (900L, 170.0, 80.0, 180.0, 90.0), (901L, -180.0, -90.0, -175.0, -85.0),
+      (902L, -100.0, -45.0, -60.0, 0.0)).toDF("id", "minx", "miny", "maxx", "maxy"))
+    val bSide = wide.unionByName(Seq(
+      (950L, 179.0, 89.0, 180.0, 90.0), (951L, -175.0, -86.0, -170.0, -80.0),
+      (952L, -60.0, 0.0, -50.0, 5.0), (953L, -95.0, -40.0, -65.0, -5.0))
+      .toDF("rid", "minx", "miny", "maxx", "maxy"))
+    val bb = SpatialJoin.joinBoxesBoxes(aSide, bSide)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val bbFixed = SpatialJoin.joinBoxesBoxes(
-      boxes.withColumnRenamed("rid", "id"), wide, bits = 6)
+    val bbBits = spark.conf.get(SpatialJoin.LAST_BITS_KEY).toInt
+    assert(30.0 > 360.0 / (1 << bbBits), s"902 x 953 overlaps one cell column at bits=$bbBits")
+    val bbFixed = SpatialJoin.joinBoxesBoxes(aSide, bSide, bits = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(bb == bbFixed)
+    // brute force on the driver: every pair, inclusive edges
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+      (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
+    val bruteBB = (for {
+      a <- rows(aSide); b <- rows(bSide)
+      if a._2 <= b._4 && a._4 >= b._2 && a._3 <= b._5 && a._5 >= b._3
+    } yield (a._1, b._1)).sorted
+    assert(bb == bruteBB)
+    assert(Seq((900L, 950L), (901L, 951L), (902L, 952L), (902L, 953L)).forall(bruteBB.contains))
   }
 
   test("adaptive rewrite grid: sub-degree boxes through the NATURAL join get a fine grid (>= bitsForBoxes), results exact") {
@@ -491,10 +563,22 @@ class SpatialJoinSpec extends AnyFunSuite {
     SpatialJoin.joinPointsInBoxes(pts, boxes)
     assert(spark.conf.get(SpatialJoin.LAST_BITS_KEY).toInt ==
       SpatialJoin.bitsForBoxes(boxes))
-    SpatialJoin.dwithinCellJoin(pts,
-      Seq((1L, 10.0, 45.0)).toDF("qid", "qlon", "qlat"), 5000.0, SpatialJoin.AUTO_BITS)
+    val qs = Seq((1L, 10.0, 45.0)).toDF("qid", "qlon", "qlat")
+    SpatialJoin.dwithinCellJoin(pts, qs, 5000.0, SpatialJoin.AUTO_BITS)
     assert(spark.conf.get(SpatialJoin.LAST_BITS_KEY).toInt ==
       SpatialJoin.bitsForRadius(5000.0))
+    // a pinned grid outside [1, 12] and salts < 1 are rejected when the
+    // join is built
+    for (bad <- Seq(0, -2, 13, 32)) {
+      intercept[IllegalArgumentException](SpatialJoin.joinPointsInBoxes(pts, boxes, bits = bad))
+      intercept[IllegalArgumentException](
+        SpatialJoin.joinBoxesBoxes(boxes.withColumnRenamed("rid", "id"), boxes, bits = bad))
+      intercept[IllegalArgumentException](SpatialJoin.dwithinJoin(pts, qs, 5000.0, bits = bad))
+      intercept[IllegalArgumentException](SpatialJoin.joinPointsInBoxesSalted(pts, boxes, bits = bad))
+    }
+    intercept[IllegalArgumentException](SpatialJoin.joinPointsInBoxesSalted(pts, boxes, bits = 6, salts = 0))
+    intercept[IllegalArgumentException](
+      SpatialJoin.knn(pts, qs.withColumnRenamed("qid", "query_id"), k = 1, bits = 0))
   }
 
   test("q54 video near-dup: banded frame-hash LSH returns exactly the planted twins; no cartesian plan") {
@@ -665,26 +749,6 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(plan.linesIterator.exists(l => l.contains("h3_cell") && l.trim.startsWith("*(")), plan)
   }
 
-  test("H3-keyed PIP join produces identical pairs to the geohash-keyed join") {
-    import spark.implicits._
-    val pts = spark.range(3000).map { i =>
-      (i, -170.0 + (i % 337).toDouble + (i % 13) * 0.07,
-        -80.0 + (i % 157).toDouble + (i % 11) * 0.05)
-    }.toDF("id", "lon", "lat")
-    val boxes = Seq(
-      (1L, 9.0, 44.0, 11.0, 46.0),
-      (2L, -100.0, -50.0, -60.0, 0.0),
-      (3L, 150.0, 20.0, 179.0, 60.0),
-      (4L, -10.5, -5.25, 30.75, 40.5)) // edge-straddling fractions
-      .toDF("rid", "minx", "miny", "maxx", "maxy")
-    val gh = SpatialJoin.joinPointsInBoxes(pts, boxes)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val h3 = SpatialJoin.joinPointsInBoxesH3(pts, boxes, res = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(h3 == gh)
-    assert(gh.nonEmpty)
-  }
-
   test("filterIntersectsAtScale matches broadcast filter semantics") {
     import spark.implicits._
     val lines = Seq("34.2277,-118.2623", "12,34", "9q5",
@@ -790,7 +854,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     bruteDf.unpersist()
   }
 
-  test("kNN runs one materialization per radius round plus one emptiness probe; empty query side is typed") {
+  test("kNN runs one materialization per radius round; empty query side is typed") {
     import spark.implicits._
     // a dense cluster at every query: all complete in the opening round
     val centres = Seq((1L, 10.0, 45.0), (2L, -60.0, -20.0), (3L, 120.0, 30.0))
@@ -798,44 +862,12 @@ class SpatialJoinSpec extends AnyFunSuite {
       yield (q * 100 + j, x + (j % 4) * 0.02, y + (j / 4) * 0.02)).toDF("id", "lon", "lat")
     val qsG = centres.toDF("qid", "qlon", "qlat")
     val qsP = qsG.withColumnRenamed("qid", "query_id")
-    val executions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
-    val sqlListener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = executions.add(funcName)
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = executions.add(funcName)
-    }
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
-    }
-    import scala.jdk.CollectionConverters._
-    // (actions, SQL executions that ran jobs) of building one kNN result
-    def actions(f: => org.apache.spark.sql.DataFrame): (Seq[String], Int) = {
-      org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
-      executions.clear(); jobs.clear()
-      spark.listenerManager.register(sqlListener)
-      spark.sparkContext.addSparkListener(jobListener)
-      try {
-        f
-        org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
-        val js = jobs.asScala.toSeq
-        assert(js.forall(_.nonEmpty), "a job ran outside any SQL execution")
-        (executions.asScala.toSeq, js.flatten.distinct.size)
-      } finally {
-        spark.listenerManager.unregister(sqlListener)
-        spark.sparkContext.removeSparkListener(jobListener)
-      }
-    }
     // radius pinned, so no density count job: one checkpoint, whose
     // observe() metric is the emptiness probe (no isEmpty execution)
-    val (geoActs, geoExecs) =
+    val (geoActs, geoExecs, _) =
       actions(SpatialJoin.knnGeodesic(pts, qsG, k = 4, initMeters = 100000.0))
     assert(geoActs == Seq("localCheckpoint") && geoExecs == 1, (geoActs, geoExecs))
-    val (plActs, plExecs) = actions(SpatialJoin.knn(pts, qsP, k = 4, initDeg = 1.0))
+    val (plActs, plExecs, _) = actions(SpatialJoin.knn(pts, qsP, k = 4, initDeg = 1.0))
     assert(plActs == Seq("localCheckpoint") && plExecs == 1, (plActs, plExecs))
     // and the answers are the round-1 ones: each query's own cluster
     val got = SpatialJoin.knnGeodesic(pts, qsG, k = 4, initMeters = 100000.0)
@@ -851,6 +883,46 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(noP.schema.map(f => f.name -> f.dataType.simpleString) ==
       Seq("query_id" -> "bigint", "rank" -> "int", "neighbor_id" -> "bigint", "dist2" -> "double"))
     assert(noP.collect().isEmpty)
+  }
+
+  test("the benchmark's box, dwithin and intersects calls run pinned SQL executions and Spark jobs") {
+    import spark.implicits._
+    // the shapes geobench's spatial-join workload collects: a persisted
+    // point table, a small box table, query points, WKB points x polygons
+    val pts = spark.createDataset((0 until 600).map { i =>
+      (i.toLong, -170.0 + (i * 37 % 340) + (i % 7) * 0.1, -80.0 + (i * 53 % 160) + (i % 5) * 0.1)
+    }).repartition(4).toDF("id", "lon", "lat").persist()
+    pts.count()
+    val boxes = (0 until 40).map { i =>
+      val x = -170.0 + (i * 41 % 330); val y = -75.0 + (i * 29 % 150)
+      (i.toLong, x, y, x + 0.5 + (i % 6), y + 0.5 + (i % 4))
+    }.toDF("rid", "minx", "miny", "maxx", "maxy")
+    val qs = (0 until 8).map(i => (i.toLong, 10.0 + i * 0.3, 45.0 - i * 0.2)).toDF("qid", "qlon", "qlat")
+    val toWkb = udf((lon: Double, lat: Double) => graft.geom.Geo.toWkb(graft.geom.Geo.point(lon, lat)))
+    val ptWkb = pts.select(col("id"), toWkb(col("lon"), col("lat")).as("wkb")).cache()
+    ptWkb.count()
+    val polys = (0 until 10).map { i =>
+      val x = -160.0 + i * 33; val y = -60.0 + i * 13
+      (i.toLong, graft.geom.Geo.toWkb(graft.geom.Geo.parseWkt(
+        s"POLYGON(($x $y, ${x + 4} $y, ${x + 2} ${y + 3}, $x $y))")))
+    }.toDF("id", "wkb")
+    try {
+      // a cold grid memo adds the box table's one stats job
+      SpatialJoin.BitsMemo.clear()
+      val cold = actions(SpatialJoin.joinPointsInBoxes(pts, boxes).collect())
+      val warm = actions(SpatialJoin.joinPointsInBoxes(pts, boxes).collect())
+      val dwithin = actions(SpatialJoin.dwithinJoin(pts, qs, 500000.0).collect())
+      val intersects = actions(SpatialJoin.filterIntersectsAtScale(ptWkb, polys).select("id").collect())
+      // (actions, SQL executions, Spark jobs); a shuffle stage and the
+      // result stage are each one job under AQE
+      assert(cold == ((Seq("collect", "collect"), 2, 4)), cold)
+      assert(warm == ((Seq("collect"), 1, 2)), warm)
+      assert(dwithin == ((Seq("collect"), 1, 2)), dwithin)
+      assert(intersects == ((Seq("collect"), 1, 5)), intersects)
+    } finally {
+      ptWkb.unpersist()
+      pts.unpersist()
+    }
   }
 
   test("planar knn: no CartesianProduct/BroadcastNestedLoopJoin in ANY plan the operator runs") {

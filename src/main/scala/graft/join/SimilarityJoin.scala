@@ -48,6 +48,66 @@ object SimilarityJoin {
       k = k, metricName = metricName)
   }
 
+  /** Pairs of a driver-side Hamming join: (idA(i), idB(i)) with
+    * idA(i) < idB(i), and the candidate rows before the refine. */
+  final case class HammingPairs(idA: Array[Long], idB: Array[Long], bandRows: Long)
+
+  /** [[simhashHammingJoin]] on the driver, over fingerprints already
+    * there: `ids` and `sims` are parallel arrays. Same bands, same band
+    * keys and the same per-band `id_a < id_b` candidates, so `bandRows`
+    * is the count the distributed join reports under its `metricName`.
+    * Each candidate is refined by popcount ≤ k and kept only from its
+    * first agreeing band, so each pair comes out once. */
+  def driverHammingPairs(ids: Array[Long], sims: Array[Long], k: Int,
+                         bits: Int = 32, bands: Int = 4): HammingPairs = {
+    require(bands > k, s"pigeonhole needs bands ($bands) > k ($k)")
+    require(bits % bands == 0, s"bands must divide bits")
+    val w = bits / bands
+    require(w <= 32, s"a band key of $w bits does not fit the driver join's 32")
+    val mask = (1L << w) - 1
+    def key(i: Int, b: Int): Long = (sims(i) >> (b * w)) & mask
+    def firstBand(p: Int, q: Int, b: Int): Boolean = {
+      var c = 0
+      while (c < b && key(p, c) != key(q, c)) c += 1
+      c == b
+    }
+    val idA = Array.newBuilder[Long]
+    val idB = Array.newBuilder[Long]
+    var bandRows = 0L
+    val n = ids.length
+    // (band key, row) packed in one long: sorting groups equal keys into runs
+    val packed = new Array[Long](n)
+    for (b <- 0 until bands) {
+      var i = 0
+      while (i < n) { packed(i) = (key(i, b) << 32) | i; i += 1 }
+      java.util.Arrays.sort(packed)
+      var lo = 0
+      while (lo < n) {
+        var hi = lo + 1
+        while (hi < n && (packed(hi) >>> 32) == (packed(lo) >>> 32)) hi += 1
+        var x = lo
+        while (x < hi) {
+          val p = packed(x).toInt
+          var y = x + 1
+          while (y < hi) {
+            val q = packed(y).toInt
+            if (ids(p) != ids(q)) {
+              bandRows += 1
+              if (java.lang.Long.bitCount(sims(p) ^ sims(q)) <= k && firstBand(p, q, b)) {
+                idA += math.min(ids(p), ids(q))
+                idB += math.max(ids(p), ids(q))
+              }
+            }
+            y += 1
+          }
+          x += 1
+        }
+        lo = hi
+      }
+    }
+    HammingPairs(idA.result(), idB.result(), bandRows)
+  }
+
   /** Shared banded-pigeonhole core of the exact Hamming joins: checkpoint
     * the fingerprint table once unless it is already a column subset of a
     * materialization ([[materialized]]), explode to (id, band, 16-bit key)

@@ -19,11 +19,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Driver path: up to cap rows came back, which is all of them. They are
   * labeled by union-find over primitive arrays, and the non-identity
   * labels become a broadcast table. The collect is the path's only Spark
-  * execution: at benchmark size (geobench `geoq_stream_neardup`, 1,145
-  * pairs, traced) the rounds cost 8 jobs and 0.42 s a call, against 1 job
-  * and 0.05 s for collecting and labeling an already materialized edge
-  * list. A threshold of −1 skips the collect and always takes the round
-  * path.
+  * execution. On geobench `geoq_stream_neardup`'s pair graph (1,145
+  * pairs, traced, while that benchmark still called this object) the
+  * rounds cost 8 jobs and 0.42 s a call, against 1 job and 0.05 s for
+  * collecting and labeling an already materialized edge list. The
+  * benchmark no longer reaches this object: its DedupPipeline input fits
+  * the broadcast threshold, so the pipeline labels its pairs on the driver
+  * with [[unionFind]] itself. A threshold of −1 skips the collect and
+  * always takes the round path.
   *
   * Round path: cap + 1 rows came back. The rounds read the kept rows, so
   * the edge plan is not evaluated again, symmetrized into one checkpoint.
@@ -159,13 +162,23 @@ object ConnectedComponents {
     finally dropCheckpoint(kept)
   }
 
-  /** Labels the collected edge rows by union-find. Ids map to their rank
-    * among the sorted distinct edge ends, so linking the larger root under
-    * the smaller keeps every root its component's min id. Only ids whose
-    * label is not their own enter the (broadcast) table. */
+  /** Labels the collected edge rows by union-find ([[unionFind]]); only
+    * ids whose label is not their own enter the (broadcast) table. */
   private def driverLabels(spark: SparkSession, es: Array[InternalRow]): DataFrame = {
-    val src = es.map(_.getLong(0))
-    val dst = es.map(_.getLong(1))
+    val (ids, components) = unionFind(es.map(_.getLong(0)), es.map(_.getLong(1)))
+    val labels = new java.util.ArrayList[Row](ids.length)
+    ids.indices.foreach(i => labels.add(Row(ids(i), components(i))))
+    broadcast(spark.createDataFrame(labels,
+      StructType(Seq(StructField("id", LongType, false), StructField("component", LongType, false)))))
+  }
+
+  /** Union-find over an undirected edge list given as two parallel id
+    * arrays. Returns the non-identity labels as parallel arrays: every
+    * edge end whose component (the min id it reaches) is not its own id,
+    * in ascending id order, with that component. Ids map to their rank
+    * among the sorted distinct edge ends, so linking the larger root under
+    * the smaller keeps every root its component's min id. */
+  private[graft] def unionFind(src: Array[Long], dst: Array[Long]): (Array[Long], Array[Long]) = {
     val ends = src ++ dst
     java.util.Arrays.sort(ends)
     var m = 0
@@ -188,15 +201,8 @@ object ConnectedComponents {
       if (a < b) parent(b) = a else if (b < a) parent(a) = b
       i += 1
     }
-    val labels = new java.util.ArrayList[Row]()
-    i = 0
-    while (i < ids.length) {
-      val r = find(i)
-      if (r != i) labels.add(Row(ids(i), ids(r)))
-      i += 1
-    }
-    broadcast(spark.createDataFrame(labels,
-      StructType(Seq(StructField("id", LongType, false), StructField("component", LongType, false)))))
+    val labeled = Array.range(0, m).filter(v => find(v) != v)
+    (labeled.map(ids(_)), labeled.map(v => ids(find(v))))
   }
 
   /** The round path: symmetrizes the edges into one checkpoint, read by

@@ -107,14 +107,22 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(comp.values.toSet === Set(10L), s"chain must collapse (chained=$chained)")
   }
 
-  test("pipeline runs in three SQL executions at benchmark size; keepers == driver-side reference") {
-    val sp = spark
-    import sp.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.util.QueryExecutionListener
-    import scala.jdk.CollectionConverters._
-    // the neardup benchmark's shape: 1,200 captions plus one noisy copy of
-    // each (case/punctuation noise, or the caption repeated)
+  /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold` set to
+    * `threshold` (None: as it is), restoring the previous setting after. */
+  private def withThreshold[T](threshold: Option[BigInt])(f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    threshold.foreach(t => spark.conf.set(key, t.toString))
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Runs `f` with the threshold at −1, which forces DedupPipeline's
+    * distributed path and connected components' rounds. */
+  private def distributed[T](f: => T): T = withThreshold(Some(-1))(f)
+
+  /** The neardup benchmark's shape: 1,200 captions plus one noisy copy of
+    * each (case/punctuation noise, or the caption repeated). */
+  private lazy val benchRows: Seq[(Long, String)] = {
     val rnd = new scala.util.Random(11)
     val n = 1200
     val originals = (0 until n).map(i => (i.toLong, graft.img.Images.caption(i)))
@@ -127,40 +135,12 @@ class DedupPipelineSpec extends AnyFunSuite {
       }
       ((n + j).toLong, noisy)
     }
-    val rows = originals ++ copies
-    val docs = rows.toDF("id", "text").repartition(sp.sparkContext.defaultParallelism).cache()
-    docs.count()
+    originals ++ copies
+  }
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val qeListener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = actions.add(funcName)
-      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = actions.add(s"failed $funcName")
-    }
-    org.apache.spark.sql.graft.bridge.waitListenerBus(sp)
-    sp.sparkContext.addSparkListener(jobListener)
-    sp.listenerManager.register(qeListener)
-    val got = try {
-      val out = graft.ops.DedupPipeline.run(docs, "id", "text", k = 3).collect()
-      org.apache.spark.sql.graft.bridge.waitListenerBus(sp)
-      out.map(r => r.getLong(0) -> r.getLong(1)).toMap
-    } finally {
-      sp.sparkContext.removeSparkListener(jobListener)
-      sp.listenerManager.unregister(qeListener)
-    }
-    // the (id, rep, sim) checkpoint, connected components' bounded collect
-    // (which runs the Hamming join) and the caller's collect
-    val acts = actions.asScala.toSeq
-    assert(acts == Seq("localCheckpoint", "collect", "collect"), acts)
-    assert(jobs.get <= 7, s"${jobs.get} jobs")
-
-    // reference on the driver: normalized-key groups, all-pairs hamming
-    // <= 3 between group reps, union-find, min id per cluster
+  /** Keepers on the driver: normalized-key groups, all-pairs hamming
+    * <= 3 between group reps, union-find, min id per cluster. */
+  private def referenceKeepers(rows: Seq[(Long, String)]): Map[Long, Long] = {
     def norm(t: String) =
       t.toLowerCase.replaceAll("[^a-z ]", " ").replaceAll(" +", " ").trim
     val groups = rows.groupBy { case (_, t) => norm(t) }.values.toSeq
@@ -172,12 +152,162 @@ class DedupPipelineSpec extends AnyFunSuite {
       val (a, b) = (find(reps(i)._1), find(reps(j)._1))
       if (a != b) parent(math.max(a, b)) = math.min(a, b)
     }
-    val want = groups.flatMap { g =>
+    groups.flatMap { g =>
       val k = find(g.map(_._1).min)
       g.map { case (id, _) => id -> k }
     }.toMap
+  }
+
+  /** DedupPipeline over the benchmark-shaped fixture: its keepers and the
+    * Spark work of running it and collecting the result. `belowInput` sets
+    * the broadcast threshold one byte below the input's size estimate, so
+    * the pipeline runs distributed while its pair list still fits. */
+  private def benchRun(belowInput: Boolean): (Map[Long, Long], SparkWork) = {
+    val sp = spark
+    import sp.implicits._
+    val docs = benchRows.toDF("id", "text").repartition(sp.sparkContext.defaultParallelism).cache()
+    docs.count()
+    val threshold =
+      if (belowInput) Some(docs.select("id", "text").queryExecution.optimizedPlan.stats.sizeInBytes - 1)
+      else None
+    try {
+      val (out, work) = withThreshold(threshold)(
+        SparkWork.of(sp)(graft.ops.DedupPipeline.run(docs, "id", "text", k = 3).collect()))
+      (out.map(r => r.getLong(0) -> r.getLong(1)).toMap, work)
+    } finally docs.unpersist()
+  }
+
+  test("pipeline on the driver at benchmark size: one collect inside run plus the caller's; keepers == reference") {
+    val (got, work) = benchRun(belowInput = false)
+    // the (id, key_md5, sim) collect and the caller's collect
+    assert(work.actions == Seq("collect", "collect"), work)
+    assert(work.jobs <= 2, work)
+    val want = referenceKeepers(benchRows)
     assert(got == want)
-    assert(want.values.toSet.size < n, "no near-dup pair joined two groups — weak fixture")
-    docs.unpersist()
+    assert(want.values.toSet.size < 1200, "no near-dup pair joined two groups — weak fixture")
+  }
+
+  test("distributed pipeline at benchmark size (input above the threshold): three SQL executions; keepers == reference") {
+    val (got, work) = benchRun(belowInput = true)
+    // the (id, rep, sim) checkpoint, connected components' bounded collect
+    // (which runs the Hamming join) and the caller's collect
+    assert(work.actions == Seq("localCheckpoint", "collect", "collect"), work)
+    assert(work.jobs <= 7, work)
+    assert(got == referenceKeepers(benchRows))
+  }
+
+  /** Runs DedupPipeline on `df` down both paths and checks they agree on
+    * rows, schema and the band-row metric; returns the keepers by id. */
+  private def bothPaths(df: org.apache.spark.sql.DataFrame, idCol: String = "id",
+                        textCol: String = "text"): Map[Any, Any] = {
+    val metric = "dedup_spec_band_rows"
+    def once() = SparkWork.of(spark) {
+      val out = graft.ops.DedupPipeline.run(df, idCol, textCol, k = 3, metricName = metric)
+      (out.schema, out.collect().toSeq.sortBy(_.toString))
+    }
+    val ((schema, rows), work) = once()
+    val ((dSchema, dRows), dWork) = distributed(once())
+    assert(work.actions == Seq("collect", "collect"), "driver path not taken")
+    assert(dWork.actions.headOption.contains("localCheckpoint"), "distributed path not taken")
+    assert(schema == dSchema)
+    assert(rows == dRows)
+    assert(work.metrics.get(metric) == dWork.metrics.get(metric))
+    assert(work.metrics.contains(metric))
+    rows.map(r => r.get(0) -> r.get(1)).toMap
+  }
+
+  /** Single-word edits of one 40-word lowercase base text (letters only,
+    * so normalization leaves them as they are) with their fingerprints. */
+  private lazy val variants: IndexedSeq[(String, Long)] = {
+    def word(i: Int): String = "w" + Integer.toString(i, 26).map(c =>
+      if (c.isDigit) ('a' + (c - '0')).toChar else ('a' + 10 + (c - 'a')).toChar)
+    val base = (0 until 40).map(word)
+    for (pos <- 0 until 40; sub <- 0 until 40) yield {
+      val text = base.updated(pos, word(1000 + sub)).mkString(" ")
+      (text, Queries.simhash64(text))
+    }
+  }
+
+  /** A pair of variants at exactly hamming `d`, all differing bits in one
+    * 16-bit band or not. */
+  private def pairAt(d: Int, oneBand: Boolean): (String, String) = {
+    val hits = for (i <- variants.indices.iterator; j <- (i + 1 until variants.size).iterator
+      if {
+        val x = variants(i)._2 ^ variants(j)._2
+        java.lang.Long.bitCount(x) == d &&
+          (0 until 4).count(b => ((x >>> (16 * b)) & 0xFFFFL) != 0) == (if (oneBand) 1 else d)
+      }) yield (variants(i)._1, variants(j)._1)
+    assert(hits.hasNext, s"no variant pair at hamming $d (one band: $oneBand)")
+    hits.next()
+  }
+
+  test("driver path == distributed path: benchmark fixture, hamming k and k+1, chains, dup groups, Int ids, empty") {
+    val sp = spark
+    import sp.implicits._
+    val bench = bothPaths(benchRows.toDF("id", "text"))
+    assert(bench == referenceKeepers(benchRows))
+
+    // pairs at exactly k = 3 join; at k + 1 they do not, whichever bands
+    // the differing bits fall in
+    for (d <- Seq(3, 4); oneBand <- Seq(true, false)) {
+      val (a, b) = pairAt(d, oneBand)
+      val got = bothPaths(Seq((7L, a), (3L, b)).toDF("id", "text"))
+      assert(got == Map(7L -> (if (d <= 3) 3L else 7L), 3L -> 3L), (d, oneBand))
+    }
+
+    // a chain a~b~c with a and c farther than k apart collapses to one keeper
+    def dist(x: Int, y: Int) = java.lang.Long.bitCount(variants(x)._2 ^ variants(y)._2)
+    val near = variants.indices.map(i => variants.indices.filter(j => j != i && dist(i, j) <= 3))
+    val (a, b, c) = (for (j <- variants.indices.iterator; i <- near(j).iterator;
+        l <- near(j).iterator if i < l && dist(i, l) > 3)
+      yield (variants(i)._1, variants(j)._1, variants(l)._1)).next()
+    val chain = bothPaths(Seq((30L, a), (20L, b), (10L, c)).toDF("id", "text"))
+    assert(chain.values.toSet == Set(10L), chain)
+
+    // exact-dup groups of three and four whose min id is not their first row
+    val groups = bothPaths(Seq((5L, "Red fox jumps"), (2L, "red, fox  JUMPS!"), (9L, "RED FOX JUMPS 7"),
+      (40L, "a slow brown dog"), (41L, "A SLOW BROWN DOG"), (17L, "a slow brown dog?"), (33L, "A slow brown dog."))
+      .toDF("id", "text"))
+    assert(groups == Map(5L -> 2L, 2L -> 2L, 9L -> 2L, 40L -> 17L, 41L -> 17L, 17L -> 17L, 33L -> 17L))
+
+    // an Int id column under another name keeps its name and type
+    val ints = bothPaths(Seq((4, "one two three"), (1, "One two three!")).toDF("docKey", "body"), "docKey", "body")
+    assert(ints == Map(4 -> 1L, 1 -> 1L))
+
+    assert(bothPaths(Seq.empty[(Long, String)].toDF("id", "text")).isEmpty)
+  }
+
+  test("a null text fails the pipeline on both paths") {
+    val sp = spark
+    import sp.implicits._
+    val df = Seq((1L, Some("a b c")), (2L, None)).toDF("id", "text")
+    intercept[Exception](graft.ops.DedupPipeline.run(df, "id", "text").collect())
+    intercept[Exception](distributed(graft.ops.DedupPipeline.run(df, "id", "text").collect()))
+  }
+
+  test("driverHammingPairs == simhashHammingJoin on random fingerprints with planted near pairs") {
+    val sp = spark
+    import sp.implicits._
+    import graft.join.SimilarityJoin
+    val rnd = new scala.util.Random(5)
+    for ((bits, k) <- Seq((64, 3), (32, 2))) {
+      val mask = if (bits == 64) -1L else (1L << bits) - 1
+      val random = (0 until 2000).map(_ => rnd.nextLong() & mask)
+      // each planted copy flips 0 to k + 1 random bits of an earlier row
+      val planted = (0 until 400).map { _ =>
+        val flips = (0 to rnd.nextInt(k + 2)).map(_ => 1L << rnd.nextInt(bits)).foldLeft(0L)(_ | _)
+        random(rnd.nextInt(random.size)) ^ (if (rnd.nextBoolean()) flips else 0L)
+      }
+      val sims = random ++ planted
+      val ids = rnd.shuffle(sims.indices.map(_.toLong * 3 + 1).toList).toArray
+      val metric = s"driver_pairs_spec_$bits"
+      val (want, work) = SparkWork.of(sp)(SimilarityJoin.simhashHammingJoin(
+        ids.toSeq.zip(sims).toDF("id", "sim"), k = k, bits = bits, bands = 4, metricName = metric)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet)
+      val got = SimilarityJoin.driverHammingPairs(ids, sims.toArray, k, bits = bits, bands = 4)
+      assert(got.idA.zip(got.idB).toSet == want && got.idA.length == want.size, bits)
+      assert(want.size > 300, s"weak fixture: ${want.size} pairs")
+      assert(got.bandRows == work.metrics(metric).getLong(0), bits)
+    }
   }
 }

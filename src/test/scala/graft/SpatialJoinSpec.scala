@@ -12,39 +12,8 @@ class SpatialJoinSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  /** (actions, SQL executions that ran jobs, Spark jobs) of running `f`:
-    * the name of every finished QueryExecution action, in order, and the
-    * jobs it started, each of which must run inside a SQL execution. */
-  private def actions(f: => Any): (Seq[String], Int, Int) = {
-    import scala.jdk.CollectionConverters._
-    val executions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
-    val sqlListener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = executions.add(funcName)
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = executions.add(funcName)
-    }
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
-    }
-    org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
-    spark.listenerManager.register(sqlListener)
-    spark.sparkContext.addSparkListener(jobListener)
-    try {
-      f
-      org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
-      val js = jobs.asScala.toSeq
-      assert(js.forall(_.nonEmpty), "a job ran outside any SQL execution")
-      (executions.asScala.toSeq, js.flatten.distinct.size, js.size)
-    } finally {
-      spark.listenerManager.unregister(sqlListener)
-      spark.sparkContext.removeSparkListener(jobListener)
-    }
-  }
+  /** (actions, SQL executions that ran jobs, Spark jobs) of running `f`. */
+  private def actions(f: => Any): (Seq[String], Int, Int) = SparkWork.of(spark)(f)._2.counts
 
   test("salted join produces identical pairs on skewed data") {
     import spark.implicits._
@@ -922,6 +891,35 @@ class SpatialJoinSpec extends AnyFunSuite {
     } finally {
       ptWkb.unpersist()
       pts.unpersist()
+    }
+  }
+
+  test("the benchmark's stream calls each run one SQL execution and one Spark job") {
+    import spark.implicits._
+    // geobench's geoq_stream shape: geoq's mixed input formats, parsed
+    // from strings, through wkt, gj f, gh/h3 covering and filter intersects
+    val lines = Seq("34.2277,-118.2623", "12,34", "12\t34", "9q5",
+      "LINESTRING (30 10, 10 30, 40 40)", "POLYGON ((30 10, 40 40, 20 40, 10 20, 30 10))",
+      """{"type":"Point","coordinates":[125.6, 10.1]}""",
+      """{"type":"Feature","properties":{"a": "b"},"geometry":{"type":"Point","coordinates":[125.6, 10.1]}}""",
+      """{"type":"FeatureCollection","features":[{"type":"Feature","properties":{},"geometry":""" +
+        """{"type":"Point","coordinates":[34.0,12.0]}},{"type":"Feature","properties":{},"geometry":""" +
+        """{"type":"Point","coordinates":[78.0,56.0]}}]}""")
+    val ops = graft.ops.GeoOps
+    def feats = ops.parseStrings(spark, lines)
+    val queries = graft.core.Entity.parseLine("9q5").map(_.geom) :+
+      graft.geom.Geo.boxPolyBL(5.0, 5.0, 45.0, 45.0)
+    val calls = Seq(
+      "wkt" -> (() => ops.wkt(feats).collect()),
+      "gj f" -> (() => ops.gjFeature(feats).collect()),
+      "gh covering" -> (() => ops.ghCovering(feats, 3, echo = false).collect()),
+      "h3 covering" -> (() => ops.h3Covering(feats, 4, echo = false, compact = false).collect()),
+      "filter intersects" -> (() => ops.filterIntersects(feats, queries)
+        .map(f => (f.rowId, f.subIdx, f.raw)).collect()))
+    calls.foreach { case (name, call) =>
+      val (out, work) = SparkWork.of(spark)(call())
+      assert(out.nonEmpty, name)
+      assert(work.counts == ((Seq("collect"), 1, 1)), s"$name: $work")
     }
   }
 

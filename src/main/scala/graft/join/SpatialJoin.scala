@@ -3,6 +3,7 @@ package graft.join
 import graft.geom.Geo
 import graft.index.Geohash
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
@@ -28,6 +29,21 @@ import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory
   * the SAME cell path — exact at every schedule, and no full-scan
   * crossJoin code path anywhere in the join family. Both metrics share
   * one round loop that materializes each round once.
+  *
+  * The kNN rounds and the intersects filter each have two paths, chosen
+  * per call by [[graft.plans.DriverPath.fitsBroadcast]] on the query side
+  * (the kNN queries, the intersects right side): at or under
+  * `spark.sql.autoBroadcastJoinThreshold` the call runs on the driver,
+  * above it (or at −1) distributed; both give the same rows under the same
+  * schema. Per call, over a cached point side, with no stats job:
+  *  - kNN on the driver: one aggregation execution per radius round (its
+  *    query-cell broadcast and its result stage: two jobs) and a local
+  *    result; distributed: one checkpoint execution per round (three or
+  *    four jobs with its rank window's exchange) and the caller's collect
+  *    of their union (one more job).
+  *  - intersects on the driver: the caller's action is one execution of
+  *    one job (a local right side collects without one); distributed: one
+  *    execution of five jobs.
   */
 object SpatialJoin {
 
@@ -437,7 +453,19 @@ object SpatialJoin {
     * (key, qlon, qlat); `round(qs, radius)` gives (key, id, `dist`)
     * candidates, a superset of every pair within the radius, and the
     * `dist` value at the radius (the cutoff); `world(qs)` gives every
-    * pair; returns (key, rank, neighbor_id, `dist`). A round ranks its
+    * pair; returns (key, rank, neighbor_id, `dist`). A query side that
+    * fits the broadcast threshold runs the loop on the driver
+    * ([[knnRoundsOnDriver]]: one aggregation per round, a local result);
+    * a larger one, or any at threshold −1, runs [[knnRoundsDistributed]]. */
+  private def knnRounds(queries: DataFrame, k: Int, dist: String,
+                        initRadius: Double, rounds: Int,
+                        round: (DataFrame, Double) => (DataFrame, Double),
+                        world: DataFrame => DataFrame): DataFrame =
+    if (graft.plans.DriverPath.fitsBroadcast(queries))
+      knnRoundsOnDriver(queries, k, dist, initRadius, rounds, round, world)
+    else knnRoundsDistributed(queries, k, dist, initRadius, rounds, round, world)
+
+  /** [[knnRounds]] distributed, one eager checkpoint a round. A round ranks its
     * candidates by (key; dist, id) together with one sentinel per open
     * query (null id, the cutoff as its distance; a null id sorts first
     * among equal distances), which survives `rank ≤ k` exactly when its
@@ -452,10 +480,10 @@ object SpatialJoin {
     * (read as 0 it would drop the open queries). The world
     * round (AUTO grid whatever the round pin: its clamp keeps a world box
     * at 2×2 cells) pairs every point with every open query exactly once. */
-  private def knnRounds(queries: DataFrame, k: Int, dist: String,
-                        initRadius: Double, rounds: Int,
-                        round: (DataFrame, Double) => (DataFrame, Double),
-                        world: DataFrame => DataFrame): DataFrame = {
+  private def knnRoundsDistributed(queries: DataFrame, k: Int, dist: String,
+                                   initRadius: Double, rounds: Int,
+                                   round: (DataFrame, Double) => (DataFrame, Double),
+                                   world: DataFrame => DataFrame): DataFrame = {
     val Seq(key, qlon, qlat) = queries.columns.toSeq
     val w = Window.partitionBy(key).orderBy(col(dist).asc, col("id").asc)
     def ranked(pairs: DataFrame): DataFrame =
@@ -492,6 +520,125 @@ object SpatialJoin {
     }
     if (open) acc :+= ranked(world(remaining)).select(out: _*)
     acc.reduce(_ unionByName _)
+  }
+
+  /** [[knnRounds]] with the open queries, the escalation and the world
+    * round on the driver: the query side is collected once, and each round
+    * is ONE aggregation over its candidates ([[KnnTop]]) that keeps, per
+    * query, the k smallest (dist, id) among the candidates strictly inside
+    * the cutoff (all of them in the world round). A query holding k of them
+    * is complete, as in the distributed path; the rest go to the next round
+    * as a local relation. Returns a local DataFrame under the distributed
+    * path's exact schema, nullability included: each round that ran adds
+    * the fields its sentinel union would (a nullable neighbor id, and
+    * nullable coordinates for the queries it leaves open), the world round
+    * its own. */
+  private def knnRoundsOnDriver(queries: DataFrame, k: Int, dist: String,
+                                initRadius: Double, rounds: Int,
+                                round: (DataFrame, Double) => (DataFrame, Double),
+                                world: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val spark = queries.sparkSession
+    val Seq(key, qlon, qlat) = queries.columns.toSeq
+    val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(queries.schema)
+    var open: Seq[InternalRow] = queries.collect().toSeq.map(toInternal(_).asInstanceOf[InternalRow])
+    var qSchema = queries.schema
+    var schema = Option.empty[StructType]
+    val out = Seq.newBuilder[InternalRow]
+    // one pass over `pairs`: adds the output fields it contributes to
+    // `schema` and its done queries' rows to `out`; returns its key field
+    // and the queries it leaves open. A query is done once it holds k
+    // candidates, or always in the world round (no cutoff)
+    def pass(pairs: DataFrame, cutoff: Option[Double]): (StructField, Seq[InternalRow]) = {
+      val cand = pairs.select(col(key), col("id"), col(dist))
+      // a round's rows come out of its union with the sentinels (the open
+      // queries' keys, a null id and the cutoff as their distance)
+      val keyF = cand.schema(key).copy(
+        nullable = cand.schema(key).nullable || (cutoff.nonEmpty && qSchema(key).nullable))
+      val idF = cand.schema("id")
+      val fields = StructType(Seq(keyF, StructField("rank", IntegerType, false),
+        StructField("neighbor_id", idF.dataType, cutoff.nonEmpty || idF.nullable), cand.schema(dist)))
+      schema = Some(schema.fold(fields)(s => StructType(s.zip(fields).map { case (a, b) =>
+        a.copy(nullable = a.nullable || b.nullable) })))
+      val top = if (open.isEmpty) new KnnTop(k, cand.schema, cutoff)
+        else org.apache.spark.sql.graft.bridge.aggregate(cand, "aggregate")(
+          new KnnTop(k, cand.schema, cutoff))(_ add _, _ merge _)
+      val left = open.filterNot { q =>
+        val best = top.best(q)
+        val done = cutoff.isEmpty || best.length == k
+        if (done) best.zipWithIndex.foreach { case (r, i) =>
+          out += InternalRow(r.get(0, keyF.dataType), i + 1, r.get(1, idF.dataType),
+            r.get(2, cand.schema(dist).dataType))
+        }
+        done
+      }
+      (keyF, left)
+    }
+    var radius = initRadius
+    var r = 0
+    while (r < rounds && (r == 0 || open.nonEmpty)) {
+      val (pairs, cutoff) = round(org.apache.spark.sql.graft.bridge.localFrame(spark, qSchema, open), radius)
+      val (keyF, left) = pass(pairs, Some(cutoff))
+      open = left
+      // the distributed path's next queries come out of the sentinel union,
+      // where the candidate rows leave the coordinates null
+      qSchema = StructType(Seq(keyF, qSchema(qlon).copy(nullable = true), qSchema(qlat).copy(nullable = true)))
+      radius *= 4.0
+      r += 1
+    }
+    if (rounds <= 0 || open.nonEmpty)
+      pass(world(org.apache.spark.sql.graft.bridge.localFrame(spark, qSchema, open)), None)
+    org.apache.spark.sql.graft.bridge.localFrame(spark, schema.get, out.result())
+  }
+
+  /** Per query key, the k smallest candidate rows (key, id, dist) of
+    * `schema` in the rank window's order — Spark's ascending (dist, id)
+    * ordering: nulls first, NaN last, −0.0 == 0.0 — counting, under a
+    * cutoff, only the rows that sort before the round's sentinel (the
+    * cutoff as distance, a null id). Each task folds its partition into a
+    * copy of an empty one; the driver merges the task results as they
+    * arrive ([[org.apache.spark.sql.graft.bridge.aggregate]]), so it holds
+    * O(queries × k) rows, never one top-k per partition and query. */
+  private final class KnnTop(k: Int, schema: org.apache.spark.sql.types.StructType,
+                             cutoff: Option[Double]) extends Serializable {
+    import org.apache.spark.sql.catalyst.expressions._
+    private val tops =
+      scala.collection.mutable.HashMap.empty[UnsafeRow, scala.collection.mutable.ArrayBuffer[UnsafeRow]]
+    private val types = schema.fields.map(_.dataType)
+    @transient private lazy val keyOf = UnsafeProjection.create(Array(types(0)))
+    @transient private lazy val rowOf = UnsafeProjection.create(types)
+    @transient private lazy val ord = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(2, types(2), nullable = true), Ascending),
+      SortOrder(BoundReference(1, types(1), nullable = true), Ascending)))
+    @transient private lazy val sentinel = cutoff.map(c => InternalRow(null, null, c))
+
+    def add(row: InternalRow): KnnTop = {
+      if (sentinel.forall(ord.lt(row, _))) tops.get(keyOf(row)) match {
+        case Some(rows) => offer(rows, row)
+        case None => tops(keyOf(row).copy()) = scala.collection.mutable.ArrayBuffer(rowOf(row).copy())
+      }
+      this
+    }
+
+    def merge(other: KnnTop): KnnTop = {
+      other.tops.foreach { case (key, rows) =>
+        tops.get(key).fold(tops(key) = rows)(mine => rows.foreach(offer(mine, _)))
+      }
+      this
+    }
+
+    /** `query`'s kept rows in rank order; its key is its first field. */
+    def best(query: InternalRow): Seq[UnsafeRow] =
+      tops.get(keyOf(query)).fold(Seq.empty[UnsafeRow])(_.toSeq)
+
+    private def offer(rows: scala.collection.mutable.ArrayBuffer[UnsafeRow], row: InternalRow): Unit =
+      if (rows.length < k || ord.lt(row, rows.last)) {
+        var i = rows.length
+        while (i > 0 && ord.lt(row, rows(i - 1))) i -= 1
+        rows.insert(i, rowOf(row).copy())
+        if (rows.length > k) rows.remove(k)
+      }
   }
 
   /** The planar analog of [[bitsForRadius]]: the finest world grid whose
@@ -590,19 +737,46 @@ object SpatialJoin {
       .select(col("id"), col("rid"))
   }
 
-  /** Entity-level spatial semi-join at scale: keep left rows whose
-    * geometry intersects ANY right geometry. Covering-cell equi-join →
-    * exact JTS refine against the prepared right geometry → left-semi on
-    * (id, wkb). A pair sharing several cells is refined once per shared
-    * cell; the semi-join collapses those repeated hits, so no dedup
-    * exchange is needed, and a row is kept on its own geometry even when
-    * another row shares its id. Same keep/drop decisions as
-    * GeoOps.filterIntersects (reference `filter intersects` semantics). */
+  /** Entity-level spatial semi-join: keep the `left` (id, wkb, …) rows
+    * whose geometry intersects ANY `right` (…, wkb) geometry, as (id, wkb,
+    * then the rest of `left`). A row with a null id or wkb is dropped, and
+    * left multiplicity is kept: every copy of a kept row stays. Same
+    * keep/drop decisions as GeoOps.filterIntersects (reference `filter
+    * intersects` semantics). Two paths, the same rows, schema and column
+    * order:
+    *
+    *  - driver path, when `right` fits the broadcast threshold
+    *    ([[graft.plans.DriverPath.fitsBroadcast]]): `right`'s WKBs are
+    *    collected once into a [[graft.geom.IntersectsAny]] index (an
+    *    STR-tree of prepared geometries, built once per task) and ONE
+    *    filter over a single scan of `left` keeps the rows it hits. One
+    *    execution for the collect (no job for a local `right`), then the
+    *    caller's action: one job over a cached `left`.
+    *  - distributed path, otherwise: covering-cell equi-join at `level` →
+    *    exact JTS refine against the prepared right geometry → left-semi on
+    *    (id, wkb). A pair sharing several cells is refined once per shared
+    *    cell; the semi-join collapses those repeated hits, so no dedup
+    *    exchange is needed, and a row is kept on its own geometry even when
+    *    another row shares its id. The caller's action is one execution of
+    *    five jobs over a cached `left` (cover explode, shuffle join, and a
+    *    second read of `left` for the semi-join). */
   def filterIntersectsAtScale(left: DataFrame, right: DataFrame,
-                              level: Int = 3): DataFrame = {
-    // left/right: (id, wkb). Explode both to geohash covering cells.
+                              level: Int = 3): DataFrame =
+    if (graft.plans.DriverPath.fitsBroadcast(right)) {
+      val any = new graft.geom.IntersectsAny(
+        right.select("wkb").collect().toSeq.collect { case Row(w: Array[Byte]) => w })
+      val hits = udf((wkb: Array[Byte]) => any(wkb))
+      // the left_semi join's column order: its keys, then the rest of left
+      left.filter(col("id").isNotNull && hits(col("wkb"))).select(
+        Seq(col("id"), col("wkb")) ++
+          left.columns.filterNot(Set("id", "wkb")).map(c => left.col(s"`$c`")): _*)
+    } else filterIntersectsByCells(left, right, level)
+
+  private def filterIntersectsByCells(left: DataFrame, right: DataFrame, level: Int): DataFrame = {
+    // left/right: (id, wkb). Explode both to geohash covering cells; a
+    // null wkb covers nothing
     val coverUdf = udf((wkb: Array[Byte]) =>
-      Geohash.covering(Geo.fromWkb(wkb), level))
+      if (wkb == null) Seq.empty[String] else Geohash.covering(Geo.fromWkb(wkb), level))
     val lc = left.select(col("id"), col("wkb"), explode(coverUdf(col("wkb"))).as("cell"))
     val rc = right.select(col("wkb").as("rwkb"), explode(coverUdf(col("wkb"))).as("cell"))
     val pairs = lc.join(rc, Seq("cell")).select(col("id"), col("wkb"), col("rwkb"))

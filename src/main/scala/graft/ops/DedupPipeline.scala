@@ -36,7 +36,8 @@ import org.apache.spark.sql.types._
   * transitive near-dup closure). `keeper == id` marks the survivor set.
   *
   * Two paths, chosen by the estimate Spark uses before it collects a
-  * relation to the driver for a broadcast join: when the session's
+  * relation to the driver for a broadcast join
+  * ([[graft.plans.DriverPath.fitsBroadcast]]): when the session's
   * `spark.sql.autoBroadcastJoinThreshold` is ≥ 0 and the (id, text)
   * input's optimized-plan `sizeInBytes` is at or below it, and the id
   * column is integral, the pipeline runs on the driver; otherwise it runs
@@ -76,11 +77,8 @@ object DedupPipeline {
   def run(docs: DataFrame, idCol: String, textCol: String, k: Int = 3,
           metricName: String = "dedup_pipeline_band_rows"): DataFrame = {
     val input = docs.select(col(idCol).as("id"), col(textCol).as("text"))
-    val qe = input.queryExecution
-    val threshold = qe.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val fits = threshold >= 0 &&
-      Seq(ByteType, ShortType, IntegerType, LongType).contains(input.schema("id").dataType) &&
-      qe.optimizedPlan.stats.sizeInBytes <= threshold
+    val fits = Seq(ByteType, ShortType, IntegerType, LongType).contains(input.schema("id").dataType) &&
+      graft.plans.DriverPath.fitsBroadcast(input)
     if (fits) driver(input, idCol, k, metricName)
     else distributed(input, idCol, k, metricName)
   }

@@ -262,16 +262,13 @@ object GeoOps {
 
   /** `geoq filter intersects` (`commands/filter.rs:31-46`): keep entity iff
     * ANY query geometry intersects it; `negate` flips. Query side is small →
-    * broadcast closure; at scale use [[graft.join.SpatialJoin]]. */
+    * a closure carrying the [[graft.geom.IntersectsAny]] index, whose
+    * queries are parsed and prepared once per task; the same index serves
+    * [[graft.join.SpatialJoin.filterIntersectsAtScale]]'s driver path. */
   def filterIntersects(feats: Dataset[FeatureRow], queries: Seq[Geometry],
                        negate: Boolean = false): Dataset[FeatureRow] = {
-    import feats.sparkSession.implicits._
-    val queryWkbs = queries.map(Geo.toWkb)
-    feats.filter { f =>
-      val g = Geo.fromWkb(f.wkb)
-      val hit = queryWkbs.exists(q => Geo.fromWkb(q).intersects(g))
-      hit ^ negate
-    }
+    val any = new graft.geom.IntersectsAny(queries.map(Geo.toWkb))
+    feats.filter(f => any(Geo.fromWkb(f.wkb)) ^ negate)
   }
 
   /** `geoq filter contains` (`commands/filter.rs:48-75`): queries flatten to

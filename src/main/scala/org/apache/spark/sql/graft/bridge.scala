@@ -65,6 +65,29 @@ object bridge {
       org.apache.spark.sql.execution.LogicalRDD.fromDataset(kept, ds, isStreaming = false)))
   }
 
+  /** `RDD.aggregate` over `df`'s internal rows as ONE SQL execution,
+    * reported to listeners as `name` like any action: each task folds its
+    * partition into a copy of `zero` with `seqOp`, and the driver merges
+    * task results with `combOp` as they arrive, so it never holds more
+    * than its running result and the task results in flight. The rows
+    * `seqOp` sees are reused buffers: copy any it keeps. */
+  def aggregate[U: scala.reflect.ClassTag](df: org.apache.spark.sql.DataFrame, name: String)(zero: U)(
+      seqOp: (U, org.apache.spark.sql.catalyst.InternalRow) => U, combOp: (U, U) => U): U = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name)) {
+      qe.executedPlan.execute().aggregate(zero)(seqOp, combOp)
+    }
+  }
+
+  /** A DataFrame over driver-side internal rows of `schema` (a local
+    * relation, as `createDataFrame` builds from external rows), with the
+    * schema's nullability kept. */
+  def localFrame(spark: org.apache.spark.sql.SparkSession,
+                 schema: org.apache.spark.sql.types.StructType,
+                 rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): org.apache.spark.sql.DataFrame =
+    ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
   /** Drain the async listener bus (`listenerBus` is `private[spark]`) —
     * test assertions over QueryExecutionListener-captured plans need the
     * in-flight events delivered before checking. */

@@ -1,8 +1,9 @@
 package graft
 
 import graft.join.SpatialJoin
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 class SpatialJoinSpec extends AnyFunSuite {
@@ -14,6 +15,33 @@ class SpatialJoinSpec extends AnyFunSuite {
 
   /** (actions, SQL executions that ran jobs, Spark jobs) of running `f`. */
   private def actions(f: => Any): (Seq[String], Int, Int) = SparkWork.of(spark)(f)._2.counts
+
+  /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold` one byte below
+    * `side`'s optimized-plan size estimate, so an operator whose query side
+    * is `side` takes its distributed path (−1 for an empty side), and
+    * restores the previous setting after. */
+  private def distributedFor[T](side: DataFrame)(f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, (side.queryExecution.optimizedPlan.stats.sizeInBytes - 1).toString)
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** A result's schema (names, types, nullability, column order) and its
+    * rows as sorted strings, binary values by content. */
+  private def shape(df: DataFrame): (StructType, Seq[String]) =
+    (df.schema, df.collect().toSeq.map(_.toSeq.map {
+      case b: Array[Byte] => b.map(x => f"$x%02x").mkString
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted)
+
+  /** `run`'s result shape and actions on its driver path (the session's
+    * threshold) and on its distributed path ([[distributedFor]] `side`). */
+  private def bothPaths(side: DataFrame)(run: => DataFrame)
+      : Seq[((StructType, Seq[String]), Seq[String])] = {
+    def once() = { val (out, work) = SparkWork.of(spark)(shape(run)); (out, work.actions) }
+    Seq(once(), distributedFor(side)(once()))
+  }
 
   test("salted join produces identical pairs on skewed data") {
     import spark.implicits._
@@ -265,28 +293,34 @@ class SpatialJoinSpec extends AnyFunSuite {
     val pts = (0 until 400).map(i => (i.toLong, 10.0 + (i % 20) * 0.01, 45.0 + (i / 20) * 0.01))
       .toDF("id", "lon", "lat")
     val qs = Seq((1L, 10.1, 45.1), (2L, 10.05, 45.02)).toDF("qid", "qlon", "qlat")
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit =
-        if (funcName == "localCheckpoint") plans.add(qe.executedPlan)
-      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
-    spark.listenerManager.register(listener)
-    try {
-      SpatialJoin.knnGeodesic(pts, qs, k = 5, initMeters = 5000.0).collect()
+    // the round's plan: the driver path's aggregation, the distributed
+    // path's checkpoint
+    def roundPlans(roundAction: String): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                               durationNs: Long): Unit =
+          if (funcName == roundAction) plans.add(qe.executedPlan)
+        override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                               exception: Exception): Unit = ()
+      }
       org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
+      spark.listenerManager.register(listener)
+      try {
+        SpatialJoin.knnGeodesic(pts, qs, k = 5, initMeters = 5000.0).collect()
+        org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
+      } finally spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      plans.asScala.toSeq
+    }
     val helper = new AdaptiveSparkPlanHelper {}
-    val rounds = plans.asScala.toSeq
-    assert(rounds.size == 1, s"${rounds.size} round checkpoints")
-    val calls = helper.flatMap(rounds.head)(_.expressions.flatMap(_.collect {
-      case u: ScalaUDF if u.udfName.contains("vincenty") => u
-    }))
-    assert(calls.size == 1, s"${calls.size} Vincenty calls in the round plan:\n${rounds.head}")
+    for (rounds <- Seq(roundPlans("aggregate"), distributedFor(qs)(roundPlans("localCheckpoint")))) {
+      assert(rounds.size == 1, s"${rounds.size} round plans")
+      val calls = helper.flatMap(rounds.head)(_.expressions.flatMap(_.collect {
+        case u: ScalaUDF if u.udfName.contains("vincenty") => u
+      }))
+      assert(calls.size == 1, s"${calls.size} Vincenty calls in the round plan:\n${rounds.head}")
+    }
   }
 
   test("knnGeodesic == brute force through every path (round-1, escalation, fallback)") {
@@ -304,8 +338,8 @@ class SpatialJoinSpec extends AnyFunSuite {
       (1L, 10.0, 45.0), (2L, -60.0, -20.0), (3L, 178.9, 10.0),
       (4L, -179.2, -35.0), (5L, 30.0, 88.5), (6L, 0.0, -89.0))
       .toDF("qid", "qlon", "qlat")
-    val got = SpatialJoin.knnGeodesic(pts, qs, k = 4, initMeters = 150000.0, rounds = 2)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+    def run() = SpatialJoin.knnGeodesic(pts, qs, k = 4, initMeters = 150000.0, rounds = 2)
+    val got = run().collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
     val vin = udf((lon: Double, lat: Double, qlon: Double, qlat: Double) =>
       graft.geom.Vincenty.distanceFixed(lon, lat, qlon, qlat))
     val w = Window.partitionBy("qid").orderBy(col("m").asc, col("id").asc)
@@ -316,6 +350,11 @@ class SpatialJoinSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
     assert(got == brute)
     assert(got.size == 6 * 4)
+    // the distributed rounds (query side over the threshold) give the same
+    // rows under the same schema
+    val Seq((onDriver, driverActs), (distributed, distActs)) = bothPaths(qs)(run())
+    assert(driverActs.contains("aggregate") && distActs.contains("localCheckpoint"), (driverActs, distActs))
+    assert(onDriver == distributed)
     // path coverage sanity (queries counted at each radius of the schedule):
     // query 1 has >= k within the OPENING radius (round-1 path), and at
     // least one query lacks k within the FINAL radius (fallback path)
@@ -760,24 +799,71 @@ class SpatialJoinSpec extends AnyFunSuite {
       14L -> "POLYGON ((12.5 -1.5, 14.5 -1.5, 14.5 1.5, 12.5 1.5, 12.5 -1.5))")
     def df(rows: Seq[(Long, String)]) =
       rows.map { case (id, wkt) => (id, g.toWkb(g.parseWkt(wkt))) }.toDF("id", "wkb")
-    def run(right: Seq[(Long, String)]): Seq[(Long, String)] =
-      SpatialJoin.filterIntersectsAtScale(df(leftWkt), df(right), level = 3)
+    // the driver path (right side under the threshold) and the covering-cell
+    // join (right side one byte over it)
+    def runOn(driver: Boolean)(right: Seq[(Long, String)]): Seq[(Long, String)] = {
+      def once() = SpatialJoin.filterIntersectsAtScale(df(leftWkt), df(right), level = 3)
         .as[(Long, Array[Byte])].collect()
         .map { case (id, wkb) => (id, g.toWkt(g.fromWkb(wkb))) }.sorted.toSeq
+      if (driver) once() else distributedFor(df(right))(once())
+    }
     def brute(right: Seq[(Long, String)]): Seq[(Long, String)] = leftWkt.filter { case (_, l) =>
       right.exists { case (_, r) => g.parseWkt(l).intersects(g.parseWkt(r)) }
     }.map { case (id, wkt) => (id, g.toWkt(g.parseWkt(wkt))) }.sorted
 
-    val got = run(rightWkt)
-    assert(got == brute(rightWkt))
-    // each kept row appears once although it hits several rights in
-    // several shared cells; the row of id 7 that misses stays dropped
-    assert(got.map(_._1) == Seq(1L, 2L, 4L, 6L, 7L, 8L), got)
+    for (run <- Seq(runOn(driver = true) _, runOn(driver = false) _)) {
+      val got = run(rightWkt)
+      assert(got == brute(rightWkt))
+      // each kept row appears once although it hits several rights in
+      // several shared cells; the row of id 7 that misses stays dropped
+      assert(got.map(_._1) == Seq(1L, 2L, 4L, 6L, 7L, 8L), got)
+      assert(run(Nil).isEmpty)
+    }
     val cells = (w: String) => graft.index.Geohash.covering(g.parseWkt(w), 3).toSet
     assert(rightWkt.count { case (_, r) =>
       (cells(leftWkt.head._2) intersect cells(r)).size >= 2 } >= 3,
       "fixture lost its multi-cell pairs")
-    assert(run(Nil).isEmpty)
+  }
+
+  test("filterIntersectsAtScale driver path == covering-cell path: null ids and wkbs, duplicated rows, empty and null rights, column order") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val g = graft.geom.Geo
+    def wkb(wkt: String) = g.toWkb(g.parseWkt(wkt))
+    // extra columns on both sides of (id, wkb): the output puts (id, wkb)
+    // first, then the rest of left in its order
+    val left = spark.createDataFrame(java.util.Arrays.asList(
+      Row("hit", wkb("POINT (4 4)"), 1L, 1.5),
+      Row("null id", wkb("POINT (4 4)"), null, 2.5),
+      Row("null wkb", null, 3L, 3.5),
+      Row("dup", wkb("LINESTRING (0 0, 9 6)"), 4L, 4.5),
+      Row("dup", wkb("LINESTRING (0 0, 9 6)"), 4L, 4.5),
+      Row("miss", wkb("POINT (-50 -50)"), 5L, 5.5),
+      Row("empty", wkb("POLYGON EMPTY"), 6L, 6.5)),
+      StructType(Seq(StructField("tag", StringType), StructField("wkb", BinaryType),
+        StructField("id", LongType), StructField("w", DoubleType))))
+    def right(rows: Row*) = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("id", LongType), StructField("wkb", BinaryType))))
+    val rights = Seq(
+      right(Row(10L, wkb("POLYGON ((1 1, 8 1, 8 5, 1 5, 1 1))")), Row(11L, wkb("POLYGON EMPTY")),
+        Row(12L, null)),
+      right(Row(11L, wkb("POLYGON EMPTY"))),
+      right())
+    val expected = Seq(Seq(s"1|${g.toWkt(g.parseWkt("POINT (4 4)"))}|hit|1.5") ++
+      Seq.fill(2)(s"4|${g.toWkt(g.parseWkt("LINESTRING (0 0, 9 6)"))}|dup|4.5"), Nil, Nil)
+    for ((r, want) <- rights.zip(expected)) {
+      val Seq((onDriver, _), (byCells, _)) = bothPaths(r)(SpatialJoin.filterIntersectsAtScale(left, r))
+      assert(onDriver == byCells, r.collect().toSeq)
+      assert(onDriver._1.fieldNames.toSeq == Seq("id", "wkb", "tag", "w"))
+      val rows = SpatialJoin.filterIntersectsAtScale(left, r).collect().toSeq.map(x =>
+        Seq(x.get(0), g.toWkt(g.fromWkb(x.getAs[Array[Byte]](1))), x.get(2), x.get(3)).mkString("|"))
+      assert(rows.sorted == want, rows)
+    }
+    // the distributed path was the one the raised threshold took
+    val byCells = distributedFor(rights.head)(SpatialJoin.filterIntersectsAtScale(left, rights.head))
+    assert(byCells.queryExecution.analyzed.toString.contains("LeftSemi"))
+    assert(!SpatialJoin.filterIntersectsAtScale(left, rights.head).queryExecution.analyzed.toString
+      .contains("Join"))
   }
 
   test("planar knn == brute force through every path (round-1, escalation, world round)") {
@@ -795,8 +881,8 @@ class SpatialJoinSpec extends AnyFunSuite {
       (1L, 10.0, 45.0), (2L, -60.0, -20.0), (3L, 178.9, 10.0),
       (4L, -179.2, -35.0), (5L, 30.0, 88.5), (6L, 0.0, -89.0))
       .toDF("query_id", "qlon", "qlat")
-    val got = SpatialJoin.knn(pts, qs, k = 4, initDeg = 0.5, rounds = 2)
-      .select("query_id", "rank", "neighbor_id")
+    def run() = SpatialJoin.knn(pts, qs, k = 4, initDeg = 0.5, rounds = 2)
+    val got = run().select("query_id", "rank", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
     val w = Window.partitionBy("query_id").orderBy(col("d2").asc, col("id").asc)
     val bruteDf = pts.crossJoin(qs)
@@ -810,6 +896,11 @@ class SpatialJoinSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
     assert(got == brute)
     assert(got.size == 6 * 4)
+    // the distributed rounds give the same rows, dist2 included, under the
+    // same schema
+    val Seq((onDriver, driverActs), (distributed, distActs)) = bothPaths(qs)(run())
+    assert(driverActs.contains("aggregate") && distActs.contains("localCheckpoint"), (driverActs, distActs))
+    assert(onDriver == distributed)
     // path coverage sanity: query 1 has >= k within the OPENING radius
     // (round-1 path) and at least one query lacks k within the FINAL
     // scheduled radius (world-round path)
@@ -823,7 +914,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     bruteDf.unpersist()
   }
 
-  test("kNN runs one materialization per radius round; empty query side is typed") {
+  test("distributed kNN (query side over the broadcast threshold) runs one materialization per radius round; empty query side is typed") {
     import spark.implicits._
     // a dense cluster at every query: all complete in the opening round
     val centres = Seq((1L, 10.0, 45.0), (2L, -60.0, -20.0), (3L, 120.0, 30.0))
@@ -833,28 +924,100 @@ class SpatialJoinSpec extends AnyFunSuite {
     val qsP = qsG.withColumnRenamed("qid", "query_id")
     // radius pinned, so no density count job: one checkpoint, whose
     // observe() metric is the emptiness probe (no isEmpty execution)
-    val (geoActs, geoExecs, _) =
-      actions(SpatialJoin.knnGeodesic(pts, qsG, k = 4, initMeters = 100000.0))
+    val (geoActs, geoExecs, _) = distributedFor(qsG)(
+      actions(SpatialJoin.knnGeodesic(pts, qsG, k = 4, initMeters = 100000.0)))
     assert(geoActs == Seq("localCheckpoint") && geoExecs == 1, (geoActs, geoExecs))
-    val (plActs, plExecs, _) = actions(SpatialJoin.knn(pts, qsP, k = 4, initDeg = 1.0))
+    val (plActs, plExecs, _) = distributedFor(qsP)(
+      actions(SpatialJoin.knn(pts, qsP, k = 4, initDeg = 1.0)))
     assert(plActs == Seq("localCheckpoint") && plExecs == 1, (plActs, plExecs))
     // and the answers are the round-1 ones: each query's own cluster
-    val got = SpatialJoin.knnGeodesic(pts, qsG, k = 4, initMeters = 100000.0)
-      .select("qid", "neighbor_id").as[(Long, Long)].collect()
+    val got = distributedFor(qsG)(SpatialJoin.knnGeodesic(pts, qsG, k = 4, initMeters = 100000.0)
+      .select("qid", "neighbor_id").as[(Long, Long)].collect())
     assert(got.length == 12 && got.forall { case (q, n) => n / 100 == q })
 
-    // an empty query side gives a typed empty result on both metrics
-    val noG = SpatialJoin.knnGeodesic(pts, qsG.limit(0), k = 4, initMeters = 100000.0)
+    // an empty query side gives a typed empty result on both metrics (an
+    // empty side estimates 0 bytes, so its threshold is −1)
+    val noG = distributedFor(qsG.limit(0))(
+      SpatialJoin.knnGeodesic(pts, qsG.limit(0), k = 4, initMeters = 100000.0))
     assert(noG.schema.map(f => f.name -> f.dataType.simpleString) ==
       Seq("qid" -> "bigint", "rank" -> "int", "neighbor_id" -> "bigint"))
     assert(noG.collect().isEmpty)
-    val noP = SpatialJoin.knn(pts, qsP.limit(0), k = 4, initDeg = 1.0)
+    val noP = distributedFor(qsP.limit(0))(SpatialJoin.knn(pts, qsP.limit(0), k = 4, initDeg = 1.0))
     assert(noP.schema.map(f => f.name -> f.dataType.simpleString) ==
       Seq("query_id" -> "bigint", "rank" -> "int", "neighbor_id" -> "bigint", "dist2" -> "double"))
     assert(noP.collect().isEmpty)
   }
 
-  test("the benchmark's box, dwithin and intersects calls run pinned SQL executions and Spark jobs") {
+  test("kNN on the driver (query side within the broadcast threshold) runs one aggregation per radius round and returns a local result") {
+    import spark.implicits._
+    val centres = Seq((1L, 10.0, 45.0), (2L, -60.0, -20.0), (3L, 120.0, 30.0))
+    val pts = (for ((q, x, y) <- centres; j <- 0 until 12)
+      yield (q * 100 + j, x + (j % 4) * 0.02, y + (j / 4) * 0.02)).toDF("id", "lon", "lat")
+      .repartition(4).persist()
+    pts.count()
+    val qsG = centres.toDF("qid", "qlon", "qlat")
+    val qsP = qsG.withColumnRenamed("qid", "query_id")
+    try {
+      // the query side's collect (a local relation: no job) and ONE round
+      // aggregation: its broadcast of the query cells and its result stage
+      val geo = actions(SpatialJoin.knnGeodesic(pts, qsG, k = 4, initMeters = 100000.0))
+      assert(geo == ((Seq("collect", "aggregate"), 1, 2)), geo)
+      val pl = actions(SpatialJoin.knn(pts, qsP, k = 4, initDeg = 1.0))
+      assert(pl == ((Seq("collect", "aggregate"), 1, 2)), pl)
+      // the result is a local relation: collecting it runs no job
+      val res = SpatialJoin.knnGeodesic(pts, qsG, k = 4, initMeters = 100000.0)
+      val (got, work) = SparkWork.of(spark)(res.select("qid", "neighbor_id").as[(Long, Long)].collect())
+      assert(work.jobs == 0, work)
+      assert(got.length == 12 && got.forall { case (q, n) => n / 100 == q })
+      // a sparse query escalates: one aggregation per round it reaches
+      // (the opening radius and one escalation), then the world round
+      val far = Seq((9L, 0.0, -89.0)).toDF("qid", "qlon", "qlat")
+      val (farActs, _, _) = actions(SpatialJoin.knnGeodesic(pts, far, k = 4, initMeters = 1000.0, rounds = 2))
+      assert(farActs == Seq("collect", "aggregate", "aggregate", "aggregate"), farActs)
+    } finally pts.unpersist()
+  }
+
+  test("kNN driver path == distributed path: ties by id, round 1, escalation, world round, nullable keys, empty side") {
+    import spark.implicits._
+    // query 1: a dense cluster (round 1) with four points on one spot
+    // (ties at equal distance, broken by id); query 2: a ring 0.4° out,
+    // past the opening radius and inside the escalated one; query 3: the
+    // world round; ids deliberately out of order at the tied spot
+    val tied = Seq(57L, 13L, 91L, 22L).map(id => (id, 10.01, 45.01))
+    val cluster = (0 until 6).map(j => (100L + j, 10.05 + j * 0.03, 45.0 + j * 0.02))
+    val ring = (0 until 8).map(j => (200L + j, -60.0 + math.cos(j * 0.785) * 0.4, -20.0 + math.sin(j * 0.785) * 0.4))
+    val pts = (tied ++ cluster ++ ring :+ ((300L, 120.0, 30.0))).toDF("id", "lon", "lat")
+    val qsG = Seq((1L, 10.0, 45.0), (2L, -60.0, -20.0), (3L, -170.0, 80.0)).toDF("qid", "qlon", "qlat")
+    val qsP = qsG.withColumnRenamed("qid", "query_id")
+    // nullable keys and coordinates on the query side
+    val qsN = Seq((Option(1L), Option(10.0), Option(45.0)), (Option(2L), Option(-60.0), Option(-20.0)))
+      .toDF("qid", "qlon", "qlat")
+    val geo = (qs: DataFrame) => SpatialJoin.knnGeodesic(pts, qs, k = 3, initMeters = 20000.0, rounds = 2)
+    val planar = (qs: DataFrame) => SpatialJoin.knn(pts, qs, k = 3, initDeg = 0.2, rounds = 2)
+    for ((qs, run) <- Seq(qsG -> geo, qsP -> planar, qsN -> geo, qsN.withColumnRenamed("qid", "query_id") -> planar,
+                          qsG.limit(0) -> geo, qsP.limit(0) -> planar)) {
+      val Seq((onDriver, driverActs), (distributed, distActs)) = bothPaths(qs)(run(qs))
+      // (an empty side runs no aggregation on the driver)
+      assert(!driverActs.contains("localCheckpoint"), driverActs)
+      assert(distActs.contains("localCheckpoint") && !distActs.contains("aggregate"), distActs)
+      assert(onDriver == distributed, qs.schema)
+    }
+    // the tie: query 1's three nearest are the tied spot's smallest ids
+    val q1 = geo(qsG).filter(col("qid") === 1L).orderBy("rank").select("neighbor_id").as[Long].collect().toSeq
+    assert(q1 == Seq(13L, 22L, 57L), q1)
+    // every path of the schedule ran: round 1 (query 1), escalation
+    // (query 2), the world round (query 3)
+    val acts = SparkWork.of(spark)(geo(qsG))._2.actions
+    assert(acts == Seq("collect", "aggregate", "aggregate", "aggregate"), acts)
+    assert(geo(qsG).count() == 9)
+    // an empty query side keeps its types on both paths
+    val noG = geo(qsG.limit(0))
+    assert(noG.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("qid" -> "bigint", "rank" -> "int", "neighbor_id" -> "bigint"))
+    assert(noG.collect().isEmpty)
+  }
+
+  test("the benchmark's box, dwithin, kNN and intersects calls run pinned SQL executions and Spark jobs") {
     import spark.implicits._
     // the shapes geobench's spatial-join workload collects: a persisted
     // point table, a small box table, query points, WKB points x polygons
@@ -881,13 +1044,27 @@ class SpatialJoinSpec extends AnyFunSuite {
       val cold = actions(SpatialJoin.joinPointsInBoxes(pts, boxes).collect())
       val warm = actions(SpatialJoin.joinPointsInBoxes(pts, boxes).collect())
       val dwithin = actions(SpatialJoin.dwithinJoin(pts, qs, 500000.0).collect())
-      val intersects = actions(SpatialJoin.filterIntersectsAtScale(ptWkb, polys).select("id").collect())
+      def intersectsCall() = actions(SpatialJoin.filterIntersectsAtScale(ptWkb, polys).select("id").collect())
+      val intersects = intersectsCall()
+      val intersectsByCells = distributedFor(polys)(intersectsCall())
+      SpatialJoin.knnGeodesic(pts, qs, 8) // warms the opening-radius memo
+      def knnCall() = actions(SpatialJoin.knnGeodesic(pts, qs, 8).collect())
+      val knn = knnCall()
+      val knnByRounds = distributedFor(qs)(knnCall())
       // (actions, SQL executions, Spark jobs); a shuffle stage and the
       // result stage are each one job under AQE
       assert(cold == ((Seq("collect", "collect"), 2, 4)), cold)
       assert(warm == ((Seq("collect"), 1, 2)), warm)
       assert(dwithin == ((Seq("collect"), 1, 2)), dwithin)
-      assert(intersects == ((Seq("collect"), 1, 5)), intersects)
+      // driver path: the polygons' collect (a local relation: no job),
+      // then one filtering job over the cached points
+      assert(intersects == ((Seq("collect", "collect"), 1, 1)), intersects)
+      assert(intersectsByCells == ((Seq("collect"), 1, 5)), intersectsByCells)
+      // driver path: the queries' collect (no job), one aggregation for
+      // each of the two rounds these sparse points take, then the caller's
+      // collect of a local result (no job)
+      assert(knn == ((Seq("collect", "aggregate", "aggregate", "collect"), 2, 4)), knn)
+      assert(knnByRounds == ((Seq("localCheckpoint", "localCheckpoint", "collect"), 3, 9)), knnByRounds)
     } finally {
       ptWkb.unpersist()
       pts.unpersist()

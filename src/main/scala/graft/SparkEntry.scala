@@ -255,10 +255,10 @@ object SparkEntry {
     * quantize once, then per step (assignment by integer squared
     * distance with smallest-cluster ties → per-dim integer-division
     * means, empty clusters keeping their previous centroid), and the
-    * final assignment emitted with its exact distance. */
+    * final assignment emitted with its exact distance (a BIGINT sum). */
   private def kmeansSql(k: Int, iters: Int): String = {
     val steps = (1 to iters).map { t =>
-      s"""d$t AS (SELECT qd.vec_id, c.cluster, sum((qd.val - c.val) * (qd.val - c.val)) AS dist
+      s"""d$t AS (SELECT qd.vec_id, c.cluster, CAST(sum((qd.val - c.val) * (qd.val - c.val)) AS BIGINT) AS dist
          |  FROM qd JOIN c${t - 1} c ON qd.pos = c.pos GROUP BY 1, 2),
          |a$t AS (SELECT vec_id, cluster FROM (SELECT vec_id, cluster,
          |    row_number() OVER (PARTITION BY vec_id ORDER BY dist ASC, cluster ASC) AS rn
@@ -278,7 +278,7 @@ object SparkEntry {
        |  FROM (SELECT vec_id FROM q ORDER BY vec_id LIMIT $k)),
        |c0 AS (SELECT s.cluster, qd.pos, qd.val FROM seeds s JOIN qd ON qd.vec_id = s.vec_id),
        |$steps,
-       |df AS (SELECT qd.vec_id, c.cluster, sum((qd.val - c.val) * (qd.val - c.val)) AS dist
+       |df AS (SELECT qd.vec_id, c.cluster, CAST(sum((qd.val - c.val) * (qd.val - c.val)) AS BIGINT) AS dist
        |  FROM qd JOIN c$iters c ON qd.pos = c.pos GROUP BY 1, 2)
        |SELECT vec_id, cluster, dist FROM (SELECT vec_id, cluster, dist,
        |    row_number() OVER (PARTITION BY vec_id ORDER BY dist ASC, cluster ASC) AS rn

@@ -30,20 +30,18 @@ import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory
   * crossJoin code path anywhere in the join family. Both metrics share
   * one round loop that materializes each round once.
   *
-  * The kNN rounds and the intersects filter each have two paths, chosen
-  * per call by [[graft.plans.DriverPath.fitsBroadcast]] on the query side
-  * (the kNN queries, the intersects right side): at or under
-  * `spark.sql.autoBroadcastJoinThreshold` the call runs on the driver,
-  * above it (or at −1) distributed; both give the same rows under the same
-  * schema. Per call, over a cached point side, with no stats job:
+  * The kNN rounds and the intersects filter each have two paths, placed
+  * per call by [[graft.plans.DriverPath.place]] on the query side (the kNN
+  * queries, the intersects right WKBs); both give the same rows under the
+  * same schema. Per call, over a cached point side and a local query side
+  * (whose placement run is one execution with no job), with no stats job:
   *  - kNN on the driver: one aggregation execution per radius round (its
   *    query-cell broadcast and its result stage: two jobs) and a local
   *    result; distributed: one checkpoint execution per round (three or
   *    four jobs with its rank window's exchange) and the caller's collect
   *    of their union (one more job).
   *  - intersects on the driver: the caller's action is one execution of
-  *    one job (a local right side collects without one); distributed: one
-  *    execution of five jobs.
+  *    one job; distributed: one execution of five jobs.
   */
 object SpatialJoin {
 
@@ -453,17 +451,17 @@ object SpatialJoin {
     * (key, qlon, qlat); `round(qs, radius)` gives (key, id, `dist`)
     * candidates, a superset of every pair within the radius, and the
     * `dist` value at the radius (the cutoff); `world(qs)` gives every
-    * pair; returns (key, rank, neighbor_id, `dist`). A query side that
-    * fits the broadcast threshold runs the loop on the driver
-    * ([[knnRoundsOnDriver]]: one aggregation per round, a local result);
-    * a larger one, or any at threshold −1, runs [[knnRoundsDistributed]]. */
+    * pair; returns (key, rank, neighbor_id, `dist`). The query side is
+    * placed by [[graft.plans.DriverPath.place]]: on the driver the loop is
+    * [[knnRoundsOnDriver]] (one aggregation per round, a local result),
+    * distributed it is [[knnRoundsDistributed]]. */
   private def knnRounds(queries: DataFrame, k: Int, dist: String,
                         initRadius: Double, rounds: Int,
                         round: (DataFrame, Double) => (DataFrame, Double),
                         world: DataFrame => DataFrame): DataFrame =
-    if (graft.plans.DriverPath.fitsBroadcast(queries))
-      knnRoundsOnDriver(queries, k, dist, initRadius, rounds, round, world)
-    else knnRoundsDistributed(queries, k, dist, initRadius, rounds, round, world)
+    graft.plans.DriverPath.place(queries)(
+      knnRoundsOnDriver(queries, _, k, dist, initRadius, rounds, round, world))(
+      knnRoundsDistributed(_, k, dist, initRadius, rounds, round, world))
 
   /** [[knnRounds]] distributed, one eager checkpoint a round. A round ranks its
     * candidates by (key; dist, id) together with one sentinel per open
@@ -523,7 +521,7 @@ object SpatialJoin {
   }
 
   /** [[knnRounds]] with the open queries, the escalation and the world
-    * round on the driver: the query side is collected once, and each round
+    * round on the driver, from the placed `rows` of `queries`: each round
     * is ONE aggregation over its candidates ([[KnnTop]]) that keeps, per
     * query, the k smallest (dist, id) among the candidates strictly inside
     * the cutoff (all of them in the world round). A query holding k of them
@@ -533,16 +531,14 @@ object SpatialJoin {
     * the fields its sentinel union would (a nullable neighbor id, and
     * nullable coordinates for the queries it leaves open), the world round
     * its own. */
-  private def knnRoundsOnDriver(queries: DataFrame, k: Int, dist: String,
+  private def knnRoundsOnDriver(queries: DataFrame, rows: Array[InternalRow], k: Int, dist: String,
                                 initRadius: Double, rounds: Int,
                                 round: (DataFrame, Double) => (DataFrame, Double),
                                 world: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     val spark = queries.sparkSession
     val Seq(key, qlon, qlat) = queries.columns.toSeq
-    val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToCatalystConverter(queries.schema)
-    var open: Seq[InternalRow] = queries.collect().toSeq.map(toInternal(_).asInstanceOf[InternalRow])
+    var open: Seq[InternalRow] = rows.toSeq
     var qSchema = queries.schema
     var schema = Option.empty[StructType]
     val out = Seq.newBuilder[InternalRow]
@@ -745,36 +741,33 @@ object SpatialJoin {
     * intersects` semantics). Two paths, the same rows, schema and column
     * order:
     *
-    *  - driver path, when `right` fits the broadcast threshold
-    *    ([[graft.plans.DriverPath.fitsBroadcast]]): `right`'s WKBs are
-    *    collected once into a [[graft.geom.IntersectsAny]] index (an
-    *    STR-tree of prepared geometries, built once per task) and ONE
-    *    filter over a single scan of `left` keeps the rows it hits. One
-    *    execution for the collect (no job for a local `right`), then the
-    *    caller's action: one job over a cached `left`.
-    *  - distributed path, otherwise: covering-cell equi-join at `level` →
-    *    exact JTS refine against the prepared right geometry → left-semi on
-    *    (id, wkb). A pair sharing several cells is refined once per shared
-    *    cell; the semi-join collapses those repeated hits, so no dedup
-    *    exchange is needed, and a row is kept on its own geometry even when
-    *    another row shares its id. The caller's action is one execution of
-    *    five jobs over a cached `left` (cover explode, shuffle join, and a
-    *    second read of `left` for the semi-join). */
+    *  - driver path: `right`'s placed WKBs ([[graft.plans.DriverPath.place]])
+    *    become a [[graft.geom.IntersectsAny]] index (an STR-tree of
+    *    prepared geometries, built once per task) and ONE filter over a
+    *    single scan of `left` keeps the rows it hits. The caller's action
+    *    is one job over a cached `left`.
+    *  - distributed path: covering-cell equi-join at `level` against the
+    *    placement's kept WKBs → exact JTS refine → left-semi on (id, wkb).
+    *    A pair sharing several cells is refined once per shared cell; the
+    *    semi-join collapses those repeated hits, so no dedup exchange is
+    *    needed, and a row is kept on its own geometry even when another row
+    *    shares its id. The caller's action is one execution of five jobs
+    *    over a cached `left` (cover explode, shuffle join, and a second
+    *    read of `left` for the semi-join). */
   def filterIntersectsAtScale(left: DataFrame, right: DataFrame,
                               level: Int = 3): DataFrame =
-    if (graft.plans.DriverPath.fitsBroadcast(right)) {
-      val any = new graft.geom.IntersectsAny(
-        right.select("wkb").collect().toSeq.collect { case Row(w: Array[Byte]) => w })
+    graft.plans.DriverPath.place(right.select("wkb")) { rows =>
+      val any = new graft.geom.IntersectsAny(rows.toSeq.collect { case r if !r.isNullAt(0) => r.getBinary(0) })
       val hits = udf((wkb: Array[Byte]) => any(wkb))
       // the left_semi join's column order: its keys, then the rest of left
       left.filter(col("id").isNotNull && hits(col("wkb"))).select(
         Seq(col("id"), col("wkb")) ++
           left.columns.filterNot(Set("id", "wkb")).map(c => left.col(s"`$c`")): _*)
-    } else filterIntersectsByCells(left, right, level)
+    }(filterIntersectsByCells(left, _, level))
 
   private def filterIntersectsByCells(left: DataFrame, right: DataFrame, level: Int): DataFrame = {
-    // left/right: (id, wkb). Explode both to geohash covering cells; a
-    // null wkb covers nothing
+    // left: (id, wkb), right: (wkb). Explode both to geohash covering
+    // cells; a null wkb covers nothing
     val coverUdf = udf((wkb: Array[Byte]) =>
       if (wkb == null) Seq.empty[String] else Geohash.covering(Geo.fromWkb(wkb), level))
     val lc = left.select(col("id"), col("wkb"), explode(coverUdf(col("wkb"))).as("cell"))

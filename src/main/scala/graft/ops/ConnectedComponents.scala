@@ -10,26 +10,15 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * dedup CLUSTERS with a deterministic keeper (component = min member id,
   * which IS the keeper id under the engine's min-id-keeper convention).
   *
-  * Two paths, chosen by one bounded collect ([[labels]]) that keeps the
-  * edge rows it computed and brings at most cap + 1 of them to the
-  * driver, cap being the rows whose symmetrized copy (ROW_BYTES a row,
-  * both directions) fits under the session's
-  * `spark.sql.autoBroadcastJoinThreshold`.
+  * Two paths, placed by [[graft.plans.DriverPath.place]] on the edge
+  * list, each row counted twice (the rounds read both directions):
+  *  - driver path: the placement run is its one Spark execution (one job
+  *    over a materialized edge list); [[unionFind]] labels the rows and the non-identity labels
+  *    become a broadcast table;
+  *  - round path: the placement run, the edge checkpoint, then one
+  *    checkpoint per round. The rounds read the placement's kept rows, so
+  *    the edge plan (typically a pair join) is evaluated once.
   *
-  * Driver path: up to cap rows came back, which is all of them. They are
-  * labeled by union-find over primitive arrays, and the non-identity
-  * labels become a broadcast table. The collect is the path's only Spark
-  * execution. On geobench `geoq_stream_neardup`'s pair graph (1,145
-  * pairs, traced, while that benchmark still called this object) the
-  * rounds cost 8 jobs and 0.42 s a call, against 1 job and 0.05 s for
-  * collecting and labeling an already materialized edge list. The
-  * benchmark no longer reaches this object: its DedupPipeline input fits
-  * the broadcast threshold, so the pipeline labels its pairs on the driver
-  * with [[unionFind]] itself. A threshold of −1 skips the collect and
-  * always takes the round path.
-  *
-  * Round path: cap + 1 rows came back. The rounds read the kept rows, so
-  * the edge plan is not evaluated again, symmetrized into one checkpoint.
   * Min-label propagation with a POINTER-JUMPING shortcut each
   * round (hash-to-min family, cf. Kiveris et al. "Connected Components in
   * MapReduce and Beyond", SOCC 2014): every round each vertex takes the
@@ -75,29 +64,26 @@ object ConnectedComponents {
   private val JUMPS = 1
 
   /** Name of the edge-count observe() metric: (rows), the input's edge
-    * rows, one direction as given. The bounded collect reports it, which
-    * reads every row on the driver path; on the round path the edge
-    * checkpoint reports the full count after it (the collect stopped at
-    * cap + 1). */
+    * rows, one direction as given. The placement run reports it; on the
+    * round path the edge checkpoint reports it again. */
   private[graft] val EDGE_METRIC = "graft_cc_edges"
 
-  /** Name of the path's observe() metric: (round = 0) on the bounded
-    * collect, then (round, changed, rows) on each round's checkpoint. Its
+  /** Name of the path's observe() metric: (round = 0) on the placement
+    * run, then (round, changed, rows) on each round's checkpoint. Its
     * first column, the last value the bench's observed map keeps, is the
     * path taken: 0 = labeled on the driver, N = N rounds. */
   private[graft] val METRIC = "graft_cc_round"
 
-  /** Bytes a row of two longs (an edge row or a label-table row) counts
-    * against the broadcast threshold: Spark's
+  /** Bytes a label-table row of two longs counts against the broadcast
+    * threshold when the rounds choose their join strategy: Spark's
     * `EstimationUtils.getSizePerRow` for it (8 bytes of row overhead + 8
     * per long). */
   private val ROW_BYTES = 24L
 
-  /** Drop the persisted RDD blocks under a localCheckpoint (or a
-    * `bridge.takeAndKeep` result) NOW: `Dataset.unpersist` only talks to
-    * the CacheManager, which never saw them, so superseded label copies
-    * would otherwise sit in
-    * block-manager storage until GC-driven cleanup — up to maxRounds full
+  /** Drop the persisted RDD blocks under a localCheckpoint NOW:
+    * `Dataset.unpersist` only talks to the CacheManager, which never saw
+    * them, so superseded label copies would otherwise sit in block-manager
+    * storage until GC-driven cleanup — up to maxRounds full
     * label tables on a big graph. */
   private[graft] def dropCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
@@ -137,30 +123,14 @@ object ConnectedComponents {
     * this table; a caller that holds its own vertex-keyed rows can join
     * them to it directly.
     *
-    * One bounded collect of the edges (`bridge.takeAndKeep`) keeps the
-    * rows it computed and brings at most cap + 1 of them to the driver,
-    * cap = threshold / (2 · ROW_BYTES): the symmetrized list the rounds
-    * read counts ROW_BYTES a row against the threshold. Up to cap rows came
-    * back complete and are labeled on the driver; cap + 1 rows take the
-    * rounds, which read the kept rows, so the edge plan (typically a pair
-    * join) is evaluated once either way. The kept blocks are released
-    * before this returns. A threshold of −1 skips the collect and always
-    * runs the rounds. */
+    * The edge list is placed (see the object doc): labeled on the driver,
+    * or by the rounds over the placement's kept rows. */
   def labels(vertices: DataFrame, edges: DataFrame, maxRounds: Int = 30,
-             onRound: (Int, Double, Long) => Unit = (_, _, _) => ()): DataFrame = {
-    val threshold =
-      vertices.queryExecution.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val oneDir = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    if (threshold < 0) return rounds(vertices, oneDir, maxRounds, onRound, threshold)
-    val cap = math.min(threshold / (2 * ROW_BYTES), Int.MaxValue - 1L).toInt
-    val (es, kept) = org.apache.spark.sql.graft.bridge.takeAndKeep(
-      oneDir.observe(EDGE_METRIC, count(lit(1)).as("rows"))
-        .observe(METRIC, lit(0L).as("round")), cap + 1)
-    try
-      if (es.length <= cap) driverLabels(vertices.sparkSession, es)
-      else rounds(vertices, kept, maxRounds, onRound, threshold)
-    finally dropCheckpoint(kept)
-  }
+             onRound: (Int, Double, Long) => Unit = (_, _, _) => ()): DataFrame =
+    graft.plans.DriverPath.place(edges.select(col("src").cast("long"), col("dst").cast("long")),
+      copies = 2, metrics = _.observe(EDGE_METRIC, count(lit(1)).as("rows"))
+        .observe(METRIC, lit(0L).as("round")))(
+      driverLabels(vertices.sparkSession, _))(rounds(vertices, _, maxRounds, onRound))
 
   /** Labels the collected edge rows by union-find ([[unionFind]]); only
     * ids whose label is not their own enter the (broadcast) table. */
@@ -209,7 +179,7 @@ object ConnectedComponents {
     * every round and dropped once the labels are materialized, and returns
     * the non-identity labels. */
   private def rounds(vertices: DataFrame, edges: DataFrame, maxRounds: Int,
-                     onRound: (Int, Double, Long) => Unit, threshold: Long): DataFrame = {
+                     onRound: (Int, Double, Long) => Unit): DataFrame = {
     // both directions from ONE read of the edges; the input's row count
     // (half the symmetrized rows) rides the checkpoint's root
     val symObs = edges
@@ -218,13 +188,15 @@ object ConnectedComponents {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .observe(EDGE_METRIC, (count(lit(1)) / 2).cast("long").as("rows"))
     val sym = symObs.localCheckpoint(true)
-    try propagate(vertices, sym, maxRounds, onRound, threshold)
+    try propagate(vertices, sym, maxRounds, onRound)
       .filter(col("component") =!= col("id"))
     finally dropCheckpoint(sym)
   }
 
   private def propagate(vertices: DataFrame, sym: DataFrame, maxRounds: Int,
-                        onRound: (Int, Double, Long) => Unit, threshold: Long): DataFrame = {
+                        onRound: (Int, Double, Long) => Unit): DataFrame = {
+    val threshold =
+      vertices.queryExecution.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     // Round 1 reads `vertices` directly: its labels are the identity map,
     // so there is nothing to checkpoint before the first aggregation.
     var labels = vertices.select(col("id"), col("id").as("component"))

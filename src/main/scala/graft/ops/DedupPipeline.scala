@@ -1,9 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The END-TO-END dedup pipeline — the production composition a corpus
   * operator actually calls, wiring the gated pieces in their scale
@@ -35,39 +37,37 @@ import org.apache.spark.sql.types._
   * keeper = min id over the row's full dedup cluster (exact group ∪
   * transitive near-dup closure). `keeper == id` marks the survivor set.
   *
-  * Two paths, chosen by the estimate Spark uses before it collects a
-  * relation to the driver for a broadcast join
-  * ([[graft.plans.DriverPath.fitsBroadcast]]): when the session's
-  * `spark.sql.autoBroadcastJoinThreshold` is ≥ 0 and the (id, text)
-  * input's optimized-plan `sizeInBytes` is at or below it, and the id
-  * column is integral, the pipeline runs on the driver; otherwise it runs
-  * distributed. A threshold of −1 always runs distributed. Both return
-  * the same rows under the same schema, and both report the banded
-  * join's candidate rows under `metricName`.
+  * Two paths, placed by [[graft.plans.DriverPath.place]] on the
+  * fingerprint rows (id, key_md5, sim): the normalized-key md5 and the
+  * SimHash of the normalized text, computed in tasks for every row. A
+  * non-integral id column always runs distributed. Both paths return the
+  * same rows under the same schema, and both report the banded join's
+  * candidate rows under `metricName`.
   *
   * Driver path, two Spark executions counting the caller's action:
-  *   1. one collect of (id, key_md5, sim): the normalized-key md5 and the
-  *      SimHash of the normalized text, computed in tasks for every row.
-  *      On the driver the min id per key is the rep,
-  *      [[graft.join.SimilarityJoin.driverHammingPairs]] joins the reps'
-  *      fingerprints (the distributed join's bands and candidates) and
-  *      [[ConnectedComponents.unionFind]] labels the pair graph.
+  *   1. the placement run, whose rows come to the driver. There the min id
+  *      per key is the rep, [[graft.join.SimilarityJoin.driverHammingPairs]]
+  *      joins the reps' fingerprints (the distributed join's bands and
+  *      candidates) and [[ConnectedComponents.unionFind]] labels the pair
+  *      graph.
   *   2. the caller's action on the returned local DataFrame. It carries
   *      the band-row metric as an observe() of a literal, so this action,
   *      not one inside `run`, reports it.
   *
-  * Distributed path, three Spark executions counting the caller's action:
-  *   1. one eager checkpoint of (id, rep, sim): the normalized key and the
-  *      per-key min-id rep in ONE shuffle (window min, no self-join), with
-  *      the fingerprint computed only on rep rows (id == rep) and the text
-  *      dropped. The Hamming join reads its (id, sim) rows as a column
-  *      subset of this materialization, so it takes no checkpoint of its
-  *      own; the keeper join reads (id, rep).
-  *   2. connected components' bounded collect of the pair list
+  * Distributed path, four Spark executions counting the caller's action
+  * (three at threshold −1, where nothing is placed):
+  *   1. the placement run, whose rows stay in its kept blocks;
+  *   2. one eager checkpoint of (id, rep, sim) over them: the per-key
+  *      min-id rep in ONE shuffle (window min, no self-join), with the
+  *      fingerprint kept only on rep rows (id == rep). The Hamming join
+  *      reads its (id, sim) rows as a column subset of this
+  *      materialization, so it takes no checkpoint of its own; the keeper
+  *      join reads (id, rep).
+  *   3. connected components' placement run on the pair list
   *      ([[ConnectedComponents.labels]]), which evaluates the Hamming join
-  *      and reports its band rows; a pair graph that fits the broadcast
-  *      threshold is labeled on the driver, a larger one runs the rounds.
-  *   3. the caller's action on the result: each row's rep left-joined to
+  *      and reports its band rows; a pair graph that fits is labeled on
+  *      the driver, a larger one runs the rounds.
+  *   4. the caller's action on the result: each row's rep left-joined to
   *      the non-identity label table, keeper = coalesce(component, rep).
   */
 object DedupPipeline {
@@ -76,23 +76,27 @@ object DedupPipeline {
 
   def run(docs: DataFrame, idCol: String, textCol: String, k: Int = 3,
           metricName: String = "dedup_pipeline_band_rows"): DataFrame = {
-    val input = docs.select(col(idCol).as("id"), col(textCol).as("text"))
-    val fits = Seq(ByteType, ShortType, IntegerType, LongType).contains(input.schema("id").dataType) &&
-      graft.plans.DriverPath.fitsBroadcast(input)
-    if (fits) driver(input, idCol, k, metricName)
-    else distributed(input, idCol, k, metricName)
+    val side = fingerprints(docs, idCol, textCol)
+    if (Seq(ByteType, ShortType, IntegerType, LongType).contains(side.schema("id").dataType))
+      graft.plans.DriverPath.place(side)(
+        driver(_, side, idCol, k, metricName))(distributed(_, idCol, k, metricName))
+    else distributed(side, idCol, k, metricName)
   }
 
-  private def driver(input: DataFrame, idCol: String, k: Int, metricName: String): DataFrame = {
-    val rows = Normalize.withKey(input, "text")
+  /** The placed side: (id, key_md5, sim) for every row of `docs`. */
+  private[graft] def fingerprints(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    Normalize.withKey(docs.select(col(idCol).as("id"), col(textCol).as("text")), "text")
       .select(col("id"), col("key_md5"), simhash(Normalize.normKey(col("text"))).as("sim"))
-      .collect()
-    val ids = rows.map(r => if (r.isNullAt(0)) 0L else r.getAs[Number](0).longValue)
+
+  private def driver(rows: Array[InternalRow], side: DataFrame, idCol: String, k: Int,
+                     metricName: String): DataFrame = {
+    val id = side.schema("id")
+    val ids = rows.map(r => if (r.isNullAt(0)) 0L else r.get(0, id.dataType).asInstanceOf[Number].longValue)
     // the row holding each key's min id; a row with a null id is no rep
-    val repRow = scala.collection.mutable.HashMap.empty[String, Int]
+    val repRow = scala.collection.mutable.HashMap.empty[UTF8String, Int]
     rows.indices.foreach { i =>
       if (!rows(i).isNullAt(0)) {
-        val key = rows(i).getString(1)
+        val key = rows(i).getUTF8String(1)
         if (repRow.get(key).forall(j => ids(i) < ids(j))) repRow(key) = i
       }
     }
@@ -100,30 +104,25 @@ object DedupPipeline {
     val pairs = graft.join.SimilarityJoin.driverHammingPairs(
       reps.map(ids), reps.map(rows(_).getLong(2)), k, bits = 64, bands = 4)
     val (labeled, components) = ConnectedComponents.unionFind(pairs.idA, pairs.idB)
-    val out = new java.util.ArrayList[Row](rows.length)
-    rows.foreach { r =>
-      val keeper = repRow.get(r.getString(1)) match {
-        case Some(j) =>
-          val l = java.util.Arrays.binarySearch(labeled, ids(j))
-          if (l >= 0) components(l) else ids(j)
-        case None => null
+    val out = rows.map { r =>
+      val keeper = repRow.get(r.getUTF8String(1)).map { j =>
+        val l = java.util.Arrays.binarySearch(labeled, ids(j))
+        if (l >= 0) components(l) else ids(j)
       }
-      out.add(Row(r.get(0), keeper))
+      InternalRow(r.get(0, id.dataType), keeper.getOrElse(null))
     }
     // the distributed path's schema: the input's id field, and a nullable
     // keeper (there it is coalesced from a window min)
-    val id = input.schema("id")
-    input.sparkSession.createDataFrame(out, StructType(Seq(
-        StructField(idCol, id.dataType, id.nullable), StructField("keeper", LongType, true))))
+    org.apache.spark.sql.graft.bridge.localFrame(side.sparkSession, StructType(Seq(
+        StructField(idCol, id.dataType, id.nullable), StructField("keeper", LongType, true))), out.toSeq)
       .observe(metricName, lit(pairs.bandRows).as("rows"))
   }
 
-  private def distributed(input: DataFrame, idCol: String, k: Int, metricName: String): DataFrame = {
-    val withRep = Normalize.withKey(input, "text")
+  private def distributed(fingerprints: DataFrame, idCol: String, k: Int, metricName: String): DataFrame = {
+    val withRep = fingerprints
       .withColumn("rep", min(col("id")).over(Window.partitionBy("key_md5")))
-      .select(col("id"), col("rep"),
-        // one fingerprint per exact-dup group, over the normalized text
-        when(col("id") === col("rep"), simhash(Normalize.normKey(col("text")))).as("sim"))
+      // one fingerprint per exact-dup group
+      .select(col("id"), col("rep"), when(col("id") === col("rep"), col("sim")).as("sim"))
       .localCheckpoint(true)
     val sims = withRep.filter(col("id") === col("rep")).select(col("id"), col("sim"))
     val pairs = graft.join.SimilarityJoin

@@ -1,20 +1,44 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 
-/** The one test behind every operator's driver path
-  * ([[graft.ops.DedupPipeline]], [[graft.join.SpatialJoin]]'s kNN rounds and
-  * intersects filter): the estimate Spark itself uses before it collects a
-  * relation to the driver for a broadcast join. Sharing it keeps the path
-  * choice from drifting between operators. */
-object DriverPath {
+/** Placement: whether an operator with two paths (the kNN rounds and the
+  * intersects filter of [[graft.join.SpatialJoin]],
+  * [[graft.ops.DedupPipeline]], [[graft.ops.ConnectedComponents]]) runs on
+  * the driver or distributed. [[place]] alone decides, so the choice
+  * cannot drift between operators.
+  *  - Budget: the session's `spark.sql.autoBroadcastJoinThreshold` bytes,
+  *    divided by the times an operator counts each row (connected
+  *    components count both directions of an edge); the threshold is the
+  *    only input. At −1 nothing runs and the path is always distributed.
+  *  - Exact bytes: the side runs once and its rows' UnsafeRow sizes are
+  *    summed. A plan estimate would not do: it passes a Filter's input size
+  *    through, so a few rows filtered out of a large table look as large
+  *    as the table.
+  *  - One execution, reported as `collect`: a local relation hands over
+  *    its rows with no Spark job; any other side runs one job whose tasks
+  *    persist their partitions and report only their byte counts, and a
+  *    total within the budget is read from the stored blocks with no
+  *    further job. The driver never receives more than the budget.
+  *  - Kept blocks: the distributed path reads the stored partitions, so
+  *    the side is not evaluated twice. They are released before `place`
+  *    returns; a lazy result reading them later recomputes them from their
+  *    lineage (the same rows, not reused).
+  * The run is [[org.apache.spark.sql.graft.bridge.collectKept]]. */
+private[graft] object DriverPath {
 
-  /** True when the session's `spark.sql.autoBroadcastJoinThreshold` is ≥ 0
-    * and `df`'s optimized-plan `sizeInBytes` is at or below it; a threshold
-    * of −1 is always false and optimizes nothing. */
-  def fitsBroadcast(df: DataFrame): Boolean = {
-    val qe = df.queryExecution
-    val threshold = qe.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    threshold >= 0 && qe.optimizedPlan.stats.sizeInBytes <= threshold
+  /** `driver` of `side`'s rows if they fit, each counted `copies` times,
+    * else `distributed` of a DataFrame over them (`side` itself, unrun, at
+    * −1); `metrics` adds observe() metrics to the run only. */
+  def place[T](side: DataFrame, copies: Int = 1, metrics: DataFrame => DataFrame = identity)(
+      driver: Array[InternalRow] => T)(distributed: DataFrame => T): T = {
+    val threshold = side.queryExecution.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold < 0) distributed(side)
+    else {
+      val (placed, persisted) = org.apache.spark.sql.graft.bridge.collectKept(metrics(side), threshold / copies)
+      try placed.fold(driver, distributed)
+      finally persisted.foreach(_.unpersist(false))
+    }
   }
 }

@@ -1,8 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, classic}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{LocalTableScanExec, LogicalRDD, SQLExecution}
+import org.apache.spark.storage.{RDDBlockId, StorageLevel}
 
 /** Minimal visibility bridge: `Column <-> catalyst Expression` converters
   * are `private[sql]` in Spark 4, so custom native expressions (the usual
@@ -38,31 +42,39 @@ object bridge {
   def sessionUUID(spark: org.apache.spark.sql.SparkSession): String =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
 
-  /** A bounded collect that keeps what it computed: ONE SQL execution,
-    * reported to listeners as `collect` (so observe() metrics and plan
-    * listeners see it like any action), runs `df` into an RDD persisted
-    * MEMORY_AND_DISK and brings at most `n` of its rows to the driver.
-    * Returns those rows and a DataFrame over the persisted RDD, which
-    * reads the stored partitions and computes, once, any partition the
-    * bounded take left unread (it keeps the lineage, so no recompute of
-    * the shuffle stages the take ran). The caller drops the blocks with
-    * `rdd.unpersist` on the returned plan's `LogicalRDD`. `Dataset
-    * .persist` would give the same reuse, but a plan reading a cached
-    * relation under AQE first runs a whole job to materialize it, and
-    * `withAction`, the helper behind `collect` and `localCheckpoint`, is
-    * private. */
-  def takeAndKeep(df: org.apache.spark.sql.DataFrame, n: Int)
-      : (Array[org.apache.spark.sql.catalyst.InternalRow], org.apache.spark.sql.DataFrame) = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+  /** The run behind [[graft.plans.DriverPath.place]], which describes it:
+    * ONE SQL execution of `df`, reported to listeners as `collect` (a
+    * `Dataset.persist` would add a job under AQE, and `withAction` is
+    * private). Returns `df`'s rows if their UnsafeRow bytes total at most
+    * `budget`, else a DataFrame over what the run computed, and the RDD it
+    * persisted, if any (unpersisted here if the run fails). The rows are
+    * read from the stored blocks, block by block (draining each releases
+    * its read lock); a missing block (a lost executor) returns the
+    * DataFrame, which recomputes it. */
+  def collectKept(df: DataFrame, budget: Long): (Either[Array[InternalRow], DataFrame], Option[RDD[_]]) = {
+    def bytes(r: InternalRow): Long = r.asInstanceOf[UnsafeRow].getSizeInBytes.toLong
+    val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
     val qe = ds.queryExecution
-    val (kept, rows) =
-      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
-        val rdd = qe.executedPlan.execute().map(_.copy())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (rdd, rdd.take(n))
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan match {
+        case local: LocalTableScanExec =>
+          val rows = local.executeCollect()
+          (if (rows.iterator.map(bytes).sum <= budget) Left(rows) else Right(df), None)
+        case plan =>
+          val rdd = plan.execute().map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+          val total = try ds.sparkSession.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => it.map(bytes).sum).sum
+            catch { case e: Throwable => rdd.unpersist(false); throw e }
+          val blocks = org.apache.spark.SparkEnv.get.blockManager
+          val stored = Array.newBuilder[InternalRow]
+          val complete = total <= budget && rdd.partitions.indices.forall { p =>
+            blocks.get[InternalRow](RDDBlockId(rdd.id, p))
+              .map(_.data.foreach(r => stored += r.asInstanceOf[InternalRow])).nonEmpty
+          }
+          (if (complete) Left(stored.result())
+           else Right(classic.Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, isStreaming = false))),
+            Some(rdd))
       }
-    (rows, org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
-      org.apache.spark.sql.execution.LogicalRDD.fromDataset(kept, ds, isStreaming = false)))
+    }
   }
 
   /** `RDD.aggregate` over `df`'s internal rows as ONE SQL execution,

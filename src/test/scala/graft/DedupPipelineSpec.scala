@@ -109,12 +109,8 @@ class DedupPipelineSpec extends AnyFunSuite {
 
   /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold` set to
     * `threshold` (None: as it is), restoring the previous setting after. */
-  private def withThreshold[T](threshold: Option[BigInt])(f: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(key)
-    threshold.foreach(t => spark.conf.set(key, t.toString))
-    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  private def withThreshold[T](threshold: Option[Long])(f: => T): T =
+    Placement.withThreshold(spark, threshold)(f)
 
   /** Runs `f` with the threshold at −1, which forces DedupPipeline's
     * distributed path and connected components' rounds. */
@@ -160,15 +156,16 @@ class DedupPipelineSpec extends AnyFunSuite {
 
   /** DedupPipeline over the benchmark-shaped fixture: its keepers and the
     * Spark work of running it and collecting the result. `belowInput` sets
-    * the broadcast threshold one byte below the input's size estimate, so
-    * the pipeline runs distributed while its pair list still fits. */
+    * the broadcast threshold one byte below the bytes of the placed
+    * fingerprint rows, so the pipeline runs distributed while its pair
+    * list still fits. */
   private def benchRun(belowInput: Boolean): (Map[Long, Long], SparkWork) = {
     val sp = spark
     import sp.implicits._
     val docs = benchRows.toDF("id", "text").repartition(sp.sparkContext.defaultParallelism).cache()
     docs.count()
     val threshold =
-      if (belowInput) Some(docs.select("id", "text").queryExecution.optimizedPlan.stats.sizeInBytes - 1)
+      if (belowInput) Some(Placement.bytes(graft.ops.DedupPipeline.fingerprints(docs, "id", "text")) - 1)
       else None
     try {
       val (out, work) = withThreshold(threshold)(
@@ -187,11 +184,12 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(want.values.toSet.size < 1200, "no near-dup pair joined two groups — weak fixture")
   }
 
-  test("distributed pipeline at benchmark size (input above the threshold): three SQL executions; keepers == reference") {
+  test("distributed pipeline at benchmark size (fingerprints above the threshold): four SQL executions; keepers == reference") {
     val (got, work) = benchRun(belowInput = true)
-    // the (id, rep, sim) checkpoint, connected components' bounded collect
-    // (which runs the Hamming join) and the caller's collect
-    assert(work.actions == Seq("localCheckpoint", "collect", "collect"), work)
+    // the fingerprints' placement run, the (id, rep, sim) checkpoint over
+    // its kept rows, connected components' placement run (which runs the
+    // Hamming join) and the caller's collect
+    assert(work.actions == Seq("collect", "localCheckpoint", "collect", "collect"), work)
     assert(work.jobs <= 7, work)
     assert(got == referenceKeepers(benchRows))
   }

@@ -390,7 +390,7 @@ class JoinOpsSpec extends AnyFunSuite {
       val labels = out.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       (labels, changed.toSeq, nJobs, acts)
     }
-    // the bounded collect reports both metrics whichever path follows; the
+    // the placement run reports both metrics whichever path follows; the
     // round path's edge checkpoint reports the edge count again
     val boundedCollect = ("collect", Set(ConnectedComponents.EDGE_METRIC, ConnectedComponents.METRIC))
     val edgeCk = ("localCheckpoint", Set(ConnectedComponents.EDGE_METRIC))
@@ -406,19 +406,19 @@ class JoinOpsSpec extends AnyFunSuite {
         val (labels, changed, nJobs, acts) = traced(vs, es)
         assert(labels == ccTruth(vs, es), s"threshold $threshold")
         if (threshold.isEmpty) {
-          // the driver path: the bounded collect is its one execution
+          // the driver path: the placement run is its one execution
           assert(acts == Seq(boundedCollect) && changed.isEmpty, s"$acts $changed")
           assert(nJobs <= 2, s"$nJobs jobs")
         } else {
           val rounds = changed.size
           assert(rounds >= 3 && changed.last == 0L && changed.init.forall(_ > 0L), s"$changed")
-          // (the bounded collect, unless -1), the edge checkpoint, then one
+          // (the placement run, unless -1), the edge checkpoint, then one
           // eager checkpoint per round: no count() or any other action
           val collects = if (threshold.contains(-1L)) Seq.empty else Seq(boundedCollect)
           assert(acts == collects ++ (edgeCk +: Seq.fill(rounds)(roundCk)), s"threshold $threshold: $acts")
           if (threshold.contains(between)) {
-            // broadcast labels: at most two jobs of the bounded collect's
-            // take, the edge checkpoint's job, round 1's exchange and result
+            // broadcast labels: at most two jobs of the placement run, the
+            // edge checkpoint's job, round 1's exchange and result
             // jobs, then at most the label broadcast, the exchange and the
             // result job per later round (a lazy checkpoint plus count() ran
             // five or six)
@@ -472,9 +472,8 @@ class JoinOpsSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(qeListener)
     try {
-      // cap = edge rows − 1: the collect reads every row and still takes
-      // the rounds; cap = 0: it stops after one row and the rounds compute
-      // the partitions it left unread
+      // one edge row over the budget, and a budget of 0: the placement run
+      // computes every partition and the rounds read what it kept
       for (threshold <- Seq((es.size - 1) * 48L, 0L)) withThreshold(Some(threshold)) {
         org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
         evals.reset(); actions.clear()

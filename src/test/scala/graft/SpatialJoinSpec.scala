@@ -17,15 +17,11 @@ class SpatialJoinSpec extends AnyFunSuite {
   private def actions(f: => Any): (Seq[String], Int, Int) = SparkWork.of(spark)(f)._2.counts
 
   /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold` one byte below
-    * `side`'s optimized-plan size estimate, so an operator whose query side
-    * is `side` takes its distributed path (−1 for an empty side), and
-    * restores the previous setting after. */
-  private def distributedFor[T](side: DataFrame)(f: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, (side.queryExecution.optimizedPlan.stats.sizeInBytes - 1).toString)
-    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+    * the bytes of `side`, the rows an operator places (the kNN query
+    * columns, the intersects right side's wkb), so it takes its
+    * distributed path (−1 for an empty side). */
+  private def distributedFor[T](side: DataFrame)(f: => T): T =
+    Placement.withThreshold(spark, Some(Placement.bytes(side) - 1))(f)
 
   /** A result's schema (names, types, nullability, column order) and its
     * rows as sorted strings, binary values by content. */
@@ -805,7 +801,7 @@ class SpatialJoinSpec extends AnyFunSuite {
       def once() = SpatialJoin.filterIntersectsAtScale(df(leftWkt), df(right), level = 3)
         .as[(Long, Array[Byte])].collect()
         .map { case (id, wkb) => (id, g.toWkt(g.fromWkb(wkb))) }.sorted.toSeq
-      if (driver) once() else distributedFor(df(right))(once())
+      if (driver) once() else distributedFor(df(right).select("wkb"))(once())
     }
     def brute(right: Seq[(Long, String)]): Seq[(Long, String)] = leftWkt.filter { case (_, l) =>
       right.exists { case (_, r) => g.parseWkt(l).intersects(g.parseWkt(r)) }
@@ -852,7 +848,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     val expected = Seq(Seq(s"1|${g.toWkt(g.parseWkt("POINT (4 4)"))}|hit|1.5") ++
       Seq.fill(2)(s"4|${g.toWkt(g.parseWkt("LINESTRING (0 0, 9 6)"))}|dup|4.5"), Nil, Nil)
     for ((r, want) <- rights.zip(expected)) {
-      val Seq((onDriver, _), (byCells, _)) = bothPaths(r)(SpatialJoin.filterIntersectsAtScale(left, r))
+      val Seq((onDriver, _), (byCells, _)) = bothPaths(r.select("wkb"))(SpatialJoin.filterIntersectsAtScale(left, r))
       assert(onDriver == byCells, r.collect().toSeq)
       assert(onDriver._1.fieldNames.toSeq == Seq("id", "wkb", "tag", "w"))
       val rows = SpatialJoin.filterIntersectsAtScale(left, r).collect().toSeq.map(x =>
@@ -860,7 +856,7 @@ class SpatialJoinSpec extends AnyFunSuite {
       assert(rows.sorted == want, rows)
     }
     // the distributed path was the one the raised threshold took
-    val byCells = distributedFor(rights.head)(SpatialJoin.filterIntersectsAtScale(left, rights.head))
+    val byCells = distributedFor(rights.head.select("wkb"))(SpatialJoin.filterIntersectsAtScale(left, rights.head))
     assert(byCells.queryExecution.analyzed.toString.contains("LeftSemi"))
     assert(!SpatialJoin.filterIntersectsAtScale(left, rights.head).queryExecution.analyzed.toString
       .contains("Join"))
@@ -922,21 +918,22 @@ class SpatialJoinSpec extends AnyFunSuite {
       yield (q * 100 + j, x + (j % 4) * 0.02, y + (j / 4) * 0.02)).toDF("id", "lon", "lat")
     val qsG = centres.toDF("qid", "qlon", "qlat")
     val qsP = qsG.withColumnRenamed("qid", "query_id")
-    // radius pinned, so no density count job: one checkpoint, whose
-    // observe() metric is the emptiness probe (no isEmpty execution)
+    // radius pinned, so no density count job: the placement run (a local
+    // relation: no job), then one checkpoint, whose observe() metric is
+    // the emptiness probe (no isEmpty execution)
     val (geoActs, geoExecs, _) = distributedFor(qsG)(
       actions(SpatialJoin.knnGeodesic(pts, qsG, k = 4, initMeters = 100000.0)))
-    assert(geoActs == Seq("localCheckpoint") && geoExecs == 1, (geoActs, geoExecs))
+    assert(geoActs == Seq("collect", "localCheckpoint") && geoExecs == 1, (geoActs, geoExecs))
     val (plActs, plExecs, _) = distributedFor(qsP)(
       actions(SpatialJoin.knn(pts, qsP, k = 4, initDeg = 1.0)))
-    assert(plActs == Seq("localCheckpoint") && plExecs == 1, (plActs, plExecs))
+    assert(plActs == Seq("collect", "localCheckpoint") && plExecs == 1, (plActs, plExecs))
     // and the answers are the round-1 ones: each query's own cluster
     val got = distributedFor(qsG)(SpatialJoin.knnGeodesic(pts, qsG, k = 4, initMeters = 100000.0)
       .select("qid", "neighbor_id").as[(Long, Long)].collect())
     assert(got.length == 12 && got.forall { case (q, n) => n / 100 == q })
 
     // an empty query side gives a typed empty result on both metrics (an
-    // empty side estimates 0 bytes, so its threshold is −1)
+    // empty side has 0 bytes, so its threshold is −1)
     val noG = distributedFor(qsG.limit(0))(
       SpatialJoin.knnGeodesic(pts, qsG.limit(0), k = 4, initMeters = 100000.0))
     assert(noG.schema.map(f => f.name -> f.dataType.simpleString) ==
@@ -1046,7 +1043,7 @@ class SpatialJoinSpec extends AnyFunSuite {
       val dwithin = actions(SpatialJoin.dwithinJoin(pts, qs, 500000.0).collect())
       def intersectsCall() = actions(SpatialJoin.filterIntersectsAtScale(ptWkb, polys).select("id").collect())
       val intersects = intersectsCall()
-      val intersectsByCells = distributedFor(polys)(intersectsCall())
+      val intersectsByCells = distributedFor(polys.select("wkb"))(intersectsCall())
       SpatialJoin.knnGeodesic(pts, qs, 8) // warms the opening-radius memo
       def knnCall() = actions(SpatialJoin.knnGeodesic(pts, qs, 8).collect())
       val knn = knnCall()
@@ -1056,15 +1053,20 @@ class SpatialJoinSpec extends AnyFunSuite {
       assert(cold == ((Seq("collect", "collect"), 2, 4)), cold)
       assert(warm == ((Seq("collect"), 1, 2)), warm)
       assert(dwithin == ((Seq("collect"), 1, 2)), dwithin)
-      // driver path: the polygons' collect (a local relation: no job),
-      // then one filtering job over the cached points
+      // each call starts with its placement run: the polygons' or the
+      // queries' collect (a local relation: no job)
+      // intersects on the driver: then one filtering job over the cached
+      // points; distributed: one execution of six jobs (at a threshold
+      // one byte below the polygons' WKB bytes, AQE broadcasts the refine
+      // hits to the semi-join: a job more than the five of a shuffled one)
       assert(intersects == ((Seq("collect", "collect"), 1, 1)), intersects)
-      assert(intersectsByCells == ((Seq("collect"), 1, 5)), intersectsByCells)
-      // driver path: the queries' collect (no job), one aggregation for
-      // each of the two rounds these sparse points take, then the caller's
-      // collect of a local result (no job)
+      assert(intersectsByCells == ((Seq("collect", "collect"), 1, 6)), intersectsByCells)
+      // kNN on the driver: then one aggregation for each of the two rounds
+      // these sparse points take and the caller's collect of a local
+      // result (no job); distributed: one checkpoint per round and the
+      // caller's collect
       assert(knn == ((Seq("collect", "aggregate", "aggregate", "collect"), 2, 4)), knn)
-      assert(knnByRounds == ((Seq("localCheckpoint", "localCheckpoint", "collect"), 3, 9)), knnByRounds)
+      assert(knnByRounds == ((Seq("collect", "localCheckpoint", "localCheckpoint", "collect"), 3, 9)), knnByRounds)
     } finally {
       ptWkb.unpersist()
       pts.unpersist()
